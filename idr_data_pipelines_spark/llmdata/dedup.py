@@ -3,20 +3,24 @@ n-gram Jaccard.
 
 Design for 100 TB: every near-dup operator is *bucket-then-compare* —
 
-1. signature computation is a pure projection (array expressions over
-   the tokenized text, zero shuffle, whole-stage codegen; no Python);
+1. signature computation is a per-row projection (shingle hashes
+   JVM-side, the permutation minima in one numpy Arrow stage; zero
+   shuffle);
 2. candidate generation is an equi-join on a band/chunk hash (one
    shuffle, AQE-handled skew);
 3. exact verification runs only inside buckets.
 
-The full O(n²) comparison never materializes. All hashes are
+The full O(n²) comparison never materializes. Production hashes are
 ``xxhash64`` with explicit integer seeds → deterministic across runs,
-partitions and cluster sizes.
+partitions and cluster sizes; the ``*_md5_*`` variants swap in the
+engine-portable md5-32 hash so a SQL oracle can replay every value.
 """
 
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -216,13 +220,16 @@ _SIMPLE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _escaped_literals_on() -> bool:
-    """True when the active session parses string literals with
-    legacy backslash escaping (``spark.sql.parser.escapedStringLiterals``)
+    """True when the session parses string literals with legacy
+    backslash escaping (``spark.sql.parser.escapedStringLiterals``)
     — the one conf under which a parsed-SQL twin is NOT the same tree
-    as its Column builder. No active session → assume default (off)."""
+    as its Column builder. The active session is thread-local: a
+    thread that never set one (a worker thread building plans) sees
+    None, so fall back to the process's instantiated session. No
+    session at all → assume default (off)."""
     from pyspark.sql import SparkSession
 
-    sess = SparkSession.getActiveSession()
+    sess = SparkSession.getActiveSession() or SparkSession._instantiatedSession
     if sess is None:
         return False
     return (
@@ -341,6 +348,36 @@ def shingle_hashes(text_col: Column | str, k: int = 3) -> Column:
     return F.array_distinct(shingle_hashes_positional(text_col, k))
 
 
+def md5_hash32(s: Column) -> Column:
+    """First 32 bits of md5(s) as a non-negative long — the
+    ENGINE-PORTABLE string hash (md5 bytes are identical in every SQL
+    engine; a DuckDB oracle replays it as
+    ``('0x' || substr(md5(s),1,8))::BIGINT``). Production hashing
+    stays on ``xxhash64`` (~5× cheaper per string); this exists so
+    hash-seeded pipelines can carry a cross-engine value-hash oracle."""
+    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+
+
+def md5_shingle_hashes(col: Column | str, k: int = 3) -> Column:
+    """Distinct word-k-shingle md5-32 hashes as array<long> — the
+    portable-hash counterpart of ``shingle_hashes``. Unlike the
+    xxhash64 form it materializes shingle strings (that IS the
+    portable identity md5 consumes); acceptable for the verification
+    variants, not the production hot path."""
+    ref = _sql_ref(col)
+    if ref is not None:
+        if k < 1:  # match word_shingles' validation on the SQL path
+            raise ValueError("k must be >= 1")
+        return F.expr(
+            f"array_distinct(transform({_word_shingles_sql(ref, k)}, "
+            "__s -> CAST(conv(substring(md5(__s), 1, 8), 16, 10)"
+            " AS BIGINT)))"
+        )
+    return F.array_distinct(
+        F.transform(word_shingles(col, k), lambda s: md5_hash32(s))
+    )
+
+
 # Universal-hash permutation family for MinHash: perm_i(s) =
 # (a_i * (h(s) & mask32) + b_i) mod P, with P the smallest prime above
 # 2^32 (the datasketch choice) and fixed pseudo-random 31-bit
@@ -364,69 +401,73 @@ def _perm_coefficients(num_perm: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature_expr(text_col: Column | str, num_perm: int, shingle_k: int) -> Column:
-    """array<long>[num_perm] MinHash signature expression.
+@dataclass(frozen=True)
+class _HashFamily:
+    """The parts of the MinHash-LSH pipeline that differ between its
+    two hash families. Everything else — the signature kernel, the
+    band table, pair generation and the exact-Jaccard verify — is
+    written once and shared.
 
-    One xxhash64 per shingle, then one multiply-add-mod per
-    permutation over the 32-bit-masked shingle hash. Pure projection:
-    no explode, no shuffle, no Python. Coefficient vectors are array
-    literals indexed by the permutation's lambda variable, keeping the
-    expression tree O(num_perm) small.
-    """
-    coeffs = _perm_coefficients(num_perm)
-    a_arr = F.array(*[F.lit(a) for a, _ in coeffs])
-    b_arr = F.array(*[F.lit(b) for _, b in coeffs])
-    return _let(
-        shingle_hashes(text_col, shingle_k),
-        lambda hp: F.transform(
-            F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda i: F.array_min(
-                F.transform(
-                    hp,
-                    lambda h: (
-                        F.element_at(a_arr, (i + 1).cast("int"))
-                        * h.bitwiseAND(F.lit(_MASK32))
-                        + F.element_at(b_arr, (i + 1).cast("int"))
-                    )
-                    % F.lit(_MERSENNE_P),
-                )
-            ),
-        ),
-    )
+    - ``shingles(text_col, k)``: the distinct shingle hashes,
+      array<long>, that the signature kernel and the verify consume;
+    - ``band_key`` / ``band_slot``: SQL templates of one band's key —
+      ``band_slot`` wraps each of the band's ``r`` signature slots,
+      ``band_key`` wraps their comma-joined list;
+    - ``jaccard_col`` / ``jaccard_round``: the verify's output column
+      and its rounding (``None`` = the raw double). The threshold
+      filters the column as output, i.e. AFTER rounding."""
+
+    shingles: Callable[[Column | str, int], Column]
+    band_key: str
+    band_slot: str
+    jaccard_col: str
+    jaccard_round: int | None
 
 
-def minhash_signatures(
+# production: xxhash64 shingle and band hashes, raw Jaccard
+_XXHASH64 = _HashFamily(
+    shingles=shingle_hashes,
+    band_key="xxhash64({})",
+    band_slot="{}",
+    jaccard_col="jaccard",
+    jaccard_round=None,
+)
+# engine-portable: md5-32 shingle hashes (< 2^32, so the permutation
+# family is exact long arithmetic in any engine), the band's slots
+# joined with '_' as its key (no second hash), Jaccard rounded to 6
+# decimals (module convention for floats) — every value a DuckDB
+# oracle replays bit-for-bit
+_MD5 = _HashFamily(
+    shingles=md5_shingle_hashes,
+    band_key="concat_ws('_', {})",
+    band_slot="CAST({} AS STRING)",
+    jaccard_col="jaccard_r",
+    jaccard_round=6,
+)
+
+
+def _signatures(
+    fam: _HashFamily,
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 128,
-    shingle_k: int = 3,
-    impl: str = "arrow",
+    id_col: str,
+    text_col: str,
+    num_perm: int,
+    shingle_k: int,
 ) -> DataFrame:
-    """(id, signature array<long>[num_perm]).
+    """(id, signature array<long>[num_perm]) — the one MinHash kernel.
 
-    ``impl="arrow"`` (default) hashes shingles JVM-side then runs the
-    O(S×num_perm) permutation-min inner loop in numpy via
-    ``mapInPandas`` — identical hash family to the pure-expression
-    form (same coefficients, masking, modulus; int64 never overflows,
-    see _MERSENNE_P note) but ~50× faster, because Catalyst evaluates
-    higher-order array lambdas interpreted, outside whole-stage
-    codegen. mapInPandas (not a scalar Pandas UDF) so the computation
+    Shingles are hashed JVM-side (``fam.shingles``), then the
+    O(S×num_perm) permutation-min inner loop runs in numpy via
+    ``mapInPandas`` (int64 never overflows, see _MERSENNE_P note) —
+    Catalyst evaluates higher-order array lambdas interpreted, outside
+    whole-stage codegen, so a pure-expression fold measured ~50×
+    slower. mapInPandas (not a scalar Pandas UDF) so the computation
     is a dedicated plan node: scalar Python UDFs can be inlined by
     CollapseProject under Generate or left un-extracted on the rebuilt
     branch of a self-join, both of which fail at runtime.
 
-    ``impl="expr"`` stays pure-Catalyst — same results bit-for-bit.
-    """
-    if impl == "expr":
-        # null text → null signature (without the guard the outer
-        # transform over sequence() yields an array of nulls instead)
-        sig = F.when(
-            _tokens(text_col).isNotNull(),
-            minhash_signature_expr(text_col, num_perm, shingle_k),
-        )
-        return df.select(F.col(id_col).alias("id"), sig.alias("signature"))
-
+    One signature per input row; null text (null shingle array) yields
+    a null signature."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -443,9 +484,8 @@ def minhash_signatures(
         # intermediate at ~num_perm × CH × avg_shingles × 8 bytes.
         CH = 1024
         for pdf in batches:
-            # null text → null shingle array → null signature, matching
-            # the expression impl (which propagates null through the
-            # whole projection) instead of crashing on len(None)
+            # null text → null shingle array → null signature, instead
+            # of crashing on len(None)
             hs_list = [
                 h if h is not None and len(h) else None
                 for h in pdf["__sh"].tolist()
@@ -496,7 +536,7 @@ def minhash_signatures(
             base = df.repartition(target)
     shingled = base.select(
         F.col(id_col).alias("id"),
-        shingle_hashes(text_col, shingle_k).alias("__sh"),
+        fam.shingles(text_col, shingle_k).alias("__sh"),
     )
     out_schema = StructType(
         [
@@ -505,6 +545,20 @@ def minhash_signatures(
         ]
     )
     return shingled.mapInPandas(compute, out_schema)
+
+
+def minhash_signatures(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_perm: int = 128,
+    shingle_k: int = 3,
+) -> DataFrame:
+    """(id, signature array<long>[num_perm]) over xxhash64 shingle
+    hashes — the signature stage of ``minhash_lsh_pairs`` (see
+    ``_signatures`` for the numpy kernel, shared with the md5-32
+    family). Null text yields a null signature."""
+    return _signatures(_XXHASH64, df, id_col, text_col, num_perm, shingle_k)
 
 
 def _bucket_pairs(
@@ -568,32 +622,28 @@ def _scan_partitions_or_none(df: DataFrame) -> int | None:
     return scan_partitions_or_none(df)
 
 
-def _candidate_ids(pairs: DataFrame, id_col: str) -> DataFrame:
-    """Ids appearing on either side of a candidate-pair frame, as a
-    single ``id_col`` column. NOT deduplicated (r14): every consumer
-    feeds a LEFT-SEMI join, whose build side dedups for free — the
-    explicit ``.distinct()`` this used to carry was a whole extra
+def _candidate_ids(
+    pairs: DataFrame, id_col: str, cols: tuple[str, str] = ("id_a", "id_b")
+) -> DataFrame:
+    """Ids appearing on either pair column ``cols`` of a candidate-pair
+    frame, as a single ``id_col`` column. NOT deduplicated (r14): every
+    consumer feeds a LEFT-SEMI join, whose build side dedups for free —
+    the explicit ``.distinct()`` this used to carry was a whole extra
     exchange per operator for rows the join hashes away anyway
     (guide §2.4)."""
-    return pairs.select(F.col("id_a").alias(id_col)).union(
-        pairs.select(F.col("id_b").alias(id_col))
+    a, b = cols
+    return pairs.select(F.col(a).alias(id_col)).union(
+        pairs.select(F.col(b).alias(id_col))
     )
 
-
-def _candidate_docs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    ids: DataFrame | None = None,
-) -> DataFrame:
-    """Rows of ``df`` whose id appears in a candidate pair — the only
-    docs the exact-Jaccard verify needs shingles for. Candidates are
+def _candidate_docs(df: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:
+    """Rows of ``df`` whose id is in ``ids`` (one ``id_col`` column of
+    candidate-pair ids, e.g. ``_candidate_ids``) — the only docs the
+    exact-Jaccard verify needs shingles for. Candidates are
     near-dup-sparse relative to the corpus, so the semi-join (AQE
     broadcasts the small id set) is far cheaper than tokenizing and
     hashing shingles for EVERY corpus row, which is what verifying
-    against an unrestricted shingle table does. Pass ``ids`` when the
-    caller already holds the candidate-id frame (so the union-distinct
-    is planned once).
+    against an unrestricted shingle table does.
 
     The rebalance decision never touches ``.rdd`` of a frame with
     exchanges: under AQE that finalizes the adaptive plan and
@@ -603,11 +653,7 @@ def _candidate_docs(
     project) can be under-partitioned in the first place — anything
     downstream of a shuffle arrives shuffle.partitions-wide — so the
     probe runs exactly when it is plan-only."""
-    cand = df.join(
-        ids if ids is not None else _candidate_ids(pairs, id_col),
-        id_col,
-        "semi",
-    )
+    cand = df.join(ids, id_col, "semi")
     # the caller computes expensive per-doc arrays on this frame; a
     # single-file input would leave that on ONE task (broadcast semi
     # joins preserve input partitioning) — rebalance as the signature
@@ -621,81 +667,199 @@ def _candidate_docs(
     return cand
 
 
-def _band_hash_structs(sig: Column, bands: int, r: int) -> Column:
-    """array<struct<band_idx,band_hash>> — xxhash64 of each band's
-    ``r`` signature slots. Column-API form; the hot path renders the
-    identical tree via ``_band_hash_structs_sql`` (one parse instead
-    of ~100 py4j round-trips at bands=16). Both pinned bitwise by
-    ``test_band_struct_sql_paths_match_column_paths``."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(
-                    *[F.element_at(sig, b * r + j + 1) for j in range(r)]
-                ).alias("band_hash"),
+def _rows_per_band(num_perm: int, bands: int) -> int:
+    if num_perm % bands:
+        raise ValueError("num_perm must be divisible by bands")
+    return num_perm // bands
+
+
+def _band_structs_sql(fam: _HashFamily, sig_ref: str, bands: int, r: int) -> str:
+    """SQL text of one signature's array<struct<band_idx, band_key>>:
+    band b's key is ``fam``'s band-key expression over slots
+    b·r+1 … b·r+r (1-based ``element_at``). Rendered as ONE parsed
+    string (r15): building the same tree through the Column API cost
+    ~0.5 s of py4j round-trips per call at bands=16, measured with
+    cProfile; the parse costs ~3 ms."""
+
+    def key(b: int) -> str:
+        return fam.band_key.format(
+            ", ".join(
+                fam.band_slot.format(f"element_at({sig_ref}, {b * r + j + 1})")
+                for j in range(r)
             )
-            for b in range(bands)
-        ]
-    )
-
-
-def _band_hash_structs_sql(sig_ref: str, bands: int, r: int) -> str:
-    """SQL text of ``_band_hash_structs`` — the identical expression
-    tree (integer literals, element_at, default-seed xxhash64)."""
-    structs = ", ".join(
-        "named_struct('band_idx', {b}, 'band_hash', xxhash64({args}))".format(
-            b=b,
-            args=", ".join(
-                f"element_at({sig_ref}, {b * r + j + 1})" for j in range(r)
-            ),
         )
+
+    structs = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_key', {key(b)})"
         for b in range(bands)
     )
     return f"array({structs})"
 
 
-def _md5_band_key_structs(sig: Column, bands: int, r: int) -> Column:
-    """array<struct<band_idx,band_key>> — the portable concat_ws('_')
-    band key per band. Column-API form of
-    ``_md5_band_key_structs_let_sql``'s lambda body (twin-pinned)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.element_at(sig, b * r + j + 1).cast("string")
-                        for j in range(r)
-                    ],
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
-def _md5_band_key_structs_let_sql(sig_ref: str, bands: int, r: int) -> str:
-    """SQL text of ``_let(sig, _md5_band_key_structs)`` — the band-key
-    struct array with the signature bound ONCE as a lambda variable
-    (``sig_ref`` is an alias of the array(__m0…) construction in the
-    md5 signature frame; without the let-binding CollapseProject would
-    inline that construction into every element_at reference)."""
-    structs = ", ".join(
-        "named_struct('band_idx', {b}, 'band_key', concat_ws('_', {args}))".format(
-            b=b,
-            args=", ".join(
-                f"CAST(element_at(__s, {b * r + j + 1}) AS STRING)"
-                for j in range(r)
-            ),
-        )
-        for b in range(bands)
-    )
+def _bands(
+    fam: _HashFamily, sigs: DataFrame, num_perm: int, bands: int
+) -> DataFrame:
+    """(id, band_idx, band_key) LSH band table of a signature frame —
+    ``bands`` rows per doc; the signature itself stays columnar. The
+    signature is a plain column (the kernel's output), so the band
+    keys reference it by name. Null signatures (null text) are
+    dropped first: such docs cannot be near-dups, and would otherwise
+    all collide on degenerate keys."""
+    r = _rows_per_band(num_perm, bands)
     return (
-        f"element_at(transform(array({sig_ref}), __s -> "
-        f"array({structs})), 1)"
+        sigs.filter(F.col("signature").isNotNull())
+        .select(
+            "id",
+            F.explode(
+                F.expr(_band_structs_sql(fam, "`signature`", bands, r))
+            ).alias("band"),
+        )
+        .select("id", "band.band_idx", "band.band_key")
     )
+
+
+def _band_join(b_band: DataFrame, c_band: DataFrame) -> DataFrame:
+    """Distinct (id_new, id_old) candidates of a batch band table
+    against a corpus band table — one equi-join on (band_idx,
+    band_key). In production the corpus side is the write-once band
+    index, stored bucketed by ``band_key`` (``sink_table_bucketed``)
+    so each probe shuffles only the batch's bands."""
+    return (
+        b_band.alias("b")
+        .join(
+            c_band.alias("c"),
+            (F.col("b.band_idx") == F.col("c.band_idx"))
+            & (F.col("b.band_key") == F.col("c.band_key")),
+        )
+        .select(F.col("b.id").alias("id_new"), F.col("c.id").alias("id_old"))
+        .distinct()
+    )
+
+
+def _jaccard(a: Column | str, b: Column | str) -> Column:
+    """Exact Jaccard similarity of two distinct-element arrays."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
+        F.array_union(a, b)
+    ).cast("double")
+
+
+def _shingle_table(
+    fam: _HashFamily,
+    docs: DataFrame,
+    ids: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int,
+) -> DataFrame:
+    """(id, sh) shingle-hash sets of the ``docs`` rows whose id is in
+    ``ids`` — filtered BEFORE the projection (``_candidate_docs``): a
+    semi-join on the projected frame is not pushed below it, which
+    left a full-corpus shingle pass (measured 3.5 s serial at sf0.1
+    for rows the verify never reads)."""
+    return _candidate_docs(docs, ids, id_col).select(
+        F.col(id_col).alias("id"),
+        fam.shingles(text_col, shingle_k).alias("sh"),
+    )
+
+
+def _verify(
+    fam: _HashFamily,
+    pairs: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int,
+    threshold: float,
+    cols: tuple[str, str] = ("id_a", "id_b"),
+    docs_b: DataFrame | None = None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Exact-Jaccard verify of candidate ``pairs`` over the distinct
+    shingle-hash sets (64-bit or 32-bit hashes: collisions are
+    negligible, and long-array set ops are far cheaper than string
+    ones), computed for candidate docs only. Returns ``(result,
+    held)``: result = (a, b, ``fam.jaccard_col``) rows at or above
+    ``threshold``; held = the persisted frames the caller releases.
+
+    ``docs`` holds both pair sides unless ``docs_b`` (the ``b`` side)
+    is given. One doc frame → ONE candidate shingle table, persisted
+    because it is joined twice. Two frames → each side scoped to its
+    own pair column, nothing persisted — on the corpus side
+    especially, the index is huge and collisions are batch-bounded."""
+    a, b = cols
+    if docs_b is None:
+        sh_a = sh_b = _shingle_table(
+            fam, docs, _candidate_ids(pairs, id_col, cols),
+            id_col, text_col, shingle_k,
+        ).persist()
+        held = [sh_a]
+    else:
+        sh_a, sh_b = (
+            _shingle_table(
+                fam, side, pairs.select(F.col(key).alias(id_col)),
+                id_col, text_col, shingle_k,
+            )
+            for side, key in ((docs, a), (docs_b, b))
+        )
+        held = []
+    jaccard = _jaccard("sh_a", "sh_b")
+    if fam.jaccard_round is not None:
+        jaccard = F.round(jaccard, fam.jaccard_round)
+    result = (
+        pairs.join(sh_a.withColumnsRenamed({"id": a, "sh": "sh_a"}), a)
+        .join(sh_b.withColumnsRenamed({"id": b, "sh": "sh_b"}), b)
+        .withColumn(fam.jaccard_col, jaccard)
+        .filter(F.col(fam.jaccard_col) >= threshold)
+        .select(a, b, fam.jaccard_col)
+    )
+    return result, held
+
+
+def _finish(
+    result: DataFrame, held: list[DataFrame], materialize: bool
+) -> DataFrame:
+    """``materialize=True``: compute ``result`` once via
+    ``localCheckpoint(eager=True)`` and release the ``held`` persist
+    marks. ``materialize=False``: the lazy plan, with the marks riding
+    on it — release them after the consuming action with
+    ``unpersist_materialized(result)``."""
+    if not materialize:
+        return _attach_materialized(result, *held)
+    try:
+        return result.localCheckpoint(eager=True)
+    finally:
+        for f in held:
+            f.unpersist()
+
+
+def _lsh_pairs(
+    fam: _HashFamily,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int,
+    bands: int,
+    shingle_k: int,
+    jaccard_threshold: float | None,
+    materialize: bool,
+) -> DataFrame:
+    """(id_a, id_b, ``fam.jaccard_col``) near-dup pairs of one frame:
+    signatures → band table → per-bucket pair expansion → verify."""
+    sigs = _signatures(fam, df, id_col, text_col, num_perm, shingle_k)
+    pairs = _bucket_pairs(
+        _bands(fam, sigs, num_perm, bands), ["band_idx", "band_key"]
+    )
+    if jaccard_threshold is None:
+        result = pairs.withColumn(fam.jaccard_col, F.lit(None).cast("double"))
+        return _finish(result, [], materialize)
+    # pairs feeds both the candidate-id semi-join and the verify join:
+    # persist (lazy — computed once inside the final materializing job,
+    # no extra blocking job; an eager checkpoint here measured +0.4 s
+    # of fixed latency at sf0.1) so the signature pipeline runs once.
+    pairs = pairs.persist()
+    result, held = _verify(
+        fam, pairs, df, id_col, text_col, shingle_k, jaccard_threshold
+    )
+    return _finish(result, [pairs, *held], materialize)
 
 
 def minhash_lsh_pairs(
@@ -706,21 +870,23 @@ def minhash_lsh_pairs(
     bands: int = 32,
     shingle_k: int = 3,
     jaccard_threshold: float | None = 0.8,
-    impl: str = "arrow",
     materialize: bool = True,
 ) -> DataFrame:
-    """Near-duplicate candidate pairs via banded MinHash-LSH, optionally
-    verified with exact shingle-set Jaccard.
+    """Near-duplicate candidate pairs via banded MinHash-LSH over
+    xxhash64 shingle hashes, optionally verified with exact
+    shingle-set Jaccard.
 
     rows_per_band = num_perm / bands; two docs collide if any band of
-    their signatures matches. Plan: signatures (projection; Arrow UDF
-    or pure-expression hot loop, see minhash_signatures) → explode
-    bands (num_perm stays columnar; only ``bands`` rows per doc) →
-    per-bucket pair expansion (``_bucket_pairs``: one groupBy shuffle,
-    no band self-join, no band-table persist) → distinct pairs →
-    exact-Jaccard verify over the CANDIDATE docs only
-    (``_candidate_docs``: the corpus-wide shingle pass the old plan
-    paid at verify time is pruned to the near-dup-sparse id set).
+    their signatures matches. One pipeline, shared with the md5-32
+    ``minhash_md5_*`` family (only the shingle hash, the band key and
+    the verify's rounding differ): signatures (the numpy Arrow kernel,
+    see ``_signatures``) → explode bands (num_perm stays columnar;
+    only ``bands`` rows per doc, band key = xxhash64 of the band's
+    slots) → per-bucket pair expansion (``_bucket_pairs``: one groupBy
+    shuffle, no band self-join, no band-table persist) → distinct
+    pairs → exact-Jaccard verify over the CANDIDATE docs only
+    (``_verify``: the corpus-wide shingle pass is pruned to the
+    near-dup-sparse id set).
 
     Measured trade (sf0.1, local[32], interleaved medians): the old
     corpus-wide verify was ~0.2–0.4 s FASTER wall-clock here, because
@@ -736,219 +902,18 @@ def minhash_lsh_pairs(
     ``jaccard_threshold`` is None, candidates are returned unverified
     with jaccard = null.
 
-    With ``materialize=True`` (default) the pair set — tiny relative
-    to the corpus — is computed once via ``localCheckpoint(eager=True)``
-    so the verify side reuses it without re-running the signature
-    pipeline, and the shingle cache is freed before returning.
-    ``materialize=False`` keeps a lazy plan with ``persist()`` marks;
-    the persisted handles ride on the returned frame — release them
-    after the consuming action with ``unpersist_materialized(result)``
-    (plain ``result.unpersist()`` would not free the internal
-    blocks).
+    With ``materialize=True`` (default) the result is computed once
+    via ``localCheckpoint(eager=True)`` and the internal caches are
+    freed before returning. ``materialize=False`` keeps a lazy plan
+    with ``persist()`` marks; the persisted handles ride on the
+    returned frame — release them after the consuming action with
+    ``unpersist_materialized(result)`` (plain ``result.unpersist()``
+    would not free the internal blocks).
     """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
-    r = num_perm // bands
-    # null-text docs have no signature and can't be near-dups — filter
-    # before banding so they don't all collide on degenerate hashes
-    sigs = minhash_signatures(
-        df, id_col, text_col, num_perm, shingle_k, impl
-    ).filter(F.col("signature").isNotNull())
-
-    if impl == "expr":
-        # CollapseProject would inline the signature expression into
-        # every band-hash reference — re-bind with _let: one eval.
-        band_structs = _let(
-            F.col("signature"), lambda s: _band_hash_structs(s, bands, r)
-        )
-    else:
-        # Python UDF output: a plain materialized column, referenced
-        # by name — render the whole band-struct array as ONE parsed
-        # SQL string (r15, the r14 twin pattern: the Column build cost
-        # ~0.5 s of py4j round-trips per call at bands=16, measured
-        # with cProfile; the parse costs ~3 ms). Identical expression
-        # tree — pinned by test_band_struct_sql_paths_match_column_paths.
-        band_structs = F.expr(
-            _band_hash_structs_sql("`signature`", bands, r)
-        )
-    banded = sigs.select(
-        "id", F.explode(band_structs).alias("band")
-    ).select("id", "band.band_idx", "band.band_hash")
-
-    pairs = _bucket_pairs(banded, ["band_idx", "band_hash"])
-    if jaccard_threshold is None:
-        result = pairs.withColumn("jaccard", F.lit(None).cast("double"))
-        return result.localCheckpoint(eager=True) if materialize else result
-
-    # pairs feeds both the candidate-id semi-join and the verify join:
-    # persist (lazy — computed once inside the final materializing job,
-    # no extra blocking job; an eager checkpoint here measured +0.4 s
-    # of fixed latency at sf0.1) so the signature pipeline runs once.
-    # In lazy mode the handle rides on the result (unpersist_materialized).
-    pairs = pairs.persist()
-    # Verify with exact Jaccard over the hashed shingle sets (64-bit
-    # hashes: collision probability is negligible, and long-array set
-    # ops are far cheaper than string-array ones at scale), computed
-    # for candidate docs only. persisted: joined twice (id_a, id_b).
-    sh = (
-        _candidate_docs(df, pairs, id_col)
-        .select(
-            F.col(id_col).alias("id"),
-            shingle_hashes(text_col, shingle_k).alias("sh"),
-        )
-        .persist()
+    return _lsh_pairs(
+        _XXHASH64, df, id_col, text_col, num_perm, bands, shingle_k,
+        jaccard_threshold, materialize,
     )
-    try:
-        result = (
-            pairs.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-            .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-            )
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-        if not materialize:
-            return _attach_materialized(result, pairs, sh)
-        return result.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            pairs.unpersist()
-            sh.unpersist()
-
-
-def md5_hash32(s: Column) -> Column:
-    """First 32 bits of md5(s) as a non-negative long — the
-    ENGINE-PORTABLE string hash (md5 bytes are identical in every SQL
-    engine; a DuckDB oracle replays it as
-    ``('0x' || substr(md5(s),1,8))::BIGINT``). Production hashing
-    stays on ``xxhash64`` (~5× cheaper per string); this exists so
-    hash-seeded pipelines can carry a cross-engine value-hash oracle."""
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-
-
-def md5_shingle_hashes(col: Column | str, k: int = 3) -> Column:
-    """Distinct word-k-shingle md5-32 hashes as array<long> — the
-    portable-hash counterpart of ``shingle_hashes``. Unlike the
-    xxhash64 form it materializes shingle strings (that IS the
-    portable identity md5 consumes); acceptable for the verification
-    variants, not the production hot path."""
-    ref = _sql_ref(col)
-    if ref is not None:
-        if k < 1:  # match word_shingles' validation on the SQL path
-            raise ValueError("k must be >= 1")
-        return F.expr(
-            f"array_distinct(transform({_word_shingles_sql(ref, k)}, "
-            "__s -> CAST(conv(substring(md5(__s), 1, 8), 16, 10)"
-            " AS BIGINT)))"
-        )
-    return F.array_distinct(
-        F.transform(word_shingles(col, k), lambda s: md5_hash32(s))
-    )
-
-
-def _md5_signature_frame(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int,
-    shingle_k: int,
-) -> DataFrame:
-    """(id, signature array<long>) — the md5-32 MinHash signature.
-
-    Computed via explode → ``num_perm`` codegen'd MIN aggregates, NOT
-    a nested transform/array_min higher-order fold: Catalyst runs HOF
-    lambdas INTERPRETED (no whole-stage codegen), and the fold form
-    measured 6× slower per core at sf0.1 (46 s vs 7 s single-core for
-    the identical values — r07 session 6). The (id → min×num_perm)
-    aggregate is map-side combined, so the added exchange carries
-    num_perm longs per doc, never the shingle set. Values are pinned
-    identical to the fold form: same (a·h+b) mod P long arithmetic,
-    and MIN over exploded rows ≡ array_min over the array.
-
-    Null text → no shingle rows after explode → doc absent (matches
-    minhash_lsh_pairs: null-text docs cannot be near-dups). A doc
-    whose shingle array were EMPTY would likewise vanish here; the
-    old fold form kept it with an all-null signature that could never
-    survive the exact-Jaccard verify, so pair OUTPUTS are unchanged
-    (md5_shingle_hashes emits ≥1 shingle for any non-null tokenized
-    text, so the case is theoretical).
-
-    A tiny/compacted input (one parquet file) would run the expensive
-    map side — shingle strings, md5, explode, num_perm partial MINs —
-    on ONE task; rebalance first when input parallelism is far below
-    the cluster's, exactly as ``minhash_signatures``' arrow path does.
-    No-op at real scale (inputs already have many partitions), and
-    value-neutral (MIN is order-insensitive exact long arithmetic).
-    The probe is exchange-free-only (``_scan_partitions_or_none``) so
-    plan construction never executes upstream stages under AQE."""
-    n_scan = _scan_partitions_or_none(df)
-    if n_scan is not None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if n_scan < max(2, target // 2):
-            df = df.repartition(target)
-    coeffs = _perm_coefficients(num_perm)
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(md5_shingle_hashes(text_col, shingle_k)).alias("h"),
-    )
-    mins = exploded.groupBy("id").agg(
-        *[
-            F.min(
-                (F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MERSENNE_P)
-            ).alias(f"__m{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-    )
-    return mins.select(
-        "id",
-        F.array(*[F.col(f"__m{i}") for i in range(num_perm)]).alias(
-            "signature"
-        ),
-    )
-
-
-def _md5_bands_for(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int,
-    bands: int,
-    shingle_k: int,
-) -> DataFrame:
-    """(id, band_idx, band_key) LSH band table of the portable MinHash
-    family for one input frame — signatures then banding. Both the
-    batch-vs-itself (``minhash_md5_lsh_pairs``) and the batch-vs-index
-    (``minhash_md5_incremental_pairs``) shapes build their sides here,
-    so hash-family fixes land in one place. (The shingle table this
-    helper used to return alongside is gone: every verify now shingles
-    CANDIDATE docs only, via ``_candidate_docs``.)"""
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
-    sigs = _md5_signature_frame(df, id_col, text_col, num_perm, shingle_k)
-    return _md5_band_frame(sigs, num_perm, bands)
-
-
-def _md5_band_frame(
-    sigs: DataFrame, num_perm: int, bands: int
-) -> DataFrame:
-    """(id, band_idx, band_key) LSH band table from a signature frame
-    — factored out so callers that already hold (or persist) the
-    signature frame can band it without recomputing signatures."""
-    r = num_perm // bands
-    # the signature column is itself an alias of the array(__m0…)
-    # construction, so the _let binding (one eval, many element_at
-    # references) must survive in the SQL rendering too — the twin
-    # wraps the identical transform(array(sig), …) tree (r15; pinned
-    # by test_band_struct_sql_paths_match_column_paths)
-    return sigs.select(
-        "id",
-        F.explode(
-            F.expr(_md5_band_key_structs_let_sql("`signature`", bands, r))
-        ).alias("band"),
-    ).select("id", "band.band_idx", "band.band_key")
 
 
 def minhash_md5_incremental_pairs(
@@ -971,14 +936,11 @@ def minhash_md5_incremental_pairs(
     unmatched batch doc is novel (append it and its bands to the
     index), a matched one is a near-dup of existing data.
 
-    Scale shape: the batch side is batch-sized everywhere; in
-    production the corpus band table is WRITE-ONCE — persisted
-    bucketed by ``band_key`` (``sink_table_bucketed``) so each probe
-    shuffles only the batch's bands, never the index. Here both sides
-    derive from the same portable md5-32 machinery
-    (``_md5_bands_for``), which is what makes the whole
-    probe replayable by a SQL oracle. Callers must pass disjoint id
-    sets (a shared id would pair with itself on every band).
+    The ``minhash_md5_lsh_pairs`` pipeline with the self-pair
+    expansion swapped for one batch ⋈ corpus band equi-join
+    (``_band_join``); each verify side shingles only its own
+    colliding docs. Callers must pass disjoint id sets (a shared id
+    would pair with itself on every band).
 
     ``materialize`` mirrors ``minhash_lsh_pairs``: True (default)
     eagerly computes the probe once via ``localCheckpoint`` and frees
@@ -989,72 +951,21 @@ def minhash_md5_incremental_pairs(
     Lazy callers release the riding handles with
     ``unpersist_materialized(result)`` after the consuming action.
     """
-    b_band = _md5_bands_for(
-        batch, id_col, text_col, num_perm, bands, shingle_k
-    )
-    c_band = _md5_bands_for(
-        corpus, id_col, text_col, num_perm, bands, shingle_k
-    )
-    pairs = (
-        b_band.alias("b")
-        .join(
-            c_band.alias("c"),
-            (F.col("b.band_idx") == F.col("c.band_idx"))
-            & (F.col("b.band_key") == F.col("c.band_key")),
+    b_band, c_band = (
+        _bands(
+            _MD5,
+            _signatures(_MD5, side, id_col, text_col, num_perm, shingle_k),
+            num_perm,
+            bands,
         )
-        .select(F.col("b.id").alias("id_new"), F.col("c.id").alias("id_old"))
-        .distinct()
-        .persist()
+        for side in (batch, corpus)
     )
-
-    # verify shingles for COLLIDING docs only, filtering each side
-    # before the projection (see minhash_md5_lsh_pairs: a semi-join on
-    # the projected frame is not pushed below the projection, leaving
-    # a full-side shingle pass) — on the corpus side especially, the
-    # index is huge and collisions are batch-bounded
-    def _sh_for(side: DataFrame, key: str) -> DataFrame:
-        # per-side candidate scoping through the ONE centralized
-        # helper (r10 review: a hand-rolled semi-join here silently
-        # dropped _candidate_docs' under-partitioned-input rebalance,
-        # leaving a single-file corpus side's shingle projection on
-        # one task). No .distinct(): the semi join dedups (r14).
-        ids = pairs.select(F.col(key).alias(id_col))
-        return _candidate_docs(side, pairs, id_col, ids=ids).select(
-            F.col(id_col).alias("id"),
-            md5_shingle_hashes(text_col, shingle_k).alias("sh"),
-        )
-
-    try:
-        result = (
-            pairs.join(
-                _sh_for(batch, "id_new").withColumnsRenamed(
-                    {"id": "id_new", "sh": "sh_n"}
-                ),
-                "id_new",
-            )
-            .join(
-                _sh_for(corpus, "id_old").withColumnsRenamed(
-                    {"id": "id_old", "sh": "sh_o"}
-                ),
-                "id_old",
-            )
-            .withColumn(
-                "jaccard_r",
-                F.round(
-                    F.size(F.array_intersect("sh_n", "sh_o")).cast("double")
-                    / F.size(F.array_union("sh_n", "sh_o")).cast("double"),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard_r") >= jaccard_threshold)
-            .select("id_new", "id_old", "jaccard_r")
-        )
-        if not materialize:
-            return _attach_materialized(result, pairs)
-        return result.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            pairs.unpersist()
+    pairs = _band_join(b_band, c_band).persist()
+    result, held = _verify(
+        _MD5, pairs, batch, id_col, text_col, shingle_k, jaccard_threshold,
+        cols=("id_new", "id_old"), docs_b=corpus,
+    )
+    return _finish(result, [pairs, *held], materialize)
 
 
 def minhash_md5_lsh_pairs(
@@ -1067,11 +978,11 @@ def minhash_md5_lsh_pairs(
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH with the ENGINE-PORTABLE
-    md5-32 shingle hash — every stage of the pipeline (shingle →
-    hash → universal-hash permutation minima → band keys → candidate
-    join → exact-Jaccard verify) is replayable bit-for-bit by an
-    ANSI/DuckDB oracle, unlike ``minhash_lsh_pairs`` whose xxhash64
-    shingle/band hashes have no portable SQL form:
+    md5-32 shingle hash — the ``minhash_lsh_pairs`` pipeline (same
+    numpy signature kernel, band table, ``_bucket_pairs`` expansion
+    and candidate-docs verify) with every value replayable
+    bit-for-bit by an ANSI/DuckDB oracle, which xxhash64 over strings
+    is not:
 
     - shingle hash: first 32 bits of md5(shingle) (``md5_hash32``);
       < 2^32, so the ``(a*h + b) % P`` permutation family (same
@@ -1082,53 +993,18 @@ def minhash_md5_lsh_pairs(
       string — trivially portable, and exactly as collision-free as
       the values themselves (no second hash involved).
     - verify: exact Jaccard over the distinct md5-32 shingle-hash
-      sets, rounded to 6 decimals (module convention for floats).
+      sets, rounded to 6 decimals (module convention for floats) and
+      filtered after rounding.
 
-    Same plan shape as the production operator: signature projection
-    (no shuffle) → explode bands → per-bucket pair expansion
-    (``_bucket_pairs``) → distinct pairs → verify join over candidate
-    docs only (``_candidate_docs``). Pure column expressions
-    throughout — no Python stage — because the portable variant runs
-    small verification corpora; production dedup keeps
-    ``minhash_lsh_pairs`` (numpy Arrow path, 128 perms).
+    The oracle thus verifies the production signature kernel; only
+    the hash family differs from ``minhash_lsh_pairs``.
 
     Returns (id_a, id_b, jaccard_r) with id_a < id_b.
     """
-    banded = _md5_bands_for(
-        df, id_col, text_col, num_perm, bands, shingle_k
+    return _lsh_pairs(
+        _MD5, df, id_col, text_col, num_perm, bands, shingle_k,
+        jaccard_threshold, True,
     )
-    pairs = _bucket_pairs(banded, ["band_idx", "band_key"]).persist()
-    # filter docs BEFORE projecting shingles (not a semi-join on the
-    # projected frame: Catalyst did not push that join below the
-    # projection, leaving a full-corpus shingle pass — measured 3.5 s
-    # serial at sf0.1 for rows the verify never reads)
-    sh = (
-        _candidate_docs(df, pairs, id_col)
-        .select(
-            F.col(id_col).alias("id"),
-            md5_shingle_hashes(text_col, shingle_k).alias("sh"),
-        )
-        .persist()
-    )
-    try:
-        return (
-            pairs.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-            .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-            .withColumn(
-                "jaccard_r",
-                F.round(
-                    F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                    / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard_r") >= jaccard_threshold)
-            .select("id_a", "id_b", "jaccard_r")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        pairs.unpersist()
-        sh.unpersist()
 
 
 def minhash_md5_split_probe(
@@ -1152,78 +1028,30 @@ def minhash_md5_split_probe(
     (per-doc projections), identical band join, identical verify —
     but HALF the corpus passes (r14, guide §2.3/§2.4):
 
-    - the two-frame form signed each side separately: two full
-      shingle→md5→explode→num_perm-min aggregation chains over what
-      is one underlying corpus. Here the band table is built ONCE and
-      sliced by the predicate. The slice filters sit above the
-      signature aggregation, and Catalyst would happily push them
-      down to the scan — recreating the two-pass shape — so the band
-      table rides a lazy ``persist`` mark (at cluster scale this is
-      exactly the write-once band INDEX the incremental docstring
-      prescribes; bands are metadata — id + band key — never text).
-    - the verify used to build one candidate shingle table per side
-      (two semi-joins, two shingle projections). Batch and corpus ids
-      are disjoint by construction here, so ONE candidate table
-      serves both join probes.
+    - the band table is built ONCE and sliced by the predicate. The
+      two slices are different filters over it, so without the lazy
+      ``persist`` mark each join side would re-run the signature
+      kernel (at cluster scale this is exactly the write-once band
+      INDEX the incremental docstring prescribes; bands are metadata
+      — id + band key — never text).
+    - batch and corpus ids are disjoint by construction here, so ONE
+      candidate shingle table serves both verify join probes.
     """
-    all_bands = _md5_bands_for(
-        df, id_col, text_col, num_perm, bands, shingle_k
+    all_bands = _bands(
+        _MD5,
+        _signatures(_MD5, df, id_col, text_col, num_perm, shingle_k),
+        num_perm,
+        bands,
     ).persist()
     is_batch = batch_pred(F.col("id"))
-    b_band = all_bands.filter(is_batch)
-    c_band = all_bands.filter(~is_batch)
-    pairs = (
-        b_band.alias("b")
-        .join(
-            c_band.alias("c"),
-            (F.col("b.band_idx") == F.col("c.band_idx"))
-            & (F.col("b.band_key") == F.col("c.band_key")),
-        )
-        .select(F.col("b.id").alias("id_new"), F.col("c.id").alias("id_old"))
-        .distinct()
-        .persist()
+    pairs = _band_join(
+        all_bands.filter(is_batch), all_bands.filter(~is_batch)
+    ).persist()
+    result, held = _verify(
+        _MD5, pairs, df, id_col, text_col, shingle_k, jaccard_threshold,
+        cols=("id_new", "id_old"),
     )
-    # no .distinct(): the candidate scoping is a semi join (dedups)
-    ids = pairs.select(F.col("id_new").alias(id_col)).union(
-        pairs.select(F.col("id_old").alias(id_col))
-    )
-    sh = (
-        _candidate_docs(df, pairs, id_col, ids=ids)
-        .select(
-            F.col(id_col).alias("id"),
-            md5_shingle_hashes(text_col, shingle_k).alias("sh"),
-        )
-        .persist()
-    )
-    try:
-        result = (
-            pairs.join(
-                sh.withColumnsRenamed({"id": "id_new", "sh": "sh_n"}),
-                "id_new",
-            )
-            .join(
-                sh.withColumnsRenamed({"id": "id_old", "sh": "sh_o"}),
-                "id_old",
-            )
-            .withColumn(
-                "jaccard_r",
-                F.round(
-                    F.size(F.array_intersect("sh_n", "sh_o")).cast("double")
-                    / F.size(F.array_union("sh_n", "sh_o")).cast("double"),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard_r") >= jaccard_threshold)
-            .select("id_new", "id_old", "jaccard_r")
-        )
-        if not materialize:
-            return _attach_materialized(result, all_bands, pairs, sh)
-        return result.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            all_bands.unpersist()
-            pairs.unpersist()
-            sh.unpersist()
+    return _finish(result, [all_bands, pairs, *held], materialize)
 
 
 def minhash_md5_estimate_pairs(
@@ -1244,148 +1072,81 @@ def minhash_md5_estimate_pairs(
     a threshold-only pipeline would wrongly collapse.
 
     Returns (id_a, id_b, est_r, exact_r, abs_err_r), id_a < id_b.
-    Candidates come from the SAME band-bucket expansion as the dedup
-    path, so the eval measures the estimator on the pairs the pipeline
-    actually sees. Fully engine-portable (md5-32 family).
+    Candidates come from the SAME signature kernel and band-bucket
+    expansion as ``minhash_md5_lsh_pairs``, so the eval measures the
+    estimator on the pairs the pipeline actually sees. Fully
+    engine-portable (md5-32 family).
 
     One signature pass: the sigs frame is persisted and feeds both
-    the banding and the two est-side joins (previously the expensive
-    signature aggregation was re-planned four times — r07 ADVICE);
-    shingle sets are computed for candidate docs only."""
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
-    sigs = _md5_signature_frame(
-        df, id_col, text_col, num_perm, shingle_k
+    the banding and the two est-side joins (r07 ADVICE); shingle sets
+    are computed for candidate docs only."""
+    _rows_per_band(num_perm, bands)  # validate before persisting
+    sigs = _signatures(
+        _MD5, df, id_col, text_col, num_perm, shingle_k
     ).persist()
     pairs = _bucket_pairs(
-        _md5_band_frame(sigs, num_perm, bands), ["band_idx", "band_key"]
+        _bands(_MD5, sigs, num_perm, bands), ["band_idx", "band_key"]
     ).persist()
     cand_ids = _candidate_ids(pairs, "id")
-    sh = (
-        _candidate_docs(
-            df, pairs, id_col, ids=cand_ids.withColumnRenamed("id", id_col)
-        )
-        .select(
-            F.col(id_col).alias("id"),
-            md5_shingle_hashes(text_col, shingle_k).alias("sh"),
-        )
-        .persist()
-    )
+    sh = _shingle_table(
+        _MD5, df, cand_ids.withColumnRenamed("id", id_col),
+        id_col, text_col, shingle_k,
+    ).persist()
     sig_cand = sigs.join(cand_ids, "id", "semi")
     est = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
         )
     ).cast("double") / F.lit(float(num_perm))
-    exact = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-        "double"
-    ) / F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    try:
-        return (
-            pairs.join(
-                sig_cand.withColumnsRenamed(
-                    {"id": "id_a", "signature": "sig_a"}
-                ),
-                "id_a",
-            )
-            .join(
-                sig_cand.withColumnsRenamed(
-                    {"id": "id_b", "signature": "sig_b"}
-                ),
-                "id_b",
-            )
-            .join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-            .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.round(est, 6).alias("est_r"),
-                F.round(exact, 6).alias("exact_r"),
-                F.round(F.abs(est - exact), 6).alias("abs_err_r"),
-            )
-            .localCheckpoint(eager=True)
+    exact = _jaccard("sh_a", "sh_b")
+    result = (
+        pairs.join(
+            sig_cand.withColumnsRenamed({"id": "id_a", "signature": "sig_a"}),
+            "id_a",
         )
-    finally:
-        pairs.unpersist()
-        sigs.unpersist()
-        sh.unpersist()
+        .join(
+            sig_cand.withColumnsRenamed({"id": "id_b", "signature": "sig_b"}),
+            "id_b",
+        )
+        .join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
+        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.round(est, 6).alias("est_r"),
+            F.round(exact, 6).alias("exact_r"),
+            F.round(F.abs(est - exact), 6).alias("abs_err_r"),
+        )
+    )
+    return _finish(result, [pairs, sigs, sh], True)
 
 
 # -------------------------------------------------------------- SimHash
-
-def simhash64(col: Column | str) -> Column:
-    """64-bit SimHash of the whitespace-token multiset.
-
-    Entirely array expressions: fold token hashes into 64 signed bit
-    counts (``aggregate`` + ``zip_with``), then pack the sign vector
-    into one long. No explode, no shuffle, no Python.
-    """
-    toks = _tokens(col)
-    bit_idx = F.sequence(F.lit(0), F.lit(63))
-
-    def tok_bits(t: Column) -> Column:
-        # bind the token hash once; 64 getbit references are then cheap
-        return _let(
-            F.xxhash64(t),
-            lambda h: F.transform(
-                bit_idx,
-                lambda i: F.when(F.getbit(h, i) == 1, F.lit(1)).otherwise(F.lit(-1)),
-            ),
-        )
-
-    counts = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(acc, tok_bits(t), lambda a, b: a + b),
-    )
-
-    def pack(cnt: Column) -> Column:
-        # Literal weights per bit; bit 63's weight is Long.MIN_VALUE
-        # (2^63 as signed two's-complement), so the sum stays in range
-        # under ANSI arithmetic.
-        packed = F.lit(0).cast("long")
-        for i in range(64):
-            weight = (1 << i) if i < 63 else -(1 << 63)
-            packed = packed + F.when(
-                F.element_at(cnt, i + 1) > 0, F.lit(weight).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return packed
-
-    # bind counts once — pack references it 64 times
-    return _let(counts, pack)
-
 
 def simhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
-    """(id, simhash long).
+    """(id, simhash long) — 64-bit SimHash of the whitespace-token
+    multiset.
 
-    ``impl="arrow"`` (default): tokens hashed JVM-side (xxhash64), the
-    64-bit ±1 vote accumulation vectorized in numpy via mapInPandas —
-    unpackbits over the flattened token-hash bytes, per-document
-    segment sums (add.reduceat), packbits of the sign vector back to
-    one int64. Bit-identical to the pure-expression form (little-endian
-    bit i == getbit(h, i); two's-complement packing == the ±2^i weight
-    sum), ~10× faster — Catalyst evaluates the 64-lambda fold
-    interpreted. ``impl="expr"`` stays pure-Catalyst.
+    Tokens are hashed JVM-side (xxhash64); the 64-bit ±1 vote
+    accumulation is vectorized in numpy via mapInPandas — unpackbits
+    over the flattened token-hash bytes (little-endian: bit i ==
+    ``getbit(h, i)``), per-document segment sums (add.reduceat), then
+    packbits of the sign vector (bit set where the +1 votes win) back
+    to one two's-complement int64. Catalyst would evaluate the same
+    64-lambda fold interpreted, ~10× slower. Null text yields a null
+    simhash.
     """
-    if impl == "expr":
-        # null text → null simhash (the raw fold would yield 0: every
-        # per-bit comparison against a null count is null → otherwise(0))
-        sig = F.when(_tokens(text_col).isNotNull(), simhash64(text_col))
-        return df.select(F.col(id_col).alias("id"), sig.alias("simhash"))
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     def compute(batches):
         for pdf in batches:
-            # null text → null token array → null simhash (the
-            # expression impl propagates null the same way)
+            # null text → null token array → null simhash
             raw = pdf["__th"].tolist()
             th_list = [t for t in raw if t is not None and len(t)]
             out = np.empty(len(th_list), dtype=np.int64)
@@ -1526,7 +1287,6 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    impl: str = "arrow",
     materialize: bool = True,
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance ≤ max_hamming.
@@ -1548,7 +1308,7 @@ def simhash_near_dup_pairs(
     base, extra = divmod(64, n_chunks)
     sizes = [base + (1 if i < extra else 0) for i in range(n_chunks)]
     offsets = [sum(sizes[:i]) for i in range(n_chunks)]
-    sigs = simhash_signatures(df, id_col, text_col, impl).filter(
+    sigs = simhash_signatures(df, id_col, text_col).filter(
         F.col("simhash").isNotNull()
     )
     # chunks carry the full signature so the verify stage needs no
@@ -1576,42 +1336,32 @@ def simhash_near_dup_pairs(
         "id", F.explode(chunk_structs).alias("c")
     ).select("id", "c.simhash", "c.chunk_idx", "c.chunk_val").persist()
 
-    try:
-        l, r = chunks.alias("l"), chunks.alias("r")
-        result = (
-            l.join(
-                r,
-                (F.col("l.chunk_idx") == F.col("r.chunk_idx"))
-                & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-                & (F.col("l.id") < F.col("r.id")),
-            )
-            .select(
-                F.col("l.id").alias("id_a"),
-                F.col("r.id").alias("id_b"),
-                F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias(
-                    "hamming"
-                ),
-            )
-            .distinct()
-            .filter(F.col("hamming") <= max_hamming)
+    l, r = chunks.alias("l"), chunks.alias("r")
+    result = (
+        l.join(
+            r,
+            (F.col("l.chunk_idx") == F.col("r.chunk_idx"))
+            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
+            & (F.col("l.id") < F.col("r.id")),
         )
-        if not materialize:
-            return _attach_materialized(result, chunks)
-        return result.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            chunks.unpersist()
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias(
+                "hamming"
+            ),
+        )
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
+    )
+    return _finish(result, [chunks], materialize)
 
 
 # ------------------------------------------------------ n-gram Jaccard
 
 def ngram_jaccard(a: Column | str, b: Column | str, k: int = 3) -> Column:
     """Exact word-k-gram Jaccard similarity between two text columns."""
-    sa, sb = word_shingles(a, k), word_shingles(b, k)
-    return (
-        F.size(F.array_intersect(sa, sb)).cast("double")
-        / F.size(F.array_union(sa, sb)).cast("double")
-    )
+    return _jaccard(word_shingles(a, k), word_shingles(b, k))
 
 
 def ngram_jaccard_pairs(
@@ -1633,20 +1383,13 @@ def ngram_jaccard_pairs(
     non-candidates, and dense pair sets (every doc a candidate, e.g.
     adjacent-id scoring) still amortize one shingle pass per doc
     across all its pairs."""
-    sh = _candidate_docs(df, pairs, id_col).select(
+    sh = _candidate_docs(df, _candidate_ids(pairs, id_col), id_col).select(
         F.col(id_col).alias("id"), word_shingles(text_col, k).alias("sh")
     )
     return (
         pairs.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double")
-            ).alias("jaccard"),
-        )
+        .select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
     )
 
 
@@ -2143,7 +1886,7 @@ def ngram_containment_pairs(
     projection, so non-candidate rows are never shingled; see
     ngram_jaccard_pairs), then two id-key array joins — candidate-
     driven, never all-pairs."""
-    sh = _candidate_docs(df, pairs, id_col).select(
+    sh = _candidate_docs(df, _candidate_ids(pairs, id_col), id_col).select(
         F.col(id_col).alias("id"), word_shingles(text_col, k).alias("sh")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")

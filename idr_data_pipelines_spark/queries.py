@@ -4252,8 +4252,9 @@ def q_dedup_minhash_md5(spark, sf_dir):
     coefficient family) → band keys → candidate self-join → exact
     Jaccard verify — is integer/IEEE arithmetic DuckDB replays
     bit-for-bit, so unlike ``dedup_minhash_lsh`` (xxhash64, rows-only)
-    this entry carries a full value-hash oracle. Production dedup
-    keeps the xxhash64 Arrow path (cheaper hash, 128 perms); this
+    this entry carries a full value-hash oracle. Both families run the
+    same numpy signature kernel, band table and verify; production
+    dedup keeps the xxhash64 hash (cheaper, 128 perms), and this
     proves the LSH machinery itself cross-engine."""
     from idr_data_pipelines_spark.llmdata.dedup import minhash_md5_lsh_pairs
 
@@ -8753,34 +8754,8 @@ def _minhash_md5_sql(num_perm: int, bands: int, k: int, threshold: float) -> str
     """DuckDB replay of ``minhash_md5_lsh_pairs`` — same coefficient
     family (``_perm_coefficients``), modulus, band keys and Jaccard
     verify, generated from the same Python constants."""
-    from idr_data_pipelines_spark.llmdata.dedup import (
-        _MERSENNE_P,
-        _perm_coefficients,
-    )
-
-    r = num_perm // bands
-    coeffs = _perm_coefficients(num_perm)
-    mins = ", ".join(
-        f"list_min(list_transform(hv, h -> ({a} * h + {b}) % {_MERSENNE_P}))"
-        for a, b in coeffs
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, concat_ws('_', "
-        + ", ".join(f"CAST(s[{b * r + j + 1}] AS VARCHAR)" for j in range(r))
-        + ") AS band_key FROM sig"
-        for b in range(bands)
-    )
     return f"""
-        WITH hs AS (
-            SELECT doc_id, {_md5_shingle_hashes_sql(k)} AS hv
-            FROM (SELECT doc_id,
-                         regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-                  FROM documents WHERE text IS NOT NULL)
-        ), sig AS (
-            SELECT doc_id, [{mins}] AS s FROM hs
-        ), banded AS (
-            {band_rows}
-        ), pairs AS (
+        WITH {_minhash_md5_cte_prefix(num_perm, bands, k)}, pairs AS (
             SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
             FROM banded l JOIN banded r
               ON l.band_idx = r.band_idx AND l.band_key = r.band_key
@@ -8800,7 +8775,9 @@ def _minhash_md5_sql(num_perm: int, bands: int, k: int, threshold: float) -> str
 
 def _minhash_md5_cte_prefix(num_perm: int, bands: int, k: int) -> str:
     """The shared hs/sig/banded WITH-body of the portable md5 MinHash
-    oracles (mirrors ``_md5_bands_for``)."""
+    oracles — one signature per document row, as the numpy kernel
+    computes it (mirrors ``llmdata.dedup._bands`` over ``_signatures``
+    for the md5 family)."""
     from idr_data_pipelines_spark.llmdata.dedup import (
         _MERSENNE_P,
         _perm_coefficients,

@@ -318,19 +318,56 @@ def test_decode_image_real_or_loud(spark):
 
 
 def test_null_text_yields_null_signatures(spark):
-    """Null documents must produce null signatures in BOTH impls (the
-    arrow path used to crash on len(None))."""
+    """Null documents must produce null signatures in BOTH MinHash hash
+    families — they share one numpy kernel, which used to crash on
+    len(None) — and in SimHash. Whitespace-only text and text shorter
+    than k tokens still sign (one whole-text shingle), and no null-text
+    doc reaches any md5-family pair output."""
+    from idr_data_pipelines_spark.llmdata.dedup import (
+        _MD5,
+        _signatures,
+        minhash_md5_estimate_pairs,
+        minhash_md5_incremental_pairs,
+        minhash_md5_lsh_pairs,
+    )
+
     df = spark.createDataFrame(
-        [(1, "some real text here"), (2, None), (3, "other words entirely")],
+        [(1, "some real text here"), (2, None), (3, "other words entirely"),
+         (4, "   "), (5, "two words"), (6, "  "), (7, "Two  words"),
+         (8, None)],
         "doc_id long, text string",
     )
-    for impl in ("arrow", "expr"):
-        sigs = {r["id"]: r["signature"]
-                for r in minhash_signatures(df, num_perm=16, impl=impl).collect()}
-        assert sigs[2] is None and sigs[1] is not None, impl
-        sims = {r["id"]: r["simhash"]
-                for r in simhash_signatures(df, impl=impl).collect()}
-        assert sims[2] is None and sims[1] is not None, impl
+    null_ids = {2, 8}
+    families = {
+        "xxhash64": lambda d: minhash_signatures(d, num_perm=16),
+        "md5": lambda d: _signatures(_MD5, d, "doc_id", "text", 16, 3),
+    }
+    for name, sign in families.items():
+        sigs = {r["id"]: r["signature"] for r in sign(df).collect()}
+        assert {i for i, s in sigs.items() if s is None} == null_ids, name
+        assert all(len(sigs[i]) == 16 for i in (1, 3, 4, 5, 6, 7)), name
+        # whitespace-only and short docs: one whole-text shingle each
+        assert sigs[4] == sigs[6] and sigs[5] == sigs[7], name
+    sims = {r["id"]: r["simhash"] for r in simhash_signatures(df).collect()}
+    assert sims[2] is None and sims[1] is not None
+
+    def ids(rows, a, b):
+        return {(r[a], r[b]) for r in rows}
+
+    lsh = ids(minhash_md5_lsh_pairs(df).collect(), "id_a", "id_b")
+    est = ids(minhash_md5_estimate_pairs(df).collect(), "id_a", "id_b")
+    is_batch = F.col("doc_id").isin(2, 4, 7)
+    inc = ids(
+        minhash_md5_incremental_pairs(
+            df.filter(is_batch), df.filter(~is_batch)
+        ).collect(),
+        "id_new",
+        "id_old",
+    )
+    assert {(4, 6), (5, 7)} <= lsh and {(4, 6), (5, 7)} <= est
+    assert {(4, 6), (7, 5)} <= inc
+    for got in (lsh, est, inc):
+        assert not {i for p in got for i in p} & null_ids, got
 
 
 def test_simhash_near_dup_edge_hamming(spark):
@@ -801,20 +838,21 @@ def test_shingle_sql_paths_match_column_paths(spark):
 
 
 def test_band_struct_sql_paths_match_column_paths(spark):
-    """r15: the LSH band-struct arrays (xxhash64 band_hash form and
-    md5-family concat_ws band_key form) render as ONE parsed SQL
-    string on the hot path (the Column build cost ~0.5 s of py4j per
-    call at bands=16). Both trees must stay exactly identical."""
+    """The one LSH band renderer (``_band_structs_sql``, one parsed SQL
+    string — the Column build cost ~0.5 s of py4j per call at
+    bands=16) keys band b by its hash family's expression over slots
+    b·r+1 … b·r+r: xxhash64 of the slots in production,
+    ``concat_ws('_', …)`` of the slots cast to string in the portable
+    md5 family. Checked against the same expressions built with the
+    Column API, edge-value slots (0, −1, ±2⁶³) included."""
     import random
 
     from pyspark.sql import functions as F
 
     from idr_data_pipelines_spark.llmdata.dedup import (
-        _band_hash_structs,
-        _band_hash_structs_sql,
-        _let,
-        _md5_band_key_structs,
-        _md5_band_key_structs_let_sql,
+        _MD5,
+        _XXHASH64,
+        _band_structs_sql,
     )
 
     rng = random.Random(0xB00)
@@ -826,23 +864,27 @@ def test_band_struct_sql_paths_match_column_paths(spark):
     rows.append((64, [0, -1, (1 << 63) - 1, -(1 << 63)] * 4))
     df = spark.createDataFrame(rows, ["id", "signature"])
     for bands, r in ((4, 4), (8, 2), (16, 1)):
+        slots = [
+            [F.element_at("signature", b * r + j + 1) for j in range(r)]
+            for b in range(bands)
+        ]
         got = df.select(
             "id",
-            _band_hash_structs(F.col("signature"), bands, r).alias("c"),
-            F.expr(_band_hash_structs_sql("`signature`", bands, r)).alias(
-                "s"
+            F.expr(_band_structs_sql(_XXHASH64, "`signature`", bands, r)).alias(
+                "x"
             ),
-            _let(
-                F.col("signature"),
-                lambda sig: _md5_band_key_structs(sig, bands, r),
-            ).alias("mc"),
-            F.expr(
-                _md5_band_key_structs_let_sql("`signature`", bands, r)
-            ).alias("ms"),
+            F.expr(_band_structs_sql(_MD5, "`signature`", bands, r)).alias("m"),
+            F.array(*[F.xxhash64(*s) for s in slots]).alias("x_want"),
+            F.array(
+                *[F.concat_ws("_", *[c.cast("string") for c in s]) for s in slots]
+            ).alias("m_want"),
         ).collect()
         for row in got:
-            assert row["c"] == row["s"], (bands, r, row["id"])
-            assert row["mc"] == row["ms"], (bands, r, row["id"])
+            for fam in ("x", "m"):
+                assert [b["band_idx"] for b in row[fam]] == list(range(bands))
+                assert [b["band_key"] for b in row[fam]] == row[fam + "_want"], (
+                    fam, bands, r, row["id"],
+                )
 
 
 def test_sql_ref_guards(spark):
@@ -867,6 +909,15 @@ def test_sql_ref_guards(spark):
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
         assert _sql_ref("text") is None
+        # a thread with no active session of its own must still see
+        # the session's conf (getActiveSession() is thread-local)
+        import threading
+
+        seen = []
+        t = threading.Thread(target=lambda: seen.append(_sql_ref("text")))
+        t.start()
+        t.join()
+        assert seen == [None]
         # operator output unchanged under the conf (Column path taken)
         got2 = spark.createDataFrame([("a b c",)], ["text"]).select(
             word_shingles("text", 2).alias("ws")
@@ -2709,7 +2760,7 @@ def test_dedup_invariant_flags_catch_violations(spark, sf_dir, monkeypatch):
             WHERE text IS NOT NULL AND doc_id % 10 = 0
         ), grp AS (
             SELECT COUNT(*) AS c FROM corpus
-            GROUP BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
+            GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
         )
         SELECT CAST(COALESCE(SUM(c * (c - 1) // 2), 0) AS BIGINT) FROM grp
         """
