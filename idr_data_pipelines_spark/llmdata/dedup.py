@@ -18,7 +18,6 @@ engine-portable md5-32 hash so a SQL oracle can replay every value.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 from typing import Callable
 
@@ -172,10 +171,53 @@ def dedup_exact_hash_groups(
 
 
 # -------------------------------------------------------------- shingles
+#
+# Every text builder below takes a column NAME and is written once, as
+# SQL text parsed by one ``F.expr``. One parse costs ~1 ms of build
+# time; the same tree built node by node through the Column API costs
+# one py4j round-trip per node, and every consumer's build pays it
+# (minhash verify, winnowing, n-gram decontamination, the repetition
+# filters). The SQL text holds no backslash: a regex escape is built
+# as ``concat(chr(92), …)``, so the parser's legacy escaped-literals
+# setting cannot change how it parses. The optimizer folds it to the
+# plain literal, so plans show the regex ``\s+`` itself. Raw control
+# characters in a literal would be just as setting-proof but print
+# verbatim in the plan text, where a raw LF/VT/FF/CR reads as a line
+# break to anything that parses plans by line (``plans.lint``).
 
-def _tokens(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.lower(F.trim(c)), r"\s+")
+
+def _regex_sql(escape: str) -> str:
+    """SQL text of the regex that is a backslash followed by
+    ``escape`` (``_regex_sql('s+')`` is ``\\s+``), with no backslash in
+    the SQL text itself."""
+    return f"concat(chr(92), '{escape}')"
+
+
+def _sql_name(name: str) -> str:
+    """SQL reference for a column name: each dot-separated part
+    backtick-quoted, so ``meta.text`` resolves to the struct field and
+    ``a b`` to the column of that name, as ``F.col`` resolves them.
+
+    A ``Column`` is refused, not rendered: its SQL rendering drops the
+    backticks of names like ``a b`` and does not parse for a Python
+    UDF."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"expected a column name (str), got {type(name).__name__}"
+        )
+    if "`" in name:
+        raise ValueError(f"column name {name!r} contains a backtick")
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def _tokens_sql(name: str) -> str:
+    """SQL text of the word tokenizer: the lowered, trimmed text split
+    on whitespace runs."""
+    return f"split(lower(trim({_sql_name(name)})), {_regex_sql('s+')})"
+
+
+def _tokens(name: str) -> Column:
+    return F.expr(_tokens_sql(name))
 
 
 def _let(expr: Column, fn) -> Column:
@@ -186,119 +228,57 @@ def _let(expr: Column, fn) -> Column:
     every use site, so an expensive array expression referenced 64
     times is *computed* 64 times. ``transform(array(e), x -> body)[1]``
     binds e to a lambda variable — one evaluation, many references.
+    ``_let_sql`` is the same binding for the SQL-text builders.
     """
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
-def _sql_ref(col: Column | str) -> str | None:
-    """Backtick-quoted SQL reference for a plain column NAME; ``None``
-    for a ``Column`` input, which keeps the general builder path.
-
-    Same driver-cost rationale as ``filters._sql_ref`` (r14 s6):
-    building the shingle/hash trees through the Python Column API
-    costs 0.05–0.2 s of py4j round-trips per call, which lands on
-    every consumer's build (minhash verify, winnowing, n-gram
-    decontamination); one parsed SQL string costs ~1 ms. Each SQL
-    twin below is pinned bitwise-identical to its Column form by
-    ``test_shingle_sql_paths_match_column_paths``.
-
-    Only SIMPLE identifiers take the fast path (r15, r14 advice):
-    a dotted name like ``meta.text`` resolves via ``F.col``'s
-    multi-part parsing on the builder path, but backtick-quoting the
-    whole string would make the parser look for a column literally
-    named ``meta.text``. Anything non-simple falls back to the
-    Column builder, which is always correct. The fast path is also
-    disabled under ``spark.sql.parser.escapedStringLiterals=true``,
-    which would re-interpret the twins' regex literals (``'\\\\s+'``)
-    as raw backslash-s and silently diverge from the Column path."""
-    if isinstance(col, str) and _SIMPLE_IDENT.match(col) and not _escaped_literals_on():
-        return "`" + col + "`"
-    return None
+def _let_sql(expr: str, var: str, body: str) -> str:
+    """SQL text of ``_let``: ``body`` with ``expr`` evaluated once and
+    bound to the lambda variable ``var``."""
+    return f"element_at(transform(array({expr}), {var} -> {body}), 1)"
 
 
-_SIMPLE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _escaped_literals_on() -> bool:
-    """True when the session parses string literals with legacy
-    backslash escaping (``spark.sql.parser.escapedStringLiterals``)
-    — the one conf under which a parsed-SQL twin is NOT the same tree
-    as its Column builder. The active session is thread-local: a
-    thread that never set one (a worker thread building plans) sees
-    None, so fall back to the process's instantiated session. No
-    session at all → assume default (off)."""
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession() or SparkSession._instantiatedSession
-    if sess is None:
-        return False
+def _kgrams_sql(toks: str, k: int) -> str:
+    """SQL text of the positional word k-grams of the token array
+    ``toks``: gram i is tokens i … i+k-1 joined by one space,
+    duplicates kept. Each caller handles arrays shorter than k."""
     return (
-        sess.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        == "true"
+        f"transform(sequence(0, size({toks}) - {k}), "
+        f"__i -> array_join(slice({toks}, __i + 1, {k}), ' '))"
     )
 
 
-def _tokens_sql(ref: str) -> str:
-    """SQL text of ``_tokens``."""
-    return r"split(lower(trim(" + ref + r")), '\\s+')"
+def _md5_hash32_sql(s: str) -> str:
+    """SQL text of ``md5_hash32``."""
+    return f"CAST(conv(substring(md5({s}), 1, 8), 16, 10) AS BIGINT)"
 
 
-def _word_shingles_sql(ref: str, k: int) -> str:
-    """SQL text of ``word_shingles`` — the identical let-bound tree."""
-    grams = (
-        f"transform(sequence(0, size(__t) - {k}), "
-        f"__i -> array_join(slice(__t, __i + 1, {k}), ' '))"
-    )
-    return (
-        f"element_at(transform(array({_tokens_sql(ref)}), __t -> "
+def _word_shingles_sql(name: str, k: int) -> str:
+    """SQL text of ``word_shingles``."""
+    return _let_sql(
+        _tokens_sql(name),
+        "__t",
         f"CASE WHEN size(__t) < {k} THEN array(array_join(__t, ' ')) "
-        f"ELSE array_distinct({grams}) END), 1)"
+        f"ELSE array_distinct({_kgrams_sql('__t', k)}) END",
     )
 
 
-def _shingle_hashes_positional_sql(ref: str, k: int) -> str:
-    """SQL text of ``shingle_hashes_positional`` — token xxhash64 once,
-    k-gram identity hashed from the token hashes (same default seed
-    42 as ``F.xxhash64``)."""
-    th = f"transform({_tokens_sql(ref)}, __w -> xxhash64(__w))"
-    args = ", ".join(
-        f"element_at(__h, CAST(__i + {j} + 1 AS INT))" for j in range(k)
-    )
-    whole = "aggregate(__h, CAST(0 AS BIGINT), (__a, __x) -> xxhash64(__a, __x))"
-    return (
-        f"element_at(transform(array({th}), __h -> "
-        f"CASE WHEN size(__h) < {k} THEN array({whole}) "
-        f"ELSE transform(sequence(0, size(__h) - {k}), "
-        f"__i -> xxhash64({args})) END), 1)"
-    )
+def word_shingles(col: str, k: int = 3) -> Column:
+    """Distinct word k-shingles of the text column named ``col`` as an
+    array<string>. Documents shorter than k tokens yield their whole
+    text as one shingle.
 
-
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles as an array<string>. Documents shorter
-    than k tokens yield their whole text as one shingle."""
+    The tokens are let-bound: an unbound token array inside the gram
+    lambda gets the split/lower/trim INLINED into every gram position
+    by Catalyst's projection collapsing — one re-tokenization per
+    position, O(n²·len) per document (the r13 remove_duplicate_spans
+    fix measured the same shape at 7× wall)."""
     if k < 1:
         # k=0 would emit n+1 EMPTY-string shingles per document —
         # every document suddenly "shares" the empty gram (r11 review)
         raise ValueError("k must be >= 1")
-    ref = _sql_ref(col)
-    if ref is not None:
-        return F.expr(_word_shingles_sql(ref, k))
-    # _let-bound: an unbound `toks` reference inside the transform
-    # lambda gets the split/lower/trim INLINED into every gram
-    # position by Catalyst's projection collapsing — one
-    # re-tokenization per position, O(n²·len) per document (the r13
-    # remove_duplicate_spans fix measured the same shape at 7× wall)
-    def _build(ts: Column) -> Column:
-        n = F.size(ts)
-        shingled = F.transform(
-            F.sequence(F.lit(0), n - F.lit(k)),
-            lambda i: F.array_join(F.slice(ts, i + 1, k), " "),
-        )
-        return F.when(n < F.lit(k), F.array(F.array_join(ts, " "))).otherwise(
-            F.array_distinct(shingled)
-        )
-
-    return _let(_tokens(col), _build)
+    return F.expr(_word_shingles_sql(col, k))
 
 
 # -------------------------------------------------------------- MinHash
@@ -306,7 +286,13 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
 _MASK32 = (1 << 32) - 1
 
 
-def shingle_hashes_positional(text_col: Column | str, k: int = 3) -> Column:
+def _token_hashes_sql(name: str) -> str:
+    """SQL text of the per-token xxhash64 array (default seed 42, the
+    seed of ``F.xxhash64``)."""
+    return f"transform({_tokens_sql(name)}, __w -> xxhash64(__w))"
+
+
+def shingle_hashes_positional(text_col: str, k: int = 3) -> Column:
     """Ordered word-k-shingle hashes (duplicates kept) as array<long> —
     position i is the hash of the k-gram starting at token i, the
     "rolling hash" sequence that window algorithms (winnowing) consume.
@@ -320,29 +306,25 @@ def shingle_hashes_positional(text_col: Column | str, k: int = 3) -> Column:
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    ref = _sql_ref(text_col)
-    if ref is not None:
-        return F.expr(_shingle_hashes_positional_sql(ref, k))
-    toks = _tokens(text_col)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def build(hs: Column) -> Column:
-        n = F.size(hs)
-
-        def sh(i: Column) -> Column:
-            args = [F.element_at(hs, (i + j + 1).cast("int")) for j in range(k)]
-            return F.xxhash64(*args)
-
-        shingled = F.transform(F.sequence(F.lit(0), n - F.lit(k)), sh)
-        whole = F.aggregate(
-            hs, F.lit(0).cast("long"), lambda a, x: F.xxhash64(a, x)
-        )
-        return F.when(n < F.lit(k), F.array(whole)).otherwise(shingled)
-
-    return _let(th, build)
+    return F.expr(_shingle_hashes_positional_sql(text_col, k))
 
 
-def shingle_hashes(text_col: Column | str, k: int = 3) -> Column:
+def _shingle_hashes_positional_sql(name: str, k: int) -> str:
+    """SQL text of ``shingle_hashes_positional``."""
+    args = ", ".join(
+        f"element_at(__h, CAST(__i + {j} + 1 AS INT))" for j in range(k)
+    )
+    whole = "aggregate(__h, CAST(0 AS BIGINT), (__a, __x) -> xxhash64(__a, __x))"
+    return _let_sql(
+        _token_hashes_sql(name),
+        "__h",
+        f"CASE WHEN size(__h) < {k} THEN array({whole}) "
+        f"ELSE transform(sequence(0, size(__h) - {k}), "
+        f"__i -> xxhash64({args})) END",
+    )
+
+
+def shingle_hashes(text_col: str, k: int = 3) -> Column:
     """Distinct word-k-shingle hashes as array<long> — the set form
     used for Jaccard/MinHash (see shingle_hashes_positional)."""
     return F.array_distinct(shingle_hashes_positional(text_col, k))
@@ -358,23 +340,17 @@ def md5_hash32(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
-def md5_shingle_hashes(col: Column | str, k: int = 3) -> Column:
+def md5_shingle_hashes(col: str, k: int = 3) -> Column:
     """Distinct word-k-shingle md5-32 hashes as array<long> — the
     portable-hash counterpart of ``shingle_hashes``. Unlike the
     xxhash64 form it materializes shingle strings (that IS the
     portable identity md5 consumes); acceptable for the verification
     variants, not the production hot path."""
-    ref = _sql_ref(col)
-    if ref is not None:
-        if k < 1:  # match word_shingles' validation on the SQL path
-            raise ValueError("k must be >= 1")
-        return F.expr(
-            f"array_distinct(transform({_word_shingles_sql(ref, k)}, "
-            "__s -> CAST(conv(substring(md5(__s), 1, 8), 16, 10)"
-            " AS BIGINT)))"
-        )
-    return F.array_distinct(
-        F.transform(word_shingles(col, k), lambda s: md5_hash32(s))
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    return F.expr(
+        f"array_distinct(transform({_word_shingles_sql(col, k)}, "
+        f"__s -> {_md5_hash32_sql('__s')}))"
     )
 
 
@@ -417,7 +393,7 @@ class _HashFamily:
       and its rounding (``None`` = the raw double). The threshold
       filters the column as output, i.e. AFTER rounding."""
 
-    shingles: Callable[[Column | str, int], Column]
+    shingles: Callable[[str, int], Column]
     band_key: str
     band_slot: str
     jaccard_col: str
@@ -1196,10 +1172,9 @@ def simhash_signatures(
     base = df
     if n_scan is not None and n_scan < max(2, target // 2):
         base = df.repartition(target)
-    toks = _tokens(text_col)
     prepped = base.select(
         F.col(id_col).alias("id"),
-        F.transform(toks, lambda t: F.xxhash64(t)).alias("__th"),
+        F.expr(_token_hashes_sql(text_col)).alias("__th"),
     )
     out_schema = StructType(
         [
@@ -1359,11 +1334,6 @@ def simhash_near_dup_pairs(
 
 # ------------------------------------------------------ n-gram Jaccard
 
-def ngram_jaccard(a: Column | str, b: Column | str, k: int = 3) -> Column:
-    """Exact word-k-gram Jaccard similarity between two text columns."""
-    return _jaccard(word_shingles(a, k), word_shingles(b, k))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -1453,11 +1423,14 @@ def connected_components(
     probe, the probe's ``__prev`` carried by the second round. A
     no-change round is absorbing (labels only decrease), so "second
     round changed nothing" ⟺ converged, and "second round changed"
-    implies every earlier round changed — the ``max_iter`` guard on
-    label-changing rounds stays exact (see the loop comment). Half
-    the barriers/probes/checkpoint writes per round, at the cost of
-    at most ONE no-op round when the last change lands on an even
-    round index.
+    implies every earlier round changed. The ``max_iter`` bound on
+    label-changing rounds therefore holds up to one round: when the
+    last change lands on the FIRST round of a superstep, the probe
+    sees the second round's no-change and reports convergence, so a
+    run may return after ``max_iter + 1`` changing rounds (see the
+    loop comment). The returned labels are always a true fixed point.
+    Half the barriers/probes/checkpoint writes per round, at the cost
+    of at most ONE no-op round in that same case.
 
     An iterative driver loop — NOT expressible as one Catalyst plan —
     but each step is a distributed DataFrame op; the driver only ever
@@ -1629,10 +1602,16 @@ def connected_components(
         # nothing" ⟺ converged, and "round 2s+1 changed something"
         # implies every earlier round changed something, so a changed
         # probe at superstep s means EXACTLY 2s+2 label-changing
-        # rounds so far — the max_iter guard stays exact. The final
-        # labels are schedule-independent (min-label propagation +
-        # doubling reaches the same min-reachable-id fixed point under
-        # any round/probe schedule), so pairing cannot change results,
+        # rounds so far. The guard below therefore checks the bound
+        # per superstep and holds it up to one round: a run with
+        # 2s+1 changing rounds (last change on round 2s, the first of
+        # superstep s) returns under max_iter = 2s. Whatever it
+        # returns is the true fixed point — only a changed probe can
+        # raise, and an unchanged probe means round 2s+1 changed
+        # nothing. The final labels are schedule-independent
+        # (min-label propagation + doubling reaches the same
+        # min-reachable-id fixed point under any round/probe
+        # schedule), so pairing cannot change results,
         # only when convergence is OBSERVED: at most one no-op round
         # (over already-converged labels) runs when the last change
         # lands on an even round index, in exchange for half the
@@ -1668,10 +1647,11 @@ def connected_components(
             # diameter), so hitting this means max_iter is badly
             # undersized)
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "label-changing rounds (+1 confirmation round); "
-                "raise max_iter (labels were still changing on the "
-                "final pass)"
+                f"connected_components did not converge within "
+                f"max_iter={max_iter} label-changing rounds (checked "
+                "per two-round superstep, so the bound holds up to one "
+                "round); raise max_iter (labels were still changing on "
+                "the final pass)"
             )
         return labels
     finally:

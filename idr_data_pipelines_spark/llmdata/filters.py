@@ -8,6 +8,12 @@ JVM projection — **no shuffle, no Python**: at 100 TB this stage is a
 pure map over the corpus scan, pipelined with whatever filter
 consumes the flags.
 
+Each metric takes the text column's NAME and is written once, as SQL
+text parsed by one ``F.expr`` (the form and its tokenizer are those of
+``dedup``'s shingle builders). Building the same trees through the
+Column API cost one py4j round-trip per node — ~0.33 s per
+``repetition_metrics`` call, measured r14 — on every consumer's build.
+
 The per-document mode computation (``top k-gram count``) is O(d·n)
 array work per doc (d = distinct k-grams); documents are bounded
 (split upstream), so this beats the explode → groupBy → window
@@ -19,165 +25,86 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from idr_data_pipelines_spark.llmdata.dedup import _let, _tokens
+from idr_data_pipelines_spark.llmdata.dedup import (
+    _kgrams_sql,
+    _let_sql,
+    _regex_sql,
+    _sql_name,
+    _tokens_sql,
+)
 
 
-def _sql_ref(col: Column | str) -> str | None:
-    """Backtick-quoted SQL reference for a plain column NAME; ``None``
-    for a ``Column`` input, which keeps the general builder path.
+def _repeat_frac_sql(arr: str) -> str:
+    """SQL text of ``1 - distinct/total`` over the array expression
+    ``arr``; 0.0 for an empty or one-element array.
 
-    Why a string path exists at all: building these metric trees
-    through the Python Column API costs one py4j round-trip per node —
-    ~0.33 s per ``repetition_metrics`` call and ~0.4 s per
-    ``gopher_repetition_pass`` call, measured r14 — which puts the
-    DRIVER in the hot path of every consumer (the flagship recipe and
-    the repetition query pay it on every build). Rendering the SAME
-    expression tree as one parsed SQL string costs ~1 ms. Both paths
-    are pinned value-identical by
-    ``test_repetition_metrics_sql_path_matches_column_path``.
-
-    Guards (r15, shared with ``dedup._sql_ref``): only simple
-    identifiers (dotted names resolve differently under backticks)
-    and only when ``spark.sql.parser.escapedStringLiterals`` is off
-    (that conf re-interprets the twins' regex literals)."""
-    from idr_data_pipelines_spark.llmdata.dedup import _sql_ref as _d
-
-    return _d(col)
-
-
-def _tokens_sql(ref: str) -> str:
-    """SQL text of ``_tokens``: whitespace-split lowered trimmed text."""
-    return r"split(lower(trim(" + ref + r")), '\\s+')"
-
-
-def _dup_frac_sql(arr_sql: str) -> str:
-    """SQL text of ``_dup_frac`` over an array expression — the same
-    let-bound ``1 - distinct/total`` tree ``_dup_frac`` builds."""
-    return (
-        "element_at(transform(array(" + arr_sql + "), __a -> "
+    ``arr`` is usually an inline split, which projection collapsing
+    would otherwise inline into all three references (two sizes +
+    array_distinct = three tokenizations per row) — bind it once (the
+    r13 word_shingles lens; constant-factor here, not the O(n²) shape,
+    but free to fix)."""
+    return _let_sql(
+        arr,
+        "__a",
         "CASE WHEN size(__a) <= 1 THEN 0.0D "
         "ELSE 1.0D - CAST(size(array_distinct(__a)) AS DOUBLE)"
-        " / CAST(size(__a) AS DOUBLE) END), 1)"
+        " / CAST(size(__a) AS DOUBLE) END",
     )
 
 
-def _top_ngram_sql(ref: str, k: int) -> str:
-    """SQL text of ``top_ngram_fraction`` — the identical let-bound
-    grams + sorted-run-fold tree (the ``run`` subexpression appears
-    twice below because the Column form references the same Column
-    object twice, which inlines the subtree twice)."""
+def dup_word_fraction(col: str = "text") -> Column:
+    """Fraction of word occurrences that are repeats of an earlier
+    word: ``1 - distinct_words / words``."""
+    return F.expr(_repeat_frac_sql(_tokens_sql(col)))
+
+
+def dup_line_fraction(col: str = "text") -> Column:
+    """Fraction of duplicate lines (Gopher: drop if > 0.30). Lines are
+    verbatim LF splits — no normalization, matching the paper."""
+    return F.expr(
+        _repeat_frac_sql(f"split({_sql_name(col)}, {_regex_sql('n')})")
+    )
+
+
+def top_ngram_fraction(col: str = "text", k: int = 2) -> Column:
+    """Fraction of k-gram occurrences taken by the single most common
+    k-gram (Gopher: drop if top-2-gram fraction > 0.20). Documents
+    with < k tokens score 0.0.
+
+    The mode COUNT is the longest equal run of the sorted gram array,
+    one O(n) fold — the naive per-distinct filter scan is O(d·n)
+    string compares per document, which dominated the whole recipe's
+    runtime (~160k compares for a 400-token doc vs ~400 here); the
+    count is identical by definition."""
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    # the fold's struct cannot read its own new ``run`` field, so the
+    # run expression is written out for both ``run`` and ``best``
     run = (
         "CASE WHEN __acc.prev IS NULL OR __acc.prev != __x "
         "THEN 1 ELSE __acc.run + 1 END"
     )
-    agg = (
+    top = (
         "aggregate(array_sort(__g), "
         "named_struct('prev', CAST(NULL AS STRING), 'run', 0, 'best', 0), "
         f"(__acc, __x) -> named_struct('prev', __x, 'run', {run}, "
         f"'best', greatest(__acc.best, {run}))).best"
     )
-    grams = (
-        f"transform(sequence(0, size(__t) - {k}), "
-        f"__i -> array_join(slice(__t, __i + 1, {k}), ' '))"
+    frac = _let_sql(
+        _kgrams_sql("__t", k),
+        "__g",
+        f"CAST({top} AS DOUBLE) / CAST(size(__g) AS DOUBLE)",
     )
-    inner = (
-        f"element_at(transform(array({grams}), __g -> "
-        f"CAST({agg} AS DOUBLE) / CAST(size(__g) AS DOUBLE)), 1)"
+    return F.expr(
+        _let_sql(
+            _tokens_sql(col),
+            "__t",
+            f"CASE WHEN size(__t) < {k} THEN 0.0D ELSE {frac} END",
+        )
     )
-    return (
-        f"element_at(transform(array({_tokens_sql(ref)}), __t -> "
-        f"CASE WHEN size(__t) < {k} THEN 0.0D ELSE {inner} END), 1)"
-    )
 
 
-def _dup_frac(arr: Column) -> Column:
-    """1 - distinct/total over a non-empty array; 0.0 for empty/size-1.
-
-    ``arr`` is usually an inline split expression, which projection
-    collapsing would otherwise inline into all three references (two
-    sizes + array_distinct = three tokenizations per row) — bind it
-    once (the r13 word_shingles lens; constant-factor here, not the
-    O(n²) shape, but free to fix)."""
-
-    def frac(a: Column) -> Column:
-        n = F.size(a)
-        return F.when(n <= 1, F.lit(0.0)).otherwise(
-            F.lit(1.0)
-            - F.size(F.array_distinct(a)).cast("double") / n.cast("double")
-        )
-
-    return _let(arr, frac)
-
-
-def dup_word_fraction(col: Column | str = "text") -> Column:
-    """Fraction of word occurrences that are repeats of an earlier
-    word: ``1 - distinct_words / words``."""
-    ref = _sql_ref(col)
-    if ref is not None:
-        return F.expr(_dup_frac_sql(_tokens_sql(ref)))
-    return _dup_frac(_tokens(col))
-
-
-def dup_line_fraction(col: Column | str = "text") -> Column:
-    """Fraction of duplicate lines (Gopher: drop if > 0.30). Lines are
-    verbatim ``\\n`` splits — no normalization, matching the paper."""
-    ref = _sql_ref(col)
-    if ref is not None:
-        return F.expr(_dup_frac_sql(r"split(" + ref + r", '\\n')"))
-    c = F.col(col) if isinstance(col, str) else col
-    return _dup_frac(F.split(c, r"\n"))
-
-
-def top_ngram_fraction(col: Column | str = "text", k: int = 2) -> Column:
-    """Fraction of k-gram occurrences taken by the single most common
-    k-gram (Gopher: drop if top-2-gram fraction > 0.20). Documents
-    with < k tokens score 0.0."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    ref = _sql_ref(col)
-    if ref is not None:
-        return F.expr(_top_ngram_sql(ref, k))
-
-    def frac(toks: Column) -> Column:
-        n = F.size(toks)
-        grams = F.transform(
-            F.sequence(F.lit(0), n - F.lit(k)),
-            lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
-        )
-
-        def top_count(g: Column) -> Column:
-            # mode COUNT = longest equal-run of the sorted gram array,
-            # one O(n) fold — the naive per-distinct filter scan is
-            # O(d·n) string compares per document, which dominated the
-            # whole recipe's runtime (~160k compares for a 400-token
-            # doc vs ~400 here); the count is identical by definition
-            def step(acc: Column, x: Column) -> Column:
-                fresh = acc["prev"].isNull() | (acc["prev"] != x)
-                run = F.when(fresh, F.lit(1)).otherwise(acc["run"] + 1)
-                return F.struct(
-                    x.alias("prev"),
-                    run.alias("run"),
-                    F.greatest(acc["best"], run).alias("best"),
-                )
-
-            return F.aggregate(
-                F.array_sort(g),
-                F.struct(
-                    F.lit(None).cast("string").alias("prev"),
-                    F.lit(0).alias("run"),
-                    F.lit(0).alias("best"),
-                ),
-                step,
-            )["best"]
-
-        return F.when(n < F.lit(k), F.lit(0.0)).otherwise(
-            _let(grams, lambda g: top_count(g).cast("double") / F.size(g).cast("double"))
-        )
-
-    return _let(_tokens(col), frac)
-
-
-def repetition_metrics(text_col: Column | str = "text") -> dict[str, Column]:
+def repetition_metrics(text_col: str = "text") -> dict[str, Column]:
     """All repetition signals as named columns (compose with
     ``text.quality_score`` for the full Gopher filter set)."""
     return {
@@ -204,7 +131,7 @@ def _gopher_pass_from(
 
 
 def gopher_repetition_pass(
-    text_col: Column | str = "text",
+    text_col: str = "text",
     max_dup_line_frac: float = 0.30,
     max_top_bigram_frac: float = 0.20,
     max_top_trigram_frac: float = 0.18,

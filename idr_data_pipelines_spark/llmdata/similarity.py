@@ -54,18 +54,17 @@ def norm(a: Column) -> Column:
 # throughput at 4M pairs (interleaved noop A/B, every pass faster),
 # a wash at bench pair counts (overhead-bound). 64 terms is far below
 # the janino 64 KB method limit that killed the 16×64-terms-in-one-
-# projection unroll (r14, rejected); these helpers emit ONE dot/norm
-# per expression. The chain reproduces the fold's exact IEEE order —
+# projection unroll (r14, rejected); ``dot_ref`` emits ONE dot per
+# expression. The chain reproduces the fold's exact IEEE order —
 # 0.0D seed then left-associated adds — and a size() guard falls back
 # to the identical interpreted fold for any other dimension, so
-# results are bit-identical in all cases (pinned by
-# test_dot_norm_ref_match_fold_paths).
+# results are bit-identical in all cases (pinned by the dot/norm fold
+# test in tests/test_llmdata.py).
 #
 # Scope (r15, measured): only the per-PAIR dot sites unroll — the
 # quadratic term. Per-ROW norms stay folded: unrolling them too was
 # measured (interleaved, 5 rounds) as +0.1–0.2 s of plan/build
-# overhead per affected bench query for a linear-term payoff;
-# ``norm_ref`` is kept (twin-tested) for future wide-row sites.
+# overhead per affected bench query for a linear-term payoff.
 _UNROLL_DIM = 64
 
 
@@ -89,21 +88,6 @@ def dot_ref(a_ref: str, b_ref: str, dim: int = _UNROLL_DIM) -> Column:
         f"CASE WHEN size({a_ref}) = {dim} AND size({b_ref}) = {dim} "
         f"THEN 0.0D + {terms} "
         f"ELSE {_fold_dot_ref_sql(a_ref, b_ref)} END"
-    )
-
-
-def norm_ref(a_ref: str, dim: int = _UNROLL_DIM) -> Column:
-    """``norm`` over a SQL column reference with the fixed common
-    dimension unrolled for codegen (same guard/fallback as
-    ``dot_ref``)."""
-    terms = " + ".join(
-        f"element_at({a_ref}, {i}) * element_at({a_ref}, {i})"
-        for i in range(1, dim + 1)
-    )
-    fold = f"aggregate({a_ref}, 0.0D, (acc, x) -> acc + x * x)"
-    return F.expr(
-        f"sqrt(CASE WHEN size({a_ref}) = {dim} THEN 0.0D + {terms} "
-        f"ELSE {fold} END)"
     )
 
 

@@ -9,6 +9,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from idr_data_pipelines_spark.llmdata.dedup import (
+    _kgrams_sql,
+    _let,
+    _let_sql,
+    _md5_hash32_sql,
+    _shingle_hashes_positional_sql,
+    _tokens,
+    _tokens_sql,
+)
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -85,8 +95,6 @@ def lang_id(col: Column | str = "text", min_hits: int = 1) -> Column:
     path; now each regex runs exactly once per row). Values are
     unchanged: array_max ≡ greatest over the same ints, and the
     first-max tie order is the same marker-dict order."""
-    from idr_data_pipelines_spark.llmdata.dedup import _let
-
     c = F.lower(_c(col))
     langs = list(_LANG_MARKERS)
     score_arr = F.array(*[_word_hits(c, _LANG_MARKERS[g]) for g in langs])
@@ -142,8 +150,19 @@ def fingerprint(col: Column | str = "text") -> Column:
     return F.md5(c)
 
 
+def _window_min_sql(hs: str, window: int) -> str:
+    """SQL text of the winnowing step over the hash array ``hs``: the
+    minimum of every ``window`` consecutive hashes, deduplicated (an
+    array shorter than ``window`` is one window)."""
+    return (
+        "array_distinct(transform("
+        f"sequence(0, greatest(size({hs}) - {window}, 0)), "
+        f"__j -> array_min(slice({hs}, __j + 1, {window}))))"
+    )
+
+
 def winnow_fingerprints(
-    col: Column | str = "text", k: int = 4, window: int = 4
+    col: str = "text", k: int = 4, window: int = 4
 ) -> Column:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03): rolling word-k-gram hashes, then the minimum of every
@@ -156,22 +175,17 @@ def winnow_fingerprints(
     once, k-gram identity hashed from token hashes — pure long
     arithmetic, no string materialization, no shuffle).
     """
-    from idr_data_pipelines_spark.llmdata.dedup import _let, shingle_hashes_positional
-
     if k < 1 or window < 1:
         # window=0 would take array_min over EMPTY slices — every
         # fingerprint silently null — and k=0 is not a k-gram
         raise ValueError("k and window must be >= 1")
-
-    def pick(hs: Column) -> Column:
-        n = F.size(hs)
-        mins = F.transform(
-            F.sequence(F.lit(0), F.greatest(n - F.lit(window), F.lit(0))),
-            lambda i: F.array_min(F.slice(hs, i + 1, window)),
+    return F.expr(
+        _let_sql(
+            _shingle_hashes_positional_sql(col, k),
+            "__h",
+            _window_min_sql("__h", window),
         )
-        return F.array_distinct(mins)
-
-    return _let(shingle_hashes_positional(col, k), pick)
+    )
 
 
 def winnow_fingerprint_table(
@@ -189,7 +203,7 @@ def winnow_fingerprint_table(
 
 
 def winnow_md5_fingerprints(
-    col: Column | str = "text", k: int = 4, window: int = 4
+    col: str = "text", k: int = 4, window: int = 4
 ) -> Column:
     """Winnowing fingerprints with the ENGINE-PORTABLE md5-32 k-gram
     hash — same algorithm as ``winnow_fingerprints`` (positional word
@@ -204,37 +218,18 @@ def winnow_md5_fingerprints(
     xxhash64 form (no shingle-string materialization, ~5× cheaper
     hash); this variant proves the winnowing pipeline cross-engine.
     """
-    from idr_data_pipelines_spark.llmdata.dedup import (
-        _let,
-        _tokens,
-        md5_hash32,
-    )
-
     if k < 1 or window < 1:
         raise ValueError("k and window must be >= 1")
-    toks = _tokens(col)
-
-    def build(ts: Column) -> Column:
-        n = F.size(ts)
-        kgrams = F.when(
-            n < F.lit(k), F.array(F.array_join(ts, " "))
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), n - F.lit(k)),
-                lambda i: F.array_join(F.slice(ts, i + 1, k), " "),
-            )
-        )
-        return F.transform(kgrams, lambda s: md5_hash32(s))
-
-    def pick(hs: Column) -> Column:
-        n = F.size(hs)
-        mins = F.transform(
-            F.sequence(F.lit(0), F.greatest(n - F.lit(window), F.lit(0))),
-            lambda i: F.array_min(F.slice(hs, i + 1, window)),
-        )
-        return F.array_distinct(mins)
-
-    return _let(_let(toks, build), pick)
+    kgrams = (
+        f"CASE WHEN size(__t) < {k} THEN array(array_join(__t, ' ')) "
+        f"ELSE {_kgrams_sql('__t', k)} END"
+    )
+    hashes = _let_sql(
+        _tokens_sql(col),
+        "__t",
+        f"transform({kgrams}, __s -> {_md5_hash32_sql('__s')})",
+    )
+    return F.expr(_let_sql(hashes, "__h", _window_min_sql("__h", window)))
 
 
 def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -277,7 +272,7 @@ def unigram_logprob_scores(
     """
     toks = df.select(
         F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
+        F.explode(_tokens(text_col)).alias("tok"),
     ).filter(F.col("tok") != "")
     # eager=False (r10 review): the checkpoint still materializes the
     # vocab exactly once — at the FIRST action — for all consumers,
@@ -336,10 +331,7 @@ def bigram_logprob_scores(
     """
     base = df.select(
         F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda t: t != "",
-        ).alias("a"),
+        F.filter(_tokens(text_col), lambda t: t != "").alias("a"),
     )
     pairs = (
         base.filter(F.size("a") >= 2)  # slice(len-1) errors on []
@@ -461,10 +453,7 @@ def vocab_coverage(
 
     toks = df.select(
         F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                lambda t: t != "",
-            )
+            F.filter(_tokens(text_col), lambda t: t != "")
         ).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
@@ -531,9 +520,7 @@ def zipf_lexical_stats(
         docs.filter(F.col(text_col).isNotNull())
         .select(
             F.col(group_col),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("__tok"),
+            F.explode(_tokens(text_col)).alias("__tok"),
         )
         .filter(F.col("__tok") != "")
     )

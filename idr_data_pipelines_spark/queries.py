@@ -46,6 +46,7 @@ from idr_data_pipelines_spark.functions import (
     str_sentinel_decode,
 )
 from idr_data_pipelines_spark.llmdata.dedup import (
+    _tokens,
     dedup_exact_hash_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -193,11 +194,11 @@ def _ab_parity(user_col: str = "user_id") -> F.Column:
 
 
 def _toks(col: str = "text") -> F.Column:
-    """The module's canonical whitespace tokenizer —
+    """The module's canonical whitespace tokenizer, ``dedup._tokens`` —
     split(lower(trim(text)), \\s+). Every oracle that tokenizes
     mirrors it as ``regexp_split_to_array(lower(trim(text)), '\\s+')``;
     change BOTH or none."""
-    return F.split(F.lower(F.trim(F.col(col))), r"\s+")
+    return _tokens(col)
 
 
 def _money_sum(col) -> F.Column:

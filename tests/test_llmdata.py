@@ -129,12 +129,13 @@ def test_cosine_topk_matches_numpy(spark):
 
 
 def test_dot_norm_ref_match_fold_paths(spark):
-    """r15: per-pair/per-row dots and norms unroll the fixed common
-    dimension (64) into a codegen'd multiply-add chain; any other
-    size falls back to the identical interpreted fold. Both paths
-    must be BIT-identical (struct-packed doubles) — including the
-    0.0D seed's IEEE placement, null elements, negative zeros, and
-    the non-64 fallback branch."""
+    """r15: per-pair dots unroll the fixed common dimension (64) into a
+    codegen'd multiply-add chain; any other size falls back to the
+    identical interpreted fold. Both paths must be BIT-identical
+    (struct-packed doubles) — including the 0.0D seed's IEEE
+    placement, null elements, negative zeros, and the non-64 fallback
+    branch. The folded ``norm`` is pinned bitwise to the same fold
+    computed in Python (0.0 seed, left-associated adds, then sqrt)."""
     import math
     import random
     import struct as _s
@@ -146,7 +147,6 @@ def test_dot_norm_ref_match_fold_paths(spark):
         dot,
         dot_ref,
         norm,
-        norm_ref,
     )
 
     assert _UNROLL_DIM == 64
@@ -173,18 +173,27 @@ def test_dot_norm_ref_match_fold_paths(spark):
         dot(F.col("a"), F.col("b")).alias("df"),
         dot_ref("a", "b").alias("du"),
         norm(F.col("a")).alias("nf"),
-        norm_ref("a").alias("nu"),
     ).collect()
 
     def pk(x):
         return None if x is None else _s.pack("d", x)
 
+    def py_norm(a):
+        acc = 0.0
+        for x in a:
+            if x is None:
+                return None
+            acc = acc + x * x
+        return math.sqrt(acc)
+
+    vecs = {i: a for i, a, _ in rows}
     for r in got:
         assert pk(r["df"]) == pk(r["du"]), (r["id"], r["df"], r["du"])
-        if r["nf"] is not None and math.isnan(r["nf"]):
-            assert math.isnan(r["nu"]), r["id"]
+        want = py_norm(vecs[r["id"]])
+        if want is not None and math.isnan(want):
+            assert math.isnan(r["nf"]), r["id"]
         else:
-            assert pk(r["nf"]) == pk(r["nu"]), (r["id"], r["nf"], r["nu"])
+            assert pk(r["nf"]) == pk(want), (r["id"], r["nf"], want)
 
 
 def test_cosine_lsh_recall(spark):
@@ -637,10 +646,10 @@ def test_connected_components_conf_restored(spark):
     """r15 single-writer contract (VERDICT r14 item 5): the loop
     narrows ``spark.sql.shuffle.partitions`` session-wide for its
     own shuffles and MUST restore it on every exit path — normal
-    convergence AND the non-convergence error. The guard itself must
-    stay exact: labels still changing after ``max_iter`` rounds ⇒
-    RuntimeError (a 120-node path needs ~7 doubling rounds, so
-    max_iter=2 must raise); adequate max_iter converges."""
+    convergence AND the non-convergence error (a 120-node path needs
+    6 label-changing rounds, so max_iter=2 must raise; the exact
+    boundary is pinned by test_connected_components_max_iter_boundary);
+    adequate max_iter converges."""
     import pytest as _pt
 
     from idr_data_pipelines_spark.llmdata.dedup import connected_components
@@ -653,6 +662,27 @@ def test_connected_components_conf_restored(spark):
     with _pt.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=2)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_connected_components_max_iter_boundary(spark):
+    """The ``max_iter`` bound is checked once per two-round superstep,
+    so it holds up to one round. The 8-node path 0-1-…-7 takes three
+    label-changing rounds (labels after each: 0 0 0 1 2 3 4 5 →
+    0 0 0 0 0 0 0 1 → all 0); the third is the FIRST round of the
+    second superstep, whose second round changes nothing. So the
+    smallest max_iter that returns is 2, one below the three changing
+    rounds, and it returns the true fixed point; max_iter=1 raises."""
+    import pytest as _pt
+
+    from idr_data_pipelines_spark.llmdata.dedup import connected_components
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], ["id_a", "id_b"]
+    )
+    got = {r["id"]: r["component"] for r in connected_components(df, max_iter=2).collect()}
+    assert got == {i: 0 for i in range(8)}
+    with _pt.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=1)
 
 
 def test_dedup_cluster_collapse_survivor_policy(spark):
@@ -741,16 +771,63 @@ def test_repetition_metrics_semantics(spark):
     assert got[4]["top_trigram_frac"] == 1 / 3  # 3 distinct trigrams, top=1
 
 
-def test_repetition_metrics_sql_path_matches_column_path(spark):
-    """r14: string-named columns take a parsed-SQL fast path (the
-    Column-API build cost ~0.33 s of py4j round-trips per call); a
-    ``Column`` input keeps the general builder. Both must stay
-    BITWISE-identical — doubles compared by struct packing, on texts
-    exercising every branch (empty, 1-token, < k tokens, dup-heavy,
-    newline dups, backtick in text)."""
-    import struct as _s
+# Rows for the text-builder value tests: every branch (empty, 1-token,
+# < k tokens, exactly k, dup-heavy, newline dups, whitespace runs, a
+# backtick in the text), every ASCII whitespace character, and U+00A0.
+# Under Java's default ``\s`` only space, TAB, LF, VT, FF and CR
+# separate tokens; the other ASCII whitespace (FS, GS, RS, US) and
+# U+00A0 are word characters, and ``trim`` strips spaces only.
+_TEXT_ROWS = [
+    (1, "a b a b a b"),
+    (2, "x\ny\nx\nz"),
+    (3, "single"),
+    (4, "all words here are unique"),
+    (5, ""),
+    (6, "  spaced   out   tokens  "),
+    (7, "tick ` mark ` tick"),
+    (8, "w w w w w w w w w w"),
+    (9, "one two"),
+    (10, "x y z"),
+    (11, "\tLead a\tb\nc\x0bd\x0ce\rf\r\nA  b\x1c\x1d\x1e\x1fg a b\n"),
+    (12, "a b c a b c"),
+]
 
-    from pyspark.sql import functions as F
+
+def _py_tokens(text):
+    r"""Python reference of the word tokenizer: Spark's ``trim`` (spaces
+    only), lowercase, split on runs of Java's ``\s`` (leading and
+    trailing empty tokens kept, as Java's ``split(regex, -1)``)."""
+    import re
+
+    return re.split("[ \t\n\x0b\x0c\r]+", text.strip(" ").lower())
+
+
+def _py_kgrams(toks, k):
+    return [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _distinct(xs):
+    return list(dict.fromkeys(xs))
+
+
+def _text_conf_cases(spark):
+    """Yield once per ``spark.sql.parser.escapedStringLiterals`` value;
+    the builders' literals must parse the same under both."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    try:
+        for v in ("false", "true"):
+            spark.conf.set(key, v)
+            yield v
+    finally:
+        spark.conf.set(key, "false")
+
+
+def test_repetition_metrics_match_python_reference(spark):
+    """The repetition fractions and the Gopher pass flag equal a Python
+    reference, bitwise (doubles compared by struct packing), under
+    both ``escapedStringLiterals`` values."""
+    import struct as _s
+    from collections import Counter
 
     from idr_data_pipelines_spark.llmdata.filters import (
         _gopher_pass_from,
@@ -758,41 +835,57 @@ def test_repetition_metrics_sql_path_matches_column_path(spark):
         repetition_metrics,
     )
 
-    rows = [
-        (1, "a b a b a b"),
-        (2, "x\ny\nx\nz"),
-        (3, "single"),
-        (4, "all words here are unique"),
-        (5, ""),
-        (6, "  spaced   out   tokens  "),
-        (7, "tick ` mark ` tick"),
-        (8, "w w w w w w w w w w"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    m_sql = repetition_metrics("text")          # fast path
-    m_col = repetition_metrics(F.col("text"))   # builder path
-    got = df.select(
-        "doc_id",
-        *[v.alias(f"s_{k}") for k, v in m_sql.items()],
-        *[v.alias(f"c_{k}") for k, v in m_col.items()],
-        gopher_repetition_pass("text").alias("s_pass"),
-        _gopher_pass_from(m_col).alias("c_pass"),
-    ).collect()
-    for r in got:
-        for k in m_sql:
-            assert _s.pack("d", r[f"s_{k}"]) == _s.pack("d", r[f"c_{k}"]), (
-                r["doc_id"], k, r[f"s_{k}"], r[f"c_{k}"])
-        assert r["s_pass"] == r["c_pass"], r["doc_id"]
+    def frac(xs):
+        n = len(xs)
+        return 0.0 if n <= 1 else 1.0 - float(len(set(xs))) / float(n)
+
+    def top(toks, k):
+        if len(toks) < k:
+            return 0.0
+        grams = _py_kgrams(toks, k)
+        return float(max(Counter(grams).values())) / float(len(grams))
+
+    want = {}
+    for i, t in _TEXT_ROWS:
+        toks = _py_tokens(t)
+        want[i] = {
+            "dup_word_frac": frac(toks),
+            "dup_line_frac": frac(t.split("\n")),
+            "top_bigram_frac": top(toks, 2),
+            "top_trigram_frac": top(toks, 3),
+        }
+    df = spark.createDataFrame(_TEXT_ROWS, ["doc_id", "text"])
+    for conf in _text_conf_cases(spark):
+        m = repetition_metrics("text")
+        got = df.select(
+            "doc_id",
+            *[v.alias(k) for k, v in m.items()],
+            gopher_repetition_pass("text").alias("pass"),
+            _gopher_pass_from(m).alias("pass_from"),
+        ).collect()
+        assert len(got) == len(_TEXT_ROWS)
+        for r in got:
+            w = want[r["doc_id"]]
+            for k, v in w.items():
+                assert _s.pack("d", r[k]) == _s.pack("d", v), (
+                    conf, r["doc_id"], k, r[k], v)
+            ok = (
+                w["dup_line_frac"] <= 0.30
+                and w["top_bigram_frac"] <= 0.20
+                and w["top_trigram_frac"] <= 0.18
+            )
+            assert r["pass"] == r["pass_from"] == ok, (conf, r["doc_id"])
 
 
-def test_shingle_sql_paths_match_column_paths(spark):
-    """r14: string-named columns take a parsed-SQL fast path in the
-    shingle/hash builders (the Column-API build cost 0.05–0.2 s of
-    py4j round-trips per call); a ``Column`` input keeps the general
-    builder. Both must stay exactly identical (long/string arrays —
-    exact equality), on texts exercising every branch: empty,
-    1-token, exactly-k, < k, dup-heavy, whitespace runs."""
-    from pyspark.sql import functions as F
+def test_shingle_builders_match_python_reference(spark):
+    """Shingle strings and md5-32 shingle hashes equal a Python
+    reference; positional xxhash64 shingle hashes equal literal
+    ``xxhash64(xxhash64('a'), …)`` selects (documents shorter than k
+    fold their token hashes from ``0L``). Checked under both
+    ``escapedStringLiterals`` values."""
+    import hashlib
+
+    import pytest as _pt
 
     from idr_data_pipelines_spark.llmdata.dedup import (
         md5_shingle_hashes,
@@ -801,37 +894,56 @@ def test_shingle_sql_paths_match_column_paths(spark):
         word_shingles,
     )
 
-    rows = [
-        (1, "a b a b a b"),
-        (2, "one two"),
-        (3, "single"),
-        (4, ""),
-        (5, "  spaced   out   tokens here  "),
-        (6, "x y z"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    c = F.col("text")
-    forms = {
-        "ws2": (word_shingles("text", 2), word_shingles(c, 2)),
-        "ws3": (word_shingles("text", 3), word_shingles(c, 3)),
-        "shp3": (
-            shingle_hashes_positional("text", 3),
-            shingle_hashes_positional(c, 3),
-        ),
-        "sh3": (shingle_hashes("text", 3), shingle_hashes(c, 3)),
-        "md5sh3": (md5_shingle_hashes("text", 3), md5_shingle_hashes(c, 3)),
-    }
-    got = df.select(
-        "doc_id",
-        *[v[0].alias(f"s_{k}") for k, v in forms.items()],
-        *[v[1].alias(f"c_{k}") for k, v in forms.items()],
-    ).collect()
-    for r in got:
-        for k in forms:
-            assert r[f"s_{k}"] == r[f"c_{k}"], (r["doc_id"], k)
-    # validation parity: the SQL path must reject k<1 like the builder
-    import pytest as _pt
+    def py_shingles(toks, k):
+        return [" ".join(toks)] if len(toks) < k else _distinct(_py_kgrams(toks, k))
 
+    def md5_32(s):
+        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
+
+    def xx_sql(toks, k):
+        for t in toks:
+            assert "'" not in t and "\\" not in t, t
+        hs = [f"xxhash64('{t}')" for t in toks]
+        if len(hs) < k:
+            whole = "CAST(0 AS BIGINT)"
+            for h in hs:
+                whole = f"xxhash64({whole}, {h})"
+            return f"array({whole})"
+        grams = [
+            f"xxhash64({', '.join(hs[i:i + k])})"
+            for i in range(len(hs) - k + 1)
+        ]
+        return f"array({', '.join(grams)})"
+
+    df = spark.createDataFrame(_TEXT_ROWS, ["doc_id", "text"])
+    for conf in _text_conf_cases(spark):
+        got = {
+            r["doc_id"]: r
+            for r in df.select(
+                "doc_id",
+                word_shingles("text", 2).alias("ws2"),
+                word_shingles("text", 3).alias("ws3"),
+                shingle_hashes_positional("text", 3).alias("shp3"),
+                shingle_hashes("text", 3).alias("sh3"),
+                md5_shingle_hashes("text", 3).alias("md5sh3"),
+            ).collect()
+        }
+        lit = spark.range(1).select(
+            *[
+                F.expr(xx_sql(_py_tokens(t), 3)).alias(f"r{i}")
+                for i, t in _TEXT_ROWS
+            ]
+        ).first()
+        assert sorted(got) == [i for i, _ in _TEXT_ROWS]
+        for i, t in _TEXT_ROWS:
+            toks, r = _py_tokens(t), got[i]
+            assert r["ws2"] == py_shingles(toks, 2), (conf, i)
+            assert r["ws3"] == py_shingles(toks, 3), (conf, i)
+            assert r["md5sh3"] == _distinct(
+                md5_32(s) for s in py_shingles(toks, 3)
+            ), (conf, i)
+            assert r["shp3"] == lit[f"r{i}"], (conf, i)
+            assert r["sh3"] == _distinct(lit[f"r{i}"]), (conf, i)
     for fn in (word_shingles, shingle_hashes_positional, md5_shingle_hashes):
         with _pt.raises(ValueError):
             fn("text", 0)
@@ -887,42 +999,73 @@ def test_band_struct_sql_paths_match_column_paths(spark):
                 )
 
 
-def test_sql_ref_guards(spark):
-    """r15 (r14 advice): the parsed-SQL fast path only fires for
-    simple identifiers with default literal parsing. Dotted names
-    (struct fields) must fall back to the Column builder — and still
-    resolve — and ``spark.sql.parser.escapedStringLiterals=true``
-    must disable the fast path entirely (under it the twins' regex
-    literals would silently parse differently)."""
-    from pyspark.sql import functions as F
+def test_text_builders_take_column_names(spark):
+    """The SQL-text builders take a column NAME. Each dot-separated
+    part is backtick-quoted, so a struct field (``meta.text``) and a
+    name with a space (``a b``) resolve like ``F.col`` resolves them;
+    a ``Column`` argument raises ``TypeError`` and a name containing a
+    backtick raises ``ValueError``. Output is identical on a thread
+    with no active session of its own while the session parses
+    literals with ``escapedStringLiterals=true``."""
+    import threading
 
-    from idr_data_pipelines_spark.llmdata.dedup import _sql_ref, word_shingles
+    import pytest as _pt
 
-    assert _sql_ref("text") == "`text`"
-    assert _sql_ref("meta.text") is None
-    assert _sql_ref("a b") is None
-    assert _sql_ref(F.col("text")) is None
-    # dotted struct-field name resolves via the Column-builder path
-    df = spark.createDataFrame([(1, ("x y z",))], "id int, meta struct<text:string>")
-    got = df.select(word_shingles("meta.text", 2).alias("ws")).collect()
-    assert got[0]["ws"] == ["x y", "y z"]
+    from idr_data_pipelines_spark.llmdata.dedup import (
+        md5_shingle_hashes,
+        shingle_hashes,
+        shingle_hashes_positional,
+        word_shingles,
+    )
+    from idr_data_pipelines_spark.llmdata.filters import (
+        dup_line_fraction,
+        dup_word_fraction,
+        top_ngram_fraction,
+    )
+    from idr_data_pipelines_spark.llmdata.text import (
+        winnow_fingerprints,
+        winnow_md5_fingerprints,
+    )
+
+    builders = {
+        "ws": lambda n: word_shingles(n, 2),
+        "shp": lambda n: shingle_hashes_positional(n, 3),
+        "sh": lambda n: shingle_hashes(n, 3),
+        "md5": lambda n: md5_shingle_hashes(n, 3),
+        "wn": lambda n: winnow_fingerprints(n, 2, 2),
+        "wn5": lambda n: winnow_md5_fingerprints(n, 2, 2),
+        "dw": dup_word_fraction,
+        "dl": dup_line_fraction,
+        "top": lambda n: top_ngram_fraction(n, 2),
+    }
+    texts = ["x y z", "a b\na b\tc", "Dup dup  dup"]
+    df = spark.createDataFrame(
+        [(i, t, t, (t,)) for i, t in enumerate(texts)],
+        "id int, text string, `a b` string, meta struct<text:string>",
+    )
+
+    def run(name):
+        return df.select(
+            "id", *[b(name).alias(k) for k, b in builders.items()]
+        ).orderBy("id").collect()
+
+    base = run("text")
+    assert base[0]["ws"] == ["x y", "y z"]
+    assert run("meta.text") == base
+    assert run("a b") == base
+    for k, b in builders.items():
+        with _pt.raises(TypeError):
+            b(F.col("text"))
+        for bad in ("`text`", "a`b"):
+            with _pt.raises(ValueError):
+                b(bad)
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
-        assert _sql_ref("text") is None
-        # a thread with no active session of its own must still see
-        # the session's conf (getActiveSession() is thread-local)
-        import threading
-
         seen = []
-        t = threading.Thread(target=lambda: seen.append(_sql_ref("text")))
+        t = threading.Thread(target=lambda: seen.append(run("text")))
         t.start()
         t.join()
-        assert seen == [None]
-        # operator output unchanged under the conf (Column path taken)
-        got2 = spark.createDataFrame([("a b c",)], ["text"]).select(
-            word_shingles("text", 2).alias("ws")
-        ).collect()
-        assert got2[0]["ws"] == ["a b", "b c"]
+        assert seen == [base]
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
 
