@@ -32,8 +32,8 @@ except where Python semantics are genuinely required, in which case
 Arrow-batched ``mapInPandas``/``applyInPandas`` is used.
 """
 
-from idr_data_pipelines_spark.session import get_spark, stop_spark
+from idr_data_pipelines_spark.session import get_spark
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 __version__ = "0.1.0"

@@ -26,13 +26,14 @@ from pyspark.sql import functions as F
 
 # ------------------------------------------------- materialize handles
 #
-# The three ``materialize_*`` escape hatches below (cross_doc_ngram_-
-# stats, winnow_candidate_pairs, ngram_novelty_stats) persist() an
-# INTERNAL frame the caller never receives; unpersist() on the
-# RETURNED frame does not release that block (r11 ADVICE). The
-# persisted handle therefore rides along on the returned DataFrame —
+# A lazy operator that persist()s an INTERNAL frame the caller never
+# receives (remove_duplicate_spans, the query_pred form of
+# cosine_topk_lsh_exact_bucket) cannot have that block released by
+# unpersist() on the RETURNED frame (r11 ADVICE). The persisted handle
+# therefore rides along on the returned DataFrame —
 # ``unpersist_materialized(result)`` is the engine-owned release, so a
-# long-lived session never needs spark.catalog.clearCache().
+# long-lived session never needs spark.catalog.clearCache(). Eager
+# operators release their marks themselves (``_finish``).
 
 _MATERIALIZED_ATTR = "_idr_materialized"
 
@@ -70,11 +71,10 @@ def carry_materialized(result: DataFrame, *sources: DataFrame) -> DataFrame:
 
 
 def unpersist_materialized(df: DataFrame, blocking: bool = False) -> int:
-    """Release every internal block a ``materialize_*`` flag pinned
-    for ``df`` (no-op for frames built without the flag). Call after
-    the consuming action — the persist is lazy, so releasing before
-    any action simply costs the refund. Returns the number of handles
-    released. Idempotent."""
+    """Release every internal block that rides on ``df`` (no-op for
+    frames that carry none). Call after the consuming action — the
+    persist is lazy, so releasing before any action simply costs the
+    refund. Returns the number of handles released. Idempotent."""
     frames = getattr(df, _MATERIALIZED_ATTR, [])
     for f in frames:
         f.unpersist(blocking)
@@ -286,10 +286,14 @@ def word_shingles(col: str, k: int = 3) -> Column:
 _MASK32 = (1 << 32) - 1
 
 
-def _token_hashes_sql(name: str) -> str:
-    """SQL text of the per-token xxhash64 array (default seed 42, the
-    seed of ``F.xxhash64``)."""
-    return f"transform({_tokens_sql(name)}, __w -> xxhash64(__w))"
+def _token_hashes_sql(name: str, token_hash: str = "xxhash64({})") -> str:
+    """SQL text of the per-token hash array; ``token_hash`` is the SQL
+    template of one token's hash (``{}`` is the token). The default is
+    xxhash64 with seed 42, the seed of ``F.xxhash64``."""
+    return (
+        f"transform({_tokens_sql(name)}, "
+        f"__w -> {token_hash.format('__w')})"
+    )
 
 
 def shingle_hashes_positional(text_col: str, k: int = 3) -> Column:
@@ -790,16 +794,11 @@ def _verify(
     return result, held
 
 
-def _finish(
-    result: DataFrame, held: list[DataFrame], materialize: bool
-) -> DataFrame:
-    """``materialize=True``: compute ``result`` once via
-    ``localCheckpoint(eager=True)`` and release the ``held`` persist
-    marks. ``materialize=False``: the lazy plan, with the marks riding
-    on it — release them after the consuming action with
-    ``unpersist_materialized(result)``."""
-    if not materialize:
-        return _attach_materialized(result, *held)
+def _finish(result: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """Compute ``result`` once via ``localCheckpoint(eager=True)`` and
+    release the ``held`` persist marks — the eviction policy of every
+    eager pair operator, so the caller gets a frame that pins nothing
+    but its own checkpoint."""
     try:
         return result.localCheckpoint(eager=True)
     finally:
@@ -816,7 +815,6 @@ def _lsh_pairs(
     bands: int,
     shingle_k: int,
     jaccard_threshold: float | None,
-    materialize: bool,
 ) -> DataFrame:
     """(id_a, id_b, ``fam.jaccard_col``) near-dup pairs of one frame:
     signatures → band table → per-bucket pair expansion → verify."""
@@ -826,7 +824,7 @@ def _lsh_pairs(
     )
     if jaccard_threshold is None:
         result = pairs.withColumn(fam.jaccard_col, F.lit(None).cast("double"))
-        return _finish(result, [], materialize)
+        return _finish(result, [])
     # pairs feeds both the candidate-id semi-join and the verify join:
     # persist (lazy — computed once inside the final materializing job,
     # no extra blocking job; an eager checkpoint here measured +0.4 s
@@ -835,7 +833,7 @@ def _lsh_pairs(
     result, held = _verify(
         fam, pairs, df, id_col, text_col, shingle_k, jaccard_threshold
     )
-    return _finish(result, [pairs, *held], materialize)
+    return _finish(result, [pairs, *held])
 
 
 def minhash_lsh_pairs(
@@ -846,7 +844,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     shingle_k: int = 3,
     jaccard_threshold: float | None = 0.8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH over
     xxhash64 shingle hashes, optionally verified with exact
@@ -878,17 +875,12 @@ def minhash_lsh_pairs(
     ``jaccard_threshold`` is None, candidates are returned unverified
     with jaccard = null.
 
-    With ``materialize=True`` (default) the result is computed once
-    via ``localCheckpoint(eager=True)`` and the internal caches are
-    freed before returning. ``materialize=False`` keeps a lazy plan
-    with ``persist()`` marks; the persisted handles ride on the
-    returned frame — release them after the consuming action with
-    ``unpersist_materialized(result)`` (plain ``result.unpersist()``
-    would not free the internal blocks).
+    The result is computed once via ``localCheckpoint(eager=True)``
+    and the internal caches are freed before returning (``_finish``).
     """
     return _lsh_pairs(
         _XXHASH64, df, id_col, text_col, num_perm, bands, shingle_k,
-        jaccard_threshold, materialize,
+        jaccard_threshold,
     )
 
 
@@ -901,7 +893,6 @@ def minhash_md5_incremental_pairs(
     bands: int = 4,
     shingle_k: int = 3,
     jaccard_threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup: candidate pairs between a new ``batch``
     and an existing ``corpus`` via the LSH band index — the near-dup
@@ -916,16 +907,9 @@ def minhash_md5_incremental_pairs(
     expansion swapped for one batch ⋈ corpus band equi-join
     (``_band_join``); each verify side shingles only its own
     colliding docs. Callers must pass disjoint id sets (a shared id
-    would pair with itself on every band).
-
-    ``materialize`` mirrors ``minhash_lsh_pairs``: True (default)
-    eagerly computes the probe once via ``localCheckpoint`` and frees
-    the pair cache; False keeps the fully LAZY plan with ``persist()``
-    marks so plan-only sweeps (the registry lint gate) inspect the
-    band-join chain instead of an opaque post-checkpoint LogicalRDD —
-    and merely CONSTRUCTING the query runs zero jobs (ADVICE r08).
-    Lazy callers release the riding handles with
-    ``unpersist_materialized(result)`` after the consuming action.
+    would pair with itself on every band). Like ``minhash_lsh_pairs``,
+    the probe is computed once via ``localCheckpoint`` and the pair
+    cache is freed before returning.
     """
     b_band, c_band = (
         _bands(
@@ -941,7 +925,7 @@ def minhash_md5_incremental_pairs(
         _MD5, pairs, batch, id_col, text_col, shingle_k, jaccard_threshold,
         cols=("id_new", "id_old"), docs_b=corpus,
     )
-    return _finish(result, [pairs, *held], materialize)
+    return _finish(result, [pairs, *held])
 
 
 def minhash_md5_lsh_pairs(
@@ -979,7 +963,7 @@ def minhash_md5_lsh_pairs(
     """
     return _lsh_pairs(
         _MD5, df, id_col, text_col, num_perm, bands, shingle_k,
-        jaccard_threshold, True,
+        jaccard_threshold,
     )
 
 
@@ -992,7 +976,6 @@ def minhash_md5_split_probe(
     bands: int = 4,
     shingle_k: int = 3,
     jaccard_threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """``minhash_md5_incremental_pairs`` for the case where batch and
     corpus are complementary SLICES of one frame (train/val splits,
@@ -1027,7 +1010,7 @@ def minhash_md5_split_probe(
         _MD5, pairs, df, id_col, text_col, shingle_k, jaccard_threshold,
         cols=("id_new", "id_old"),
     )
-    return _finish(result, [all_bands, pairs, *held], materialize)
+    return _finish(result, [all_bands, pairs, *held])
 
 
 def minhash_md5_estimate_pairs(
@@ -1094,35 +1077,71 @@ def minhash_md5_estimate_pairs(
             F.round(F.abs(est - exact), 6).alias("abs_err_r"),
         )
     )
-    return _finish(result, [pairs, sigs, sh], True)
+    return _finish(result, [pairs, sigs, sh])
 
 
 # -------------------------------------------------------------- SimHash
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, simhash long) — 64-bit SimHash of the whitespace-token
-    multiset.
+@dataclass(frozen=True)
+class _SimHashFamily:
+    """The parts of SimHash that differ between its two token-hash
+    families; the tokenizer, the vote kernel and the sign pack are
+    written once (``_simhash``).
 
-    Tokens are hashed JVM-side (xxhash64); the 64-bit ±1 vote
-    accumulation is vectorized in numpy via mapInPandas — unpackbits
-    over the flattened token-hash bytes (little-endian: bit i ==
-    ``getbit(h, i)``), per-document segment sums (add.reduceat), then
-    packbits of the sign vector (bit set where the +1 votes win) back
-    to one two's-complement int64. Catalyst would evaluate the same
-    64-lambda fold interpreted, ~10× slower. Null text yields a null
-    simhash.
-    """
+    - ``token_hash``: SQL template of one token's hash (``{}`` is the
+      token), a long;
+    - ``bit_dtype`` / ``bitorder``: the numpy dtype whose bytes hold a
+      token hash and the order ``np.unpackbits`` reads each byte's
+      bits in. Vote column b counts bit b of that reading, and bit b
+      of the fingerprint (LSB-first) is that column's majority; the
+      width is the dtype's bit width;
+    - ``out_col``: the fingerprint column's name."""
+
+    token_hash: str
+    bit_dtype: str
+    bitorder: str
+    out_col: str
+
+
+# production: 64-bit xxhash64 token hashes; vote column j is
+# getbit(h, j) (little-endian bytes, LSB-first)
+_SIMHASH_XXHASH64 = _SimHashFamily(
+    token_hash="xxhash64({})",
+    bit_dtype="<i8",
+    bitorder="little",
+    out_col="simhash",
+)
+# engine-portable: md5-32 token hashes (< 2^32); vote column b is the
+# b-th bit of the 8 hex characters read MSB-first (big-endian bytes)
+_SIMHASH_MD5 = _SimHashFamily(
+    token_hash=_md5_hash32_sql("{}"),
+    bit_dtype=">u4",
+    bitorder="big",
+    out_col="simhash32",
+)
+
+
+def _simhash(
+    fam: _SimHashFamily, df: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """(id, ``fam.out_col``) — the one SimHash kernel. Tokens are
+    hashed JVM-side; the ±1 vote accumulation is vectorized in numpy
+    via mapInPandas — unpackbits over the flattened token-hash bytes,
+    per-document segment sums (add.reduceat), then packbits of the
+    sign vector (bit set where the +1 votes win; a tie yields 0) back
+    to one int64. Catalyst would evaluate the same per-bit lambda fold
+    interpreted, ~10× slower. Null text yields a null fingerprint;
+    empty-after-trim text hashes the single empty-string token."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
+    dtype = np.dtype(fam.bit_dtype)
+    width = dtype.itemsize * 8
+
     def compute(batches):
         for pdf in batches:
-            # null text → null token array → null simhash
+            # null text → null token array → null fingerprint
             raw = pdf["__th"].tolist()
             th_list = [t for t in raw if t is not None and len(t)]
             out = np.empty(len(th_list), dtype=np.int64)
@@ -1132,19 +1151,21 @@ def simhash_signatures(
                 )
                 flat = np.concatenate(
                     [np.asarray(t, dtype=np.int64) for t in th_list]
-                )
-                # bit j of each token hash, LSB-first == getbit(h, j)
+                ).astype(dtype, copy=False)
                 bits = np.unpackbits(
-                    flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
+                    flat.view(np.uint8).reshape(-1, dtype.itemsize),
+                    axis=1,
+                    bitorder=fam.bitorder,
                 ).astype(np.int32)
                 offs = np.zeros(len(th_list), dtype=np.int64)
                 np.cumsum(lens[:-1], out=offs[1:])
-                counts = np.add.reduceat(bits, offs, axis=0)  # (docs, 64)
+                counts = np.add.reduceat(bits, offs, axis=0)  # (docs, width)
                 # sign vote: bit set where count(1) > count(-1) ⇔ 2*ones > n
-                sign = (2 * counts > lens[:, None]).astype(np.uint8)
+                sign = np.zeros((len(th_list), 64), dtype=np.uint8)
+                sign[:, :width] = 2 * counts > lens[:, None]
                 out = (
                     np.packbits(sign, axis=1, bitorder="little")
-                    .view(np.int64)
+                    .view("<i8")
                     .ravel()
                 )
             vals = iter(out)
@@ -1152,7 +1173,7 @@ def simhash_signatures(
                 None if (t is None or not len(t)) else next(vals) for t in raw
             ]
             yield pd.DataFrame(
-                {"id": pdf["id"], "simhash": pd.array(full, dtype="Int64")}
+                {"id": pdf["id"], fam.out_col: pd.array(full, dtype="Int64")}
             )
 
     # AQE-safe probe (r09 review: this site still used the raw
@@ -1164,9 +1185,8 @@ def simhash_signatures(
     #
     # Spread the RAW rows, then project (r14 s6, as in
     # minhash_signatures): repartitioning the projected frame left the
-    # tokenize+xxhash64 projection upstream of the exchange, on the
-    # scan's 1–2 tasks. Values are per-row and partitioning-
-    # independent.
+    # tokenize+hash projection upstream of the exchange, on the scan's
+    # 1–2 tasks. Values are per-row and partitioning-independent.
     n_scan = _scan_partitions_or_none(df)
     target = df.sparkSession.sparkContext.defaultParallelism
     base = df
@@ -1174,15 +1194,29 @@ def simhash_signatures(
         base = df.repartition(target)
     prepped = base.select(
         F.col(id_col).alias("id"),
-        F.expr(_token_hashes_sql(text_col)).alias("__th"),
+        F.expr(_token_hashes_sql(text_col, fam.token_hash)).alias("__th"),
     )
     out_schema = StructType(
         [
             StructField("id", df.schema[id_col].dataType),
-            StructField("simhash", LongType()),
+            StructField(fam.out_col, LongType()),
         ]
     )
     return prepped.mapInPandas(compute, out_schema)
+
+
+def simhash_signatures(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(id, simhash long) — 64-bit SimHash of the whitespace-token
+    multiset, over xxhash64 token hashes: bit i of the fingerprint is
+    the majority of ``getbit(h, i)`` over the tokens, packed into one
+    two's-complement int64 (``_simhash`` is the kernel). Null text
+    yields a null simhash.
+    """
+    return _simhash(_SIMHASH_XXHASH64, df, id_col, text_col)
 
 
 def simhash32_md5_signatures(
@@ -1198,63 +1232,18 @@ def simhash32_md5_signatures(
     oracle replays bit-for-bit (xxhash64 over strings has no portable
     SQL form; that's why ``simhash_signatures`` is rows-only).
 
-    Same execution shape as the xxhash64 Arrow path: tokens split
-    JVM-side, md5+unpackbits+votes vectorized per Arrow batch, no
-    shuffle. Production dedup should prefer ``simhash_signatures``
-    (xxhash64 is ~5× cheaper than md5 per token); this variant exists
-    for cross-engine verifiability and engine-migration parity
-    testing. Conventions an oracle must mirror: bits are indexed in
-    hex-character order MSB-first (bit b lives in hex char b//4,
-    position 3-b%4), a tied vote (even token multiset, zero sum)
-    yields bit 0, empty-after-trim text hashes the single empty-string
-    token, and null text yields a null fingerprint.
+    Same kernel as ``simhash_signatures`` (``_simhash``); only the
+    token hash and the bit order differ. Production dedup should
+    prefer ``simhash_signatures`` (xxhash64 is ~5× cheaper than md5
+    per token); this variant exists for cross-engine verifiability
+    and engine-migration parity testing. Conventions an oracle must
+    mirror: bits are indexed in hex-character order MSB-first (bit b
+    lives in hex char b//4, position 3-b%4), a tied vote (even token
+    multiset, zero sum) yields bit 0, empty-after-trim text hashes the
+    single empty-string token, and null text yields a null
+    fingerprint.
     """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    def compute(batches):
-        for pdf in batches:
-            out = []
-            for toks in pdf["__toks"]:
-                if toks is None:
-                    out.append(None)
-                    continue
-                digs = np.frombuffer(
-                    b"".join(
-                        hashlib.md5(t.encode("utf-8")).digest()[:4]
-                        for t in toks
-                    ),
-                    dtype=np.uint8,
-                ).reshape(-1, 4)
-                bits = np.unpackbits(digs, axis=1, bitorder="big").astype(
-                    np.int32
-                )  # (n_tokens, 32), bit order == hex-char MSB-first
-                votes = (2 * bits.sum(axis=0)) - len(toks)
-                fp = int(
-                    (
-                        (votes > 0).astype(np.int64)
-                        << np.arange(32, dtype=np.int64)
-                    ).sum()
-                )
-                out.append(fp)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "simhash32": pd.array(out, dtype="Int64")}
-            )
-
-    prepped = df.select(
-        F.col(id_col).alias("id"),
-        _tokens(text_col).alias("__toks"),
-    )
-    schema = StructType(
-        [
-            StructField("id", df.schema[id_col].dataType),
-            StructField("simhash32", LongType()),
-        ]
-    )
-    return prepped.mapInPandas(compute, schema)
+    return _simhash(_SIMHASH_MD5, df, id_col, text_col)
 
 
 def simhash_near_dup_pairs(
@@ -1262,17 +1251,14 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance ≤ max_hamming.
 
     Pigeonhole banding: split 64 bits into ``max_hamming + 1`` chunks —
     any pair within distance k must agree exactly on ≥1 chunk. Join on
-    (chunk_idx, chunk_value), then verify with bit_count(xor).
-
-    ``materialize=True`` (default) eagerly computes the sparse pair set
-    (``localCheckpoint``) and releases the persisted chunk table — see
-    ``minhash_lsh_pairs`` for the cache-hygiene rationale.
+    (chunk_idx, chunk_value), then verify with bit_count(xor). The
+    sparse pair set is computed eagerly (``localCheckpoint``) and the
+    persisted chunk table released before returning.
     """
     n_chunks = max_hamming + 1
     if not 1 <= n_chunks <= 64:
@@ -1329,7 +1315,7 @@ def simhash_near_dup_pairs(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    return _finish(result, [chunks], materialize)
+    return _finish(result, [chunks])
 
 
 # ------------------------------------------------------ n-gram Jaccard
@@ -1690,7 +1676,6 @@ def cross_doc_ngram_stats(
     k: int = 5,
     min_docs: int = 2,
     flag_frac: float = 0.5,
-    materialize_grams: bool = False,
 ) -> DataFrame:
     """Cross-document repeated-n-gram analysis — the bucketed
     approximation of exact-substring dedup (Lee et al. 2022,
@@ -1727,32 +1712,16 @@ def cross_doc_ngram_stats(
     ~2× local tax (shingle chain evaluated on BOTH branches — the
     partial-agg below the freq exchange makes the two exchanges
     non-identical, so Catalyst cannot reuse one) is the insurance
-    premium; ``materialize_grams`` below refunds it where its terms
-    are acceptable.
+    premium. The gram frame is not cached: it is corpus×k-fan-out
+    sized, and resident cache at that scale is a capacity decision
+    (a lazy persist measured ~1.7× faster at sf0.1 and 10×,
+    BENCH_SCALE r11, and may return as the only path once an A/B
+    backs it).
     shared_frac is an IEEE double ratio of two ints, so the flag
-    threshold replays exactly in SQL.
-
-    ``materialize_grams=True`` (r11, VERDICT r10 item 6) marks the
-    exploded gram frame with a LAZY ``persist()`` so both join
-    branches read one in-memory materialization instead of
-    re-evaluating the shingle chain — the same mechanism as
-    ``minhash_lsh_pairs``' pair/shingle caches. Interleaved
-    measurement (BENCH_SCALE r11): ~1.7× faster at sf0.1
-    (8.4–9.1 s → 4.5–5.9 s) AND at 10× (76–92 s → 44–62 s); lazy
-    persist captured the full win of an eager localCheckpoint
-    (4.5–5.5 s vs 4.3–5.2 s) with none of its costs — no plan-time
-    jobs, lineage intact (an evicted/preempted block recomputes).
-    The default stays False for the one cost that remains: the gram
-    frame is corpus×k-fan-out sized, and resident cache at that scale
-    is a deliberate capacity decision, not a default. The persisted
-    handle rides on the returned frame — release it after the
-    consuming action with ``unpersist_materialized(result)`` (plain
-    ``result.unpersist()`` would NOT free the internal block)."""
+    threshold replays exactly in SQL."""
     grams = docs.filter(F.col(text_col).isNotNull()).select(
         id_col, F.explode(word_shingles(text_col, k)).alias("gram")
     )
-    if materialize_grams:
-        grams = grams.persist()
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("doc_freq"))
     per_doc = (
         grams.join(freq, "gram")
@@ -1765,15 +1734,12 @@ def cross_doc_ngram_stats(
         )
     )
     frac = F.col("n_shared") / F.col("n_grams")
-    result = per_doc.withColumns(
+    return per_doc.withColumns(
         {
             "shared_frac": F.round(frac, 6),
             "flagged": frac >= F.lit(flag_frac),
         }
     )
-    if materialize_grams:
-        result = _attach_materialized(result, grams)
-    return result
 
 
 def winnow_candidate_pairs(
@@ -1784,7 +1750,6 @@ def winnow_candidate_pairs(
     window: int = 4,
     min_shared: int = 2,
     max_fp_freq: int = 10,
-    materialize_fps: bool = False,
 ) -> DataFrame:
     """MOSS-style near-dup candidate pairs (Schleimer et al.,
     SIGMOD'03): document pairs sharing ≥ ``min_shared`` winnowed
@@ -1805,18 +1770,14 @@ def winnow_candidate_pairs(
     The fingerprint chain feeds FOUR plan branches (the frequency
     aggregate, the anti-join probe, and both sides of the pair
     self-join), so Catalyst re-evaluates the winnowing kernel up to
-    4x. ``materialize_fps`` marks the (id, fp) frame with a lazy
-    ``persist()`` so every branch scans one materialization — the
-    same mechanism, measured win, and residual cache-residency trade
-    as ``cross_doc_ngram_stats.materialize_grams``."""
+    4x — the same recompute-over-cache trade as
+    ``cross_doc_ngram_stats``."""
     from idr_data_pipelines_spark.llmdata.text import winnow_md5_fingerprints
 
     fps = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         F.explode(winnow_md5_fingerprints(text_col, k, window)).alias("fp"),
     )
-    if materialize_fps:
-        fps = fps.persist()
     # aggregate + anti-join, not COUNT OVER (PARTITION BY fp) (r10
     # review: window partitions get no AQE skew splitting, so the
     # boilerplate fingerprints this filter exists to remove would
@@ -1831,7 +1792,7 @@ def winnow_candidate_pairs(
     rare = fps.join(common, "fp", "anti")
     left = rare.select(F.col("id").alias("id_a"), "fp")
     right = rare.select(F.col("id").alias("id_b"), F.col("fp").alias("fp_b"))
-    result = (
+    return (
         left.join(
             right,
             (F.col("fp") == F.col("fp_b")) & (F.col("id_a") < F.col("id_b")),
@@ -1840,9 +1801,6 @@ def winnow_candidate_pairs(
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    if materialize_fps:
-        result = _attach_materialized(result, fps)
-    return result
 
 
 def ngram_containment_pairs(
@@ -1947,7 +1905,6 @@ def ngram_novelty_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    materialize_grams: bool = False,
 ) -> DataFrame:
     """Per-document n-gram NOVELTY against everything that came
     before it in corpus order (doc_id as ingest time): the fraction
@@ -1965,16 +1922,11 @@ def ngram_novelty_stats(
     form splits), at the same measured ~2× shingle-evaluation tax
     documented on ``cross_doc_ngram_stats``. All counts are integers;
     the ratio is one IEEE divide, rounded — partition-invariant by
-    construction. ``materialize_grams`` refunds the double-eval tax
-    under the same terms (lazy persist, same measured ~1.7x win
-    shape) as ``cross_doc_ngram_stats`` — see its docstring for the
-    mechanism and why the default stays False (cache residency of a
-    corpus-sized gram frame)."""
+    construction. The gram frame is recomputed, not cached, for the
+    reason ``cross_doc_ngram_stats`` gives."""
     grams = docs.filter(F.col(text_col).isNotNull()).select(
         id_col, F.explode(word_shingles(text_col, k)).alias("gram")
     )
-    if materialize_grams:
-        grams = grams.persist()
     firsts = grams.groupBy("gram").agg(F.min(id_col).alias("first_doc"))
     per_doc = (
         grams.join(firsts, "gram")
@@ -1986,15 +1938,12 @@ def ngram_novelty_stats(
             ).alias("n_novel"),
         )
     )
-    result = per_doc.select(
+    return per_doc.select(
         id_col,
         "n_grams",
         "n_novel",
         F.round(F.col("n_novel") / F.col("n_grams"), 6).alias("novelty_r"),
     )
-    if materialize_grams:
-        result = _attach_materialized(result, grams)
-    return result
 
 
 def remove_duplicate_spans(

@@ -148,21 +148,6 @@ def gopher_repetition_pass(
     )
 
 
-def add_repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append every repetition metric plus the Gopher pass flag. The
-    flag compares the APPENDED columns (r10 review: building it from
-    fresh expressions ran the whole tokenize + n-gram + array_sort
-    machinery twice per row — bigram and trigram each — in the same
-    projection)."""
-    out = df.withColumns(repetition_metrics(text_col))
-    return out.withColumn(
-        "gopher_rep_pass",
-        _gopher_pass_from({k: F.col(k) for k in (
-            "dup_line_frac", "top_bigram_frac", "top_trigram_frac"
-        )}),
-    )
-
-
 def score_buckets(
     df: DataFrame,
     score_col: str,

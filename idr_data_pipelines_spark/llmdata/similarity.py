@@ -786,18 +786,6 @@ def fixed_seed_centroid_rows(
     return cent_rows
 
 
-def _lit_vec(v: list) -> Column:
-    """Constant double-array literal built as ONE parsed SQL
-    expression: per-element ``F.lit`` costs a py4j round-trip per
-    component, which at (n_centroids × dim) literals per build puts
-    the DRIVER in the hot path (the same pathology fixed in
-    ``pq_assign_fixed``). ``repr(float)`` is shortest-round-trip, so
-    the parsed doubles are bit-identical to the Python values."""
-    return F.expr(
-        "array({})".format(", ".join(f"{float(x)!r}D" for x in v))
-    )
-
-
 def _py_norm(v: list) -> float:
     """Driver-side mirror of ``norm``: the same sequential
     acc + x*x fold then sqrt, in IEEE doubles — bit-identical to the
@@ -1020,7 +1008,6 @@ def semdedup_prune(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     threshold: float = 0.95,
-    materialize: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space, then inside each cluster drop every vector that
@@ -1037,14 +1024,14 @@ def semdedup_prune(
     and therefore the kept set — replays exactly in SQL.
 
     The assignment table is referenced three times (both self-join
-    sides + the final anti-join); ``materialize=True`` (default)
-    computes it once via ``localCheckpoint(eager=True)`` instead of
-    re-running the 16-centroid argmax per reference — at cluster
-    scale the equivalent is writing the assignment out bucketed by
+    sides + the final anti-join); it is computed once via
+    ``localCheckpoint(eager=True)`` instead of re-running the
+    16-centroid argmax per reference — at cluster scale the
+    equivalent is writing the assignment out bucketed by
     ``cluster_id`` once and reading it back."""
-    a = assign_fixed_clusters(corpus, id_col, vec_col, n_clusters)
-    if materialize:
-        a = a.localCheckpoint(eager=True)
+    a = assign_fixed_clusters(
+        corpus, id_col, vec_col, n_clusters
+    ).localCheckpoint(eager=True)
     left = a.select(
         F.col("id").alias("i"),
         F.col("vec").alias("ivec"),

@@ -32,7 +32,6 @@ from idr_data_pipelines_spark.operators.joins import (
     join_inner_dim_cast,
     join_left_fact,
     join_anti,
-    join_on_keys,
     join_asof,
     join_bloom_prefilter,
     join_range,
@@ -71,7 +70,6 @@ __all__ = [
     "join_left_fact",
     "join_anti",
     "join_bloom_prefilter",
-    "join_on_keys",
     "join_asof",
     "join_fuzzy_blocked",
     "scd1_upsert",

@@ -55,16 +55,6 @@ def join_left_fact(
     return left.join(right, cond, "left")
 
 
-def join_on_keys(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join on shared column names (USING-style, keys emitted once)."""
-    return left.join(right, keys, how)
-
-
 def join_semi(
     left: DataFrame,
     right: DataFrame,

@@ -11,10 +11,10 @@ Spark-first redesign: a ``Pipeline`` is an ordered list of named
 By default nothing materializes between stages — the whole chain is
 ONE Catalyst plan, so predicate pushdown / column pruning / join
 reordering work across stage boundaries (impossible in the reference,
-where each stage round-trips a table). Per-stage materialization
-(``materialize="parquet"|"table"``) is an opt-in parity/debug mode;
-each stage then writes-then-swaps, which also reproduces the
-reference's safe self-overwrite pattern (SURVEY.md §2.11).
+where each stage round-trips a table). Passing ``workdir`` is the
+opt-in parity/debug mode: each stage then writes parquet and reads it
+back, which also reproduces the reference's safe self-overwrite
+pattern (SURVEY.md §2.11).
 
 ``PipelineRunner`` executes a set of pipelines in dependency order
 (the ExternalTaskSensor analogue), with per-pipeline retries and a
@@ -86,7 +86,6 @@ class Pipeline:
     def build(
         self,
         spark,
-        materialize: str | None = None,
         workdir: str | None = None,
         lint: bool = False,
         max_shuffles: int | None = None,
@@ -94,23 +93,24 @@ class Pipeline:
     ) -> DataFrame:
         """Compose all stages into one lazy DataFrame.
 
-        ``materialize="parquet"`` checkpoints each stage under
-        ``workdir/<pipeline>/<stage>`` (write-then-swap read-back) —
-        the WRITE_TRUNCATE parity mode; default is fully lazy.
+        With ``workdir`` set, each stage is written to
+        ``workdir/<pipeline>/<stage>`` as parquet and read back
+        (write-then-swap) — the WRITE_TRUNCATE parity mode; without
+        it the plan stays fully lazy.
 
         ``lint=True`` runs the physical-plan linter on the composed
         plan before returning — a cartesian product or row-at-a-time
         Python UDF introduced by any stage fails the build here, at
         author time, instead of on the cluster at 2am
         (``plans.lint.assert_scalable``; ``max_shuffles`` adds a
-        shuffle budget). In materialize mode each stage's plan is
-        linted BEFORE its write executes (r10 review: the
-        write-then-swap read-back replaces the plan with a bare
-        parquet/table scan, so the final-frame lint alone would both
-        miss every stage's anti-patterns AND run only after the
-        cluster had already executed them); ``max_shuffles`` still
-        applies to the composed final frame only, since per-stage
-        plans never see the whole budget.
+        shuffle budget). In parity mode each stage's plan is linted
+        BEFORE its write executes (r10 review: the write-then-swap
+        read-back replaces the plan with a bare parquet scan, so the
+        final-frame lint alone would both miss every stage's
+        anti-patterns AND run only after the cluster had already
+        executed them); ``max_shuffles`` still applies to the composed
+        final frame only, since per-stage plans never see the whole
+        budget.
 
         ``observe=True`` attaches a ``CollectMetrics`` row counter to
         every stage boundary (Spark's Observation API): per-stage row
@@ -133,21 +133,13 @@ class Pipeline:
                 obs = Observation(f"{self.name}.{st.name}")
                 df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
                 self._observations[st.name] = obs
-            if materialize == "parquet":
-                if workdir is None:
-                    raise ValueError("workdir required for materialize='parquet'")
+            if workdir is not None:
                 if lint:
                     # gate BEFORE the write executes this stage's plan
                     assert_scalable(df)
                 path = f"{workdir}/{self.name}/{st.name}"
                 df.write.mode("overwrite").parquet(path)
                 df = spark.read.parquet(path)
-            elif materialize == "table":
-                tbl = f"{self.name}__{st.name}"
-                if lint:
-                    assert_scalable(df)
-                df.write.mode("overwrite").saveAsTable(tbl)
-                df = spark.table(tbl)
         if lint:
             assert_scalable(df, max_shuffles=max_shuffles)
         return df

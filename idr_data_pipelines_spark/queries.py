@@ -195,9 +195,11 @@ def _ab_parity(user_col: str = "user_id") -> F.Column:
 
 def _toks(col: str = "text") -> F.Column:
     """The module's canonical whitespace tokenizer, ``dedup._tokens`` —
-    split(lower(trim(text)), \\s+). Every oracle that tokenizes
-    mirrors it as ``regexp_split_to_array(lower(trim(text)), '\\s+')``;
-    change BOTH or none."""
+    split(lower(trim(text)), \\s+) with Java's ``\\s``. Every oracle
+    that tokenizes mirrors it as
+    ``regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')``:
+    RE2's ``\\s`` has no VT, so the oracles spell Java's class out.
+    Change BOTH or none."""
     return _tokens(col)
 
 
@@ -8730,16 +8732,17 @@ def _int_lsh_bucket_sql(col: str, dim: int = 64, n_planes: int = 6,
 
 _SHINGLES_SQL = """
     list_distinct(list_transform(
-        range(0, greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')) - 2, 0)),
-        i -> array_to_string(regexp_split_to_array(lower(trim(text)), '\\s+')[i+1:i+3], ' ')
+        range(0, greatest(len(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) - 2, 0)),
+        i -> array_to_string(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')[i+1:i+3], ' ')
     ))
 """
 
 def _md5_shingle_hashes_sql(k: int) -> str:
     """Distinct word-k-shingle md5-32 hashes as a DuckDB list expr —
     mirrors ``llmdata.dedup.md5_shingle_hashes`` exactly: tokens =
-    split(lower(trim(text)), \\s+); docs shorter than k tokens yield
-    their whole text as one shingle; hash = first 32 bits of md5."""
+    split(lower(trim(text)), [\\t\\n\\v\\f\\r ]+); docs shorter than k
+    tokens yield their whole text as one shingle; hash = first 32 bits
+    of md5."""
     return f"""
         list_distinct(list_transform(
             CASE WHEN len(toks) < {k}
@@ -8799,7 +8802,7 @@ def _minhash_md5_cte_prefix(num_perm: int, bands: int, k: int) -> str:
     return f"""hs AS (
             SELECT doc_id, {_md5_shingle_hashes_sql(k)} AS hv
             FROM (SELECT doc_id,
-                         regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                         regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
                   FROM documents WHERE text IS NOT NULL)
         ), sig AS (
             SELECT doc_id, [{mins}] AS s FROM hs
@@ -8948,7 +8951,7 @@ def _winnow_md5_sql(k: int, window: int) -> str:
                        END,
                        s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS hv
             FROM (SELECT doc_id,
-                         regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                         regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
                   FROM documents WHERE text IS NOT NULL)
         )
         SELECT DISTINCT doc_id, fp FROM (
@@ -9537,7 +9540,7 @@ ORACLES: dict[str, str] = {
     "text_top_terms": """
         SELECT token, COUNT(*) AS cnt
         FROM (
-            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+            SELECT unnest(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS token
             FROM documents
             WHERE text IS NOT NULL
         )
@@ -9741,7 +9744,7 @@ ORACLES: dict[str, str] = {
     "text_token_count": """
         SELECT doc_id,
                CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
+                    ELSE len(regexp_split_to_array(trim(text), '[\\t\\n\\v\\f\\r ]+')) END AS BIGINT) AS n_tokens
         FROM documents
     """,
     # hash_bucket(key, buckets, salt) ≡ 60-bit md5 prefix mod buckets —
@@ -9768,7 +9771,7 @@ ORACLES: dict[str, str] = {
     "flagship_data_recipe": """
         WITH nums AS (SELECT CAST(i AS BIGINT) AS i FROM generate_series(1, 4096) t(i)),
         toks AS (
-            SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+            SELECT doc_id, string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS t
             FROM documents
         ), grams AS (
             SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS g
@@ -9814,7 +9817,7 @@ ORACLES: dict[str, str] = {
               AND COALESCE(bgtop.frac, 0.0) <= 0.05
               AND COALESCE(tgtop.frac, 0.0) <= 0.04
               AND (CASE WHEN length(trim(c.text)) = 0 THEN 0
-                   ELSE len(regexp_split_to_array(trim(c.text), '\\s+')) END) >= 30
+                   ELSE len(regexp_split_to_array(trim(c.text), '[\\t\\n\\v\\f\\r ]+')) END) >= 30
         ), red AS (
             SELECT doc_id,
                    regexp_replace(
@@ -9828,7 +9831,7 @@ ORACLES: dict[str, str] = {
                    lang, source, n_chars
             FROM kept
         ), fp AS (
-            SELECT *, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS f
+            SELECT *, md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g')))) AS f
             FROM red
         ), reps AS (
             SELECT f, MIN(doc_id) AS doc_id FROM fp GROUP BY f
@@ -9893,7 +9896,7 @@ ORACLES: dict[str, str] = {
     "dedup_incremental": """
         WITH docs AS (
             SELECT doc_id, source, lang, n_chars,
-                   md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+                   md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g')))) AS fp
             FROM documents WHERE text IS NOT NULL
         ), seen AS (
             SELECT DISTINCT fp FROM docs WHERE doc_id % 3 = 0
@@ -9915,7 +9918,7 @@ ORACLES: dict[str, str] = {
             SELECT doc_id, t.tok
             FROM (
                 SELECT doc_id,
-                       unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+                       unnest(string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS tok
                 FROM documents WHERE text IS NOT NULL
             ) AS t
             WHERE t.tok <> ''
@@ -10071,7 +10074,7 @@ ORACLES: dict[str, str] = {
     """,
     "text_collocations": """
         WITH words AS (
-            SELECT string_split_regex(trim(lower(text)), '\\s+') AS w
+            SELECT string_split_regex(trim(lower(text)), '[\\t\\n\\v\\f\\r ]+') AS w
             FROM documents WHERE text IS NOT NULL
         ), bg AS (
             SELECT unnest(list_transform(generate_series(1, len(w)-1),
@@ -10518,7 +10521,7 @@ ORACLES: dict[str, str] = {
     "decontaminate": """
         WITH nums AS (SELECT CAST(i AS BIGINT) AS i FROM generate_series(1, 4096) t(i)),
         toks AS (
-            SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+            SELECT doc_id, string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS t
             FROM documents
         ), grams AS (
             SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS g
@@ -10549,7 +10552,7 @@ ORACLES: dict[str, str] = {
         WITH nums AS (SELECT CAST(i AS BIGINT) AS i FROM generate_series(1, 4096) t(i)),
         toks AS (
             SELECT doc_id, text,
-                   string_split_regex(lower(trim(text)), '\\s+') AS t,
+                   string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS t,
                    string_split(text, chr(10)) AS lines
             FROM documents
         ), base AS (
@@ -10625,7 +10628,7 @@ ORACLES: dict[str, str] = {
         WITH toks AS (
             SELECT doc_id, lang,
                    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
+                        ELSE len(regexp_split_to_array(trim(text), '[\\t\\n\\v\\f\\r ]+')) END AS BIGINT) AS n_tokens
             FROM documents
         ), cum AS (
             SELECT doc_id, lang, n_tokens,
@@ -10644,7 +10647,7 @@ ORACLES: dict[str, str] = {
         SELECT doc_id,
                CAST(length(text) AS BIGINT) AS n_chars,
                CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tokens,
+                    ELSE len(regexp_split_to_array(trim(text), '[\\t\\n\\v\\f\\r ]+')) END AS BIGINT) AS n_tokens,
                CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
                    / CAST(CASE WHEN length(text) = 0 THEN 1.0 ELSE length(text) END AS DOUBLE) AS alpha_ratio,
                CAST(len(regexp_extract_all(lower(text), '\\bthe\\b'))
@@ -10652,16 +10655,16 @@ ORACLES: dict[str, str] = {
                     + len(regexp_extract_all(lower(text), '\\bof\\b'))
                     + len(regexp_extract_all(lower(text), '\\bto\\b'))
                     + len(regexp_extract_all(lower(text), '\\bis\\b')) AS DOUBLE)
-                   / CAST(CASE WHEN len(regexp_split_to_array(trim(text), '\\s+')) = 0 THEN 1.0
-                          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS DOUBLE) AS stopword_ratio
+                   / CAST(CASE WHEN len(regexp_split_to_array(trim(text), '[\\t\\n\\v\\f\\r ]+')) = 0 THEN 1.0
+                          ELSE len(regexp_split_to_array(trim(text), '[\\t\\n\\v\\f\\r ]+')) END AS DOUBLE) AS stopword_ratio
         FROM documents
     """,
     "text_fingerprint": """
-        SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+        SELECT doc_id, md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g')))) AS fp
         FROM documents
     """,
     "dedup_exact_hash": """
-        SELECT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
+        SELECT md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g')))) AS fp,
                COUNT(*) AS group_size,
                MIN(doc_id) AS representative
         FROM documents GROUP BY 1
@@ -10669,8 +10672,8 @@ ORACLES: dict[str, str] = {
     "ngram_jaccard_adjacent": f"""
         WITH sh AS (
             SELECT doc_id,
-                   CASE WHEN len(regexp_split_to_array(lower(trim(text)), '\\s+')) < 3
-                        THEN [array_to_string(regexp_split_to_array(lower(trim(text)), '\\s+'), ' ')]
+                   CASE WHEN len(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) < 3
+                        THEN [array_to_string(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+'), ' ')]
                         ELSE {_SHINGLES_SQL}
                    END AS sh
             FROM documents
@@ -10776,11 +10779,11 @@ ORACLES: dict[str, str] = {
     # md5-SimHash replay: bit b of a token's hash lives in hex char
     # b//4 (MSB-first within the nibble); votes are exact integers so
     # the sign pack agrees bit-for-bit. Same tokenizer expression as
-    # _SHINGLES_SQL (regexp_split_to_array(lower(trim(text)), '\\s+')).
+    # _SHINGLES_SQL (regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')).
     "dedup_simhash_md5": f"""
         WITH tok AS (
             SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS t
+                   unnest(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS t
             FROM documents
             WHERE text IS NOT NULL
         ), h AS (
@@ -11005,7 +11008,7 @@ ORACLES: dict[str, str] = {
     # (k=3), first occurrence by MIN(doc_id), integer rollup
     "docs_ngram_novelty": """
         WITH t AS (
-            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents WHERE text IS NOT NULL
         ), g AS (
             SELECT doc_id, unnest(
@@ -11033,7 +11036,7 @@ ORACLES: dict[str, str] = {
     "docs_dsir_weights": """
         WITH t AS (
             SELECT doc_id, lang = 'en' AS tgt,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                   regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents WHERE text IS NOT NULL
         ), g AS (
             SELECT doc_id, tgt,
@@ -11103,7 +11106,7 @@ ORACLES: dict[str, str] = {
     "docs_zipf_lexical": """
         WITH t AS (
             SELECT source, unnest(
-                regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
+                regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS tok
             FROM documents WHERE text IS NOT NULL
         ), tf AS (
             SELECT source, tok, COUNT(*) AS cnt FROM t
@@ -11374,7 +11377,7 @@ ORACLES: dict[str, str] = {
                    len(regexp_extract_all(lower(text), '\\b(?:el|la|de|que|y)\\b')) AS sc_es,
                    len(regexp_extract_all(lower(text), '\\b(?:le|la|les|de|et)\\b')) AS sc_fr,
                    len(regexp_extract_all(lower(text), '\\b(?:der|die|das|und|ist)\\b')) AS sc_de,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpe
+                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\t\\n\\v\\f\\r ]')) AS bpe
             FROM documents
         )
         SELECT doc_id,
@@ -11407,7 +11410,7 @@ ORACLES: dict[str, str] = {
     """,
     "udtf_split_sentences": """
         WITH d AS (
-            SELECT doc_id, regexp_split_to_array(text, '\\.\\s+') AS parts
+            SELECT doc_id, regexp_split_to_array(text, '\\.[\\t\\n\\v\\f\\r ]+') AS parts
             FROM documents
             WHERE text IS NOT NULL
         ),
@@ -11427,10 +11430,10 @@ ORACLES: dict[str, str] = {
         quality AS (
             SELECT doc_id, text,
                    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
+                        ELSE len(regexp_split_to_array(trim(text), '[\\t\\n\\v\\f\\r ]+')) END AS BIGINT) AS n_tokens
             FROM corpus
         )
-        SELECT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
+        SELECT md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g')))) AS fp,
                MAX(doc_id) AS doc_id,
                MAX(n_tokens) AS n_tokens,
                COUNT(*) AS n_dups
@@ -11544,7 +11547,7 @@ ORACLES: dict[str, str] = {
     # whole text as one gram; otherwise the distinct k-gram set
     "text_shared_ngrams": """
         WITH t AS (
-            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents WHERE text IS NOT NULL
         ), g AS (
             SELECT doc_id, unnest(
@@ -11572,7 +11575,7 @@ ORACLES: dict[str, str] = {
     "decontaminate_bloom": """
         WITH nums AS (SELECT CAST(i AS BIGINT) AS i FROM generate_series(1, 4096) t(i)),
         toks AS (
-            SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+            SELECT doc_id, string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS t
             FROM documents
         ), grams AS (
             SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS g
@@ -11669,9 +11672,9 @@ ORACLES: dict[str, str] = {
     "evt_dedup_stream_index": """
         SELECT doc_id, source, lang, n_chars, fp FROM (
             SELECT doc_id, source, lang, n_chars,
-                   md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
+                   md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g')))) AS fp,
                    ROW_NUMBER() OVER (
-                       PARTITION BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+                       PARTITION BY md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g'))))
                        ORDER BY doc_id
                    ) AS rn
             FROM documents WHERE text IS NOT NULL
@@ -11811,7 +11814,7 @@ ORACLES: dict[str, str] = {
             FROM rare l JOIN rare r ON l.fp = r.fp AND l.doc_id < r.doc_id
             GROUP BY 1, 2 HAVING COUNT(*) >= 2
         ), t AS (
-            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents WHERE text IS NOT NULL
         ), sh AS (
             SELECT doc_id,
@@ -11926,7 +11929,7 @@ ORACLES: dict[str, str] = {
     "text_tfidf_topterm": """
         WITH toks AS (
             SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term
+                   unnest(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS term
             FROM documents
         ), tf AS (
             SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2
@@ -11950,7 +11953,7 @@ ORACLES: dict[str, str] = {
     "text_bm25_topk": f"""
         WITH toks AS (
             SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term
+                   unnest(regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS term
             FROM documents
         ), dl AS (
             SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY 1
@@ -11989,7 +11992,7 @@ ORACLES: dict[str, str] = {
     "text_chunk_windows": f"""
         WITH t AS (
             SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                   regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents
         ), c AS (
             SELECT doc_id, toks, len(toks) AS n,
@@ -12013,7 +12016,7 @@ ORACLES: dict[str, str] = {
     "quality_logreg": """
         WITH t AS (
             SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                   regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents
         ), f AS (
             SELECT doc_id,
@@ -12308,7 +12311,7 @@ ORACLES: dict[str, str] = {
     "text_dup_chunk_ratio": """
         WITH t AS (
             SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                   regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents
         ), e AS (
             SELECT doc_id, toks,
@@ -12445,7 +12448,7 @@ ORACLES: dict[str, str] = {
     "text_rake_keywords": """
         WITH t AS (
             SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
+                   regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS ws
             FROM documents
         ), toks AS (
             SELECT doc_id, ws[i] AS w, i - 1 AS pos,
@@ -12691,7 +12694,7 @@ ORACLES["text_hashed_features"] = """
             SELECT doc_id, t.tok
             FROM (
                 SELECT doc_id,
-                       unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+                       unnest(string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS tok
                 FROM documents WHERE text IS NOT NULL
             ) AS t
             WHERE t.tok <> ''
@@ -12746,7 +12749,7 @@ ORACLES["docs_ccnet_buckets"] = """
             SELECT doc_id, t.tok
             FROM (
                 SELECT doc_id,
-                       unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+                       unnest(string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')) AS tok
                 FROM documents WHERE text IS NOT NULL
             ) AS t
             WHERE t.tok <> ''
@@ -12774,7 +12777,7 @@ ORACLES["docs_ccnet_buckets"] = """
 
 ORACLES["text_bigram_lm"] = """
         WITH toks AS (
-            SELECT list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+            SELECT list_filter(string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+'),
                                t -> t <> '') AS a
             FROM documents WHERE text IS NOT NULL
         ), pairs AS (
@@ -12826,7 +12829,7 @@ ORACLES["text_char_stats"] = """
 ORACLES["docs_gopher_rules"] = """
         WITH d AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                   list_filter(string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+'),
                                t -> t <> '') AS a
             FROM documents WHERE text IS NOT NULL
         ), m AS (
@@ -12857,7 +12860,7 @@ ORACLES["docs_gopher_rules"] = """
 ORACLES["docs_remove_dup_chunks"] = """
         WITH t AS (
             SELECT doc_id,
-                   regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                   regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS toks
             FROM documents WHERE text IS NOT NULL
         ), e AS (
             SELECT doc_id, toks,
@@ -12890,7 +12893,7 @@ ORACLES["docs_remove_dup_chunks"] = """
 ORACLES["text_perplexity_bigram"] = """
         WITH toks AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                   list_filter(string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+'),
                                t -> t <> '') AS a
             FROM documents WHERE text IS NOT NULL
         ), pairs AS (
@@ -12962,7 +12965,7 @@ ORACLES["mix_temperature"] = """
 ORACLES["text_vocab_coverage"] = """
         WITH toks AS (
             SELECT unnest(list_filter(
-                       string_split_regex(lower(trim(text)), '\\s+'),
+                       string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+'),
                        t -> t <> '')) AS tok
             FROM documents WHERE text IS NOT NULL
         ), vocab AS (
@@ -13029,7 +13032,7 @@ ORACLES["decontaminate_report"] = """
         WITH nums AS (SELECT CAST(i AS BIGINT) AS i
                       FROM generate_series(1, 4096) t(i)),
         toks AS (
-            SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+            SELECT doc_id, string_split_regex(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+') AS t
             FROM documents
         ), grams AS (
             SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS g
@@ -14259,7 +14262,7 @@ ORACLES["pack_bestfit"] = """
     WITH toks AS (
         SELECT source,
                CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END
+                    ELSE len(regexp_split_to_array(trim(text), '[\\t\\n\\v\\f\\r ]+')) END
                     AS BIGINT) AS n_tok
         FROM documents WHERE text IS NOT NULL
     )
@@ -14297,7 +14300,7 @@ ORACLES["dedup_minhash_lsh"] = """
         WHERE text IS NOT NULL AND doc_id % 10 = 0
     ), grp AS (
         SELECT COUNT(*) AS c FROM corpus
-        GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+        GROUP BY md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g'))))
     )
     SELECT CAST(COALESCE(SUM(c * (c - 1) // 2), 0) AS BIGINT)
                AS exact_dup_pairs_found,
@@ -14456,7 +14459,7 @@ ORACLES["dedup_remove_spans"] = """
         -- from the gram machinery, and the final CASEs project NULLs
         SELECT doc_id,
                CASE WHEN text IS NULL THEN NULL
-                    ELSE regexp_split_to_array(lower(trim(text)), '\\s+')
+                    ELSE regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')
                END AS t
         FROM documents
     ), pg AS (

@@ -10,8 +10,11 @@ runs on ``local[N]`` for tests and on a large cluster unchanged:
   cosmetic.
 - Arrow enabled for the few Pandas-UDF paths (llmdata.multimodal).
 - ``spark.sql.shuffle.partitions`` defaults to a small number locally;
-  on a real cluster pass e.g. ``shuffle_partitions=2 * total_cores`` or
-  rely on AQE coalescing from a higher initial value.
+  on a real cluster pass e.g. ``shuffle_partitions=2 * total_cores``.
+  Do not rely on AQE coalescing from a higher initial value: it does
+  not reach ``persist()``ed frames, which keep the conf-wide width
+  (Spark ships ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+  as ``false``), and the dedup operators persist their intermediates.
 """
 
 from __future__ import annotations
@@ -65,8 +68,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -1432,6 +1432,39 @@ def test_simhash32_md5_near_dup_property(spark):
     assert ham(got[1], got[3]) > 6
 
 
+def test_simhash32_md5_matches_python_reference(spark):
+    """The shared SimHash kernel reproduces, bit for bit, a per-token
+    Python loop: hashlib md5 of each token, the first 4 digest bytes
+    read MSB-first as vote columns, bit b set where more than half the
+    tokens have it. Run on the text-builder rows (every ASCII
+    whitespace character, the empty string) plus non-ASCII text and a
+    null."""
+    import hashlib
+
+    from idr_data_pipelines_spark.llmdata.dedup import simhash32_md5_signatures
+
+    def py_simhash32(text):
+        toks = _py_tokens(text)
+        fp = 0
+        for b in range(32):
+            ones = sum(
+                (hashlib.md5(t.encode("utf-8")).digest()[b // 8]
+                 >> (7 - b % 8)) & 1
+                for t in toks
+            )
+            if 2 * ones > len(toks):
+                fp |= 1 << b
+        return fp
+
+    rows = _TEXT_ROWS + [(13, "caf\u00e9 na\u00efve \u00a0x"), (14, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["id"]: r["simhash32"] for r in simhash32_md5_signatures(df).collect()
+    }
+    want = {i: None if t is None else py_simhash32(t) for i, t in rows}
+    assert got == want
+
+
 def test_count_min_md5_family_same_guarantees(spark):
     """The portable md5 hash family preserves the CMS guarantees
     (est >= true; exact when width clears the key space) and rejects
@@ -2778,48 +2811,19 @@ def test_sketch_invariant_flags_catch_violations(spark, sf_dir, monkeypatch):
     assert row["k_returned_ok"] == 1  # still exactly min(20, n_keys) rows
 
 
-def test_materialize_flags_are_value_identical(spark, sf_dir):
-    """The r11 materialization escape hatches (materialize_grams /
-    materialize_fps) are pure evaluation-strategy knobs — any value
-    difference would mean the checkpoint captured a different frame
-    than the branches recompute. Pin equality on the real table."""
-    from idr_data_pipelines_spark.llmdata.dedup import (
-        cross_doc_ngram_stats,
-        ngram_novelty_stats,
-        winnow_candidate_pairs,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    assert rows(cross_doc_ngram_stats(docs)) == rows(
-        cross_doc_ngram_stats(docs, materialize_grams=True)
-    )
-    assert rows(ngram_novelty_stats(docs)) == rows(
-        ngram_novelty_stats(docs, materialize_grams=True)
-    )
-    assert rows(winnow_candidate_pairs(docs)) == rows(
-        winnow_candidate_pairs(docs, materialize_fps=True)
-    )
-
-
-def test_materialize_flags_release_via_handle(spark, sf_dir):
-    """The materialize_* flags persist() an INTERNAL frame the caller
+def test_remove_duplicate_spans_releases_via_handle(spark, sf_dir):
+    """remove_duplicate_spans persist()s an INTERNAL frame the caller
     never receives (r11 ADVICE): unpersist() on the returned frame
     cannot free it, so the handle rides on the result and
     unpersist_materialized(result) is the engine-owned release. Pin
-    (a) the handle exists and is persisted after the consuming
-    action, (b) the release actually drops the block (storage level
-    reverts to NONE and the RDD leaves the persistent set), (c) the
-    call is idempotent, (d) a flag-off result releases zero handles."""
+    (a) exactly one handle rides on the result and is persisted after
+    the consuming action, (b) the release actually drops the block
+    (storage level reverts to NONE and the RDD leaves the persistent
+    set), (c) the call is idempotent."""
     from idr_data_pipelines_spark.llmdata.dedup import (
         _MATERIALIZED_ATTR,
-        cross_doc_ngram_stats,
-        ngram_novelty_stats,
+        remove_duplicate_spans,
         unpersist_materialized,
-        winnow_candidate_pairs,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -2829,38 +2833,18 @@ def test_materialize_flags_release_via_handle(spark, sf_dir):
         # java.util.Map (the scala Map on sc() is awkward over py4j)
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    for fn, kw in [
-        (cross_doc_ngram_stats, {"materialize_grams": True}),
-        (ngram_novelty_stats, {"materialize_grams": True}),
-        (winnow_candidate_pairs, {"materialize_fps": True}),
-    ]:
-        result = fn(docs, **kw)
-        result.write.format("noop").mode("overwrite").save()  # consume
-        handles = getattr(result, _MATERIALIZED_ATTR)
-        assert len(handles) == 1
-        internal = handles[0]
-        assert internal.storageLevel.useMemory, fn.__name__
-        before = n_persistent()
-        assert before > 0, "consuming action should have pinned a block"
-        assert unpersist_materialized(result, blocking=True) == 1
-        assert not internal.storageLevel.useMemory, fn.__name__
-        assert n_persistent() < before, fn.__name__
-        assert unpersist_materialized(result) == 0  # idempotent
-
-    plain = cross_doc_ngram_stats(docs)  # flag off: nothing to free
-    assert unpersist_materialized(plain) == 0
-
-    # lazy-mode twin (r12): minhash_lsh_pairs(materialize=False)
-    # leaves its pair+shingle persist marks in the plan — the same
-    # internal-block class, so the same handles ride on the result
-    from idr_data_pipelines_spark.llmdata.dedup import minhash_lsh_pairs
-
-    lazy = minhash_lsh_pairs(docs, materialize=False)
-    lazy.write.format("noop").mode("overwrite").save()
-    lazy_handles = getattr(lazy, _MATERIALIZED_ATTR)
-    assert len(lazy_handles) == 2  # pairs + candidate shingles
-    assert unpersist_materialized(lazy, blocking=True) == 2
-    assert all(not h.storageLevel.useMemory for h in lazy_handles)
+    result = remove_duplicate_spans(docs)
+    result.write.format("noop").mode("overwrite").save()  # consume
+    handles = getattr(result, _MATERIALIZED_ATTR)
+    assert len(handles) == 1
+    internal = handles[0]
+    assert internal.storageLevel.useMemory
+    before = n_persistent()
+    assert before > 0, "consuming action should have pinned a block"
+    assert unpersist_materialized(result, blocking=True) == 1
+    assert not internal.storageLevel.useMemory
+    assert n_persistent() < before
+    assert unpersist_materialized(result) == 0  # idempotent
 
 
 def test_dedup_invariant_flags_catch_violations(spark, sf_dir, monkeypatch):
@@ -2903,7 +2887,7 @@ def test_dedup_invariant_flags_catch_violations(spark, sf_dir, monkeypatch):
             WHERE text IS NOT NULL AND doc_id % 10 = 0
         ), grp AS (
             SELECT COUNT(*) AS c FROM corpus
-            GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+            GROUP BY md5(lower(trim(regexp_replace(text, '[\\t\\n\\v\\f\\r ]+', ' ', 'g'))))
         )
         SELECT CAST(COALESCE(SUM(c * (c - 1) // 2), 0) AS BIGINT) FROM grp
         """

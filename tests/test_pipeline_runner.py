@@ -81,7 +81,7 @@ def test_materialize_parquet_parity_mode(spark, tmp_path):
     p = Pipeline("mat", source=_src())
     p.stage("plus_one", lambda df: df.withColumn("v", F.col("v") + 1))
     p.stage("keep_even", lambda df: df.filter(F.col("v") % 2 == 1))
-    out = p.build(spark, materialize="parquet", workdir=str(tmp_path))
+    out = p.build(spark, workdir=str(tmp_path))
     assert out.count() == 5  # v = id*2+1 all odd
     import os
 
@@ -118,7 +118,7 @@ def test_pipeline_build_lint_gate(spark):
 
 
 def test_materialize_lint_gates_before_stage_write(spark, tmp_path):
-    """In materialize mode the lint must fire BEFORE a scale-killer
+    """In parity mode (workdir set) the lint must fire BEFORE a scale-killer
     stage's write executes (r10 review: the write-then-swap read-back
     replaced the plan with a bare parquet scan, so the final-frame
     lint both missed every stage's anti-patterns and ran only after
@@ -134,18 +134,14 @@ def test_materialize_lint_gates_before_stage_write(spark, tmp_path):
         "explode_pairs", lambda df: df.crossJoin(other)
     )
     with pytest.raises(AssertionError, match="cartesian-product"):
-        bad.build(
-            spark, materialize="parquet", workdir=str(tmp_path), lint=True
-        )
+        bad.build(spark, workdir=str(tmp_path), lint=True)
     # pre-flight: the offending stage never landed on disk
     assert not os.path.exists(tmp_path / "matbad" / "explode_pairs")
 
     good = Pipeline("matgood", source=lambda s: s.range(5)).stage(
         "double", lambda df: df.withColumn("x", F.col("id") * 2)
     )
-    out = good.build(
-        spark, materialize="parquet", workdir=str(tmp_path), lint=True
-    )
+    out = good.build(spark, workdir=str(tmp_path), lint=True)
     assert out.count() == 5
 
 
