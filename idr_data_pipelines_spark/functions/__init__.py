@@ -1,7 +1,10 @@
-"""Scalar expression layer — BigQuery-compatible helpers.
+"""Scalar expression layer — BigQuery-compatible SQL-text builders.
 
-Every helper returns a ``pyspark.sql.Column`` built from built-in
-functions (JVM-side, whole-stage codegen); no Python UDFs.
+Every expression helper takes SQL expression text and returns SQL
+text over built-in functions (no Python UDFs), so helpers compose —
+``bq_date_diff(as_of_date(d), "DateExpected", "DAY")`` — and a stage
+parses its projection once instead of building it node by node over
+py4j. ``null_normalize`` is the one DataFrame op.
 """
 
 from idr_data_pipelines_spark.functions.casts import bq_cast, safe_cast
@@ -19,6 +22,7 @@ from idr_data_pipelines_spark.functions.cases import (
     str_sentinel_decode,
 )
 from idr_data_pipelines_spark.functions.normalize import null_normalize
+from idr_data_pipelines_spark.functions.sql import sql_literal, sql_name
 
 __all__ = [
     "bq_cast",
@@ -33,4 +37,6 @@ __all__ = [
     "null_default",
     "str_sentinel_decode",
     "null_normalize",
+    "sql_literal",
+    "sql_name",
 ]

@@ -5,29 +5,27 @@ The reference's transforms are dominated by four CASE shapes
 131-144), boolean flags (dags/mmd_transforms.py:172-180,
 dags/covid_transforms.py:79-82), numeric range buckets
 (dags/hts_transforms.py:189-202, dags/vls_transforms.py:180-191) and
-null-defaulting (dags/covid_transforms.py:93-118). Each becomes a
-chained ``F.when`` — one Catalyst expression, fully codegen'd.
+null-defaulting (dags/covid_transforms.py:93-118). Each builder takes
+SQL expression text (conditions, the value to recode) and Python
+values (the THEN/ELSE results, rendered by ``sql_literal``) and
+returns one CASE as SQL text — one Catalyst expression, fully
+codegen'd.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from idr_data_pipelines_spark.functions.sql import sql_literal
 
 
 def case_map(
-    col: Column | str,
+    expr: str,
     mapping: dict[str, object],
-    default: object | Column | None = None,
+    default: object = None,
     default_to_input: bool = False,
-) -> Column:
-    """Value recode: ``CASE WHEN col = k THEN v ... END``.
+) -> str:
+    """Value recode: ``CASE expr WHEN k THEN v ... END``.
 
     ``default_to_input=True`` passes unknown values through (the
     reference's entrypoint recode keeps unmatched raw strings,
@@ -35,36 +33,29 @@ def case_map(
     rows are NULL — matching SQL CASE without ELSE.
 
     For very large recode tables prefer a broadcast mapping join; a
-    ``when``-chain of thousands of branches stresses codegen.
+    CASE of thousands of branches stresses codegen.
     """
-    c = _c(col)
-    expr: Column | None = None
-    for k, v in mapping.items():
-        cond = c == k
-        expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-    if expr is None:
+    if not mapping:
         raise ValueError("empty mapping")
+    whens = " ".join(
+        f"WHEN {sql_literal(k)} THEN {sql_literal(v)}" for k, v in mapping.items()
+    )
     if default_to_input:
-        return expr.otherwise(c)
+        return f"CASE {expr} {whens} ELSE {expr} END"
     if default is not None:
-        return expr.otherwise(default)
-    return expr
+        return f"CASE {expr} {whens} ELSE {sql_literal(default)} END"
+    return f"CASE {expr} {whens} END"
 
 
-def case_flag(
-    cond: Column,
-    if_true: object = 1,
-    if_false: object = 0,
-) -> Column:
+def case_flag(cond: str, if_true: object = 1, if_false: object = 0) -> str:
     """Boolean flag: ``CASE WHEN cond THEN a ELSE b END``."""
-    return F.when(cond, if_true).otherwise(if_false)
+    return f"CASE WHEN {cond} THEN {sql_literal(if_true)} ELSE {sql_literal(if_false)} END"
 
 
 def case_bucket(
-    col: Column | str,
-    buckets: Sequence[tuple[Column, object]],
-    default: object | None = None,
-) -> Column:
+    buckets: Sequence[tuple[str, object]],
+    default: object = None,
+) -> str:
     """Ordered condition buckets: first match wins.
 
     ``buckets`` are (condition, label) pairs evaluated top-down.
@@ -73,26 +64,26 @@ def case_bucket(
     combinations uncovered (dags/vls_transforms.py:181-185,
     SURVEY.md §2.11), and we preserve that.
     """
-    expr: Column | None = None
-    for cond, label in buckets:
-        expr = F.when(cond, label) if expr is None else expr.when(cond, label)
-    if expr is None:
+    if not buckets:
         raise ValueError("empty buckets")
-    return expr if default is None else expr.otherwise(default)
+    whens = " ".join(f"WHEN {cond} THEN {sql_literal(label)}" for cond, label in buckets)
+    if default is None:
+        return f"CASE {whens} END"
+    return f"CASE {whens} ELSE {sql_literal(default)} END"
 
 
-def null_default(col: Column | str, default: object = "Unknown") -> Column:
-    """``CASE WHEN col IS NULL THEN default ELSE col END`` ≡ COALESCE
+def null_default(expr: str, default: object = "Unknown") -> str:
+    """``CASE WHEN expr IS NULL THEN default ELSE expr END`` ≡ COALESCE
     (dags/covid_transforms.py:93-118)."""
-    return F.coalesce(_c(col), F.lit(default))
+    return f"coalesce({expr}, {sql_literal(default)})"
 
 
 def str_sentinel_decode(
-    col: Column | str,
+    expr: str,
     sentinels: dict[str, object],
     cast_to: str = "decimal(38,9)",
     strict: bool = False,
-) -> Column:
+) -> str:
     """Special-value decode then numeric cast: ``CASE WHEN col = 'LDL'
     THEN 0 ELSE CAST(col AS DECIMAL) END`` (dags/vls_transforms.py:
     187-190).
@@ -102,22 +93,17 @@ def str_sentinel_decode(
     behavior: a bad ``vl_test_result`` kills the BQ load rather than
     silently nulling a viral-load reading). ``strict=False`` is
     ``SAFE_CAST`` tolerance: unparseable → NULL (try_cast)."""
-    c = _c(col)
-    expr: Column | None = None
-    for k, v in sentinels.items():
-        cond = c == k
-        expr = F.when(cond, F.lit(v).cast(cast_to)) if expr is None else expr.when(cond, F.lit(v).cast(cast_to))
-    if expr is None:
+    if not sentinels:
         raise ValueError("empty sentinels")
-    tried = c.try_cast(cast_to)
+    whens = " ".join(
+        f"WHEN {expr} = {sql_literal(k)} THEN CAST({sql_literal(v)} AS {cast_to})"
+        for k, v in sentinels.items()
+    )
+    tried = f"try_cast({expr} AS {cast_to})"
     if strict:
-        return expr.when(
-            c.isNotNull() & tried.isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit(f"str_sentinel_decode: cast to {cast_to} failed for value: "),
-                    c,
-                )
-            ).cast(cast_to),
-        ).otherwise(tried)
-    return expr.otherwise(tried)
+        msg = sql_literal(f"str_sentinel_decode: cast to {cast_to} failed for value: ")
+        whens += (
+            f" WHEN isnotnull({expr}) AND isnull({tried})"
+            f" THEN CAST(raise_error(concat({msg}, {expr})) AS {cast_to})"
+        )
+    return f"CASE {whens} ELSE {tried} END"

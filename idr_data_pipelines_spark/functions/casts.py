@@ -16,8 +16,7 @@ dags/vls_transforms.py:189). Semantic gaps handled here (SURVEY.md §2.7
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from idr_data_pipelines_spark.functions.sql import sql_literal
 
 # BigQuery type name → Spark type name.
 _BQ_TYPE_MAP = {
@@ -42,36 +41,19 @@ def spark_type_for(bq_type: str) -> str:
     return _BQ_TYPE_MAP.get(bq_type.strip().upper(), bq_type)
 
 
-def safe_cast(col: Column | str, bq_type: str) -> Column:
+def safe_cast(expr: str, bq_type: str) -> str:
     """BigQuery ``SAFE_CAST``: null on malformed input."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast(spark_type_for(bq_type))
+    return f"try_cast({expr} AS {spark_type_for(bq_type)})"
 
 
-def bq_cast(col: Column | str, bq_type: str, strict: bool = True) -> Column:
+def bq_cast(expr: str, bq_type: str) -> str:
     """BigQuery ``CAST``: error on malformed (non-null) input.
 
     Implemented as: if the input is non-null but ``try_cast`` yields
-    null, raise — matching a failed BQ job. ``strict=False`` degrades
-    to ``safe_cast`` for pipelines that prefer Spark-native tolerance.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    if not strict:
-        return safe_cast(c, bq_type)
-    t = spark_type_for(bq_type)
-    tried = c.try_cast(t)
-    return F.when(
-        c.isNotNull() & tried.isNull(),
-        F.raise_error(F.concat(F.lit(f"bq_cast to {bq_type} failed for value: "), c)),
-    ).otherwise(tried)
-
-
-def assign_types(mapping: dict[str, str]) -> list[Column]:
-    """Column list for a typed re-cast stage.
-
-    The analogue of the reference's ``assign_appropriate_data_types``
-    (dags/mmd_transforms.py:52-72): the all-string staging table gets
-    its real types back in one projection. Returns aliased columns for
-    use in ``df.select(*assign_types({...}), *passthrough)``.
-    """
-    return [safe_cast(name, bq_type).alias(name) for name, bq_type in mapping.items()]
+    null, raise — matching a failed BQ job."""
+    tried = safe_cast(expr, bq_type)
+    msg = sql_literal(f"bq_cast to {bq_type} failed for value: ")
+    return (
+        f"CASE WHEN isnotnull({expr}) AND isnull({tried})"
+        f" THEN raise_error(concat({msg}, {expr})) ELSE {tried} END"
+    )

@@ -20,39 +20,48 @@ testable (SURVEY.md §5 determinism guard).
 from __future__ import annotations
 
 import datetime as _dt
+import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from idr_data_pipelines_spark.functions.sql import sql_literal
 
 
-def bq_date_diff(a: Column | str, b: Column | str, unit: str) -> Column:
+def bq_date_diff(a: str, b: str, unit: str) -> str:
     """BigQuery ``DATE_DIFF(a, b, unit)`` = boundaries of ``unit``
     between ``b`` (earlier) and ``a`` (later); negative when a < b."""
-    a, b = _c(a), _c(b)
     unit = unit.strip().upper()
     if unit == "DAY":
-        return F.datediff(a, b)
+        return f"datediff({a}, {b})"
     if unit == "WEEK":
         # BQ weeks start Sunday; count Sunday boundaries crossed.
         # floor(days_from_epoch_sunday/7) difference. 1970-01-04 was a Sunday.
-        anchor = F.lit("1970-01-04")
-        return (F.floor(F.datediff(a, anchor) / 7) - F.floor(F.datediff(b, anchor) / 7)).cast("int")
-    if unit == "MONTH":
-        return ((F.year(a) - F.year(b)) * 12 + (F.month(a) - F.month(b))).cast("int")
-    if unit == "QUARTER":
-        return ((F.year(a) - F.year(b)) * 4 + (F.quarter(a) - F.quarter(b))).cast("int")
+        return (
+            f"CAST(floor(datediff({a}, '1970-01-04') / 7)"
+            f" - floor(datediff({b}, '1970-01-04') / 7) AS INT)"
+        )
+    per_year = {"MONTH": ("month", 12), "QUARTER": ("quarter", 4)}
+    if unit in per_year:
+        part, n = per_year[unit]
+        return f"CAST((year({a}) - year({b})) * {n} + ({part}({a}) - {part}({b})) AS INT)"
     if unit == "YEAR":
-        return (F.year(a) - F.year(b)).cast("int")
+        return f"CAST(year({a}) - year({b}) AS INT)"
     raise ValueError(f"unsupported DATE_DIFF unit: {unit}")
 
 
-def extract_part(col: Column | str, part: str) -> Column:
+# BigQuery EXTRACT part → Spark SQL function.
+_PART_FN = {
+    "YEAR": "year",
+    "QUARTER": "quarter",
+    "MONTH": "month",
+    "DAY": "dayofmonth",
+    "HOUR": "hour",
+    "MINUTE": "minute",
+    "SECOND": "second",
+    "DAYOFYEAR": "dayofyear",
+}
+
+
+def extract_part(expr: str, part: str) -> str:
     """BigQuery ``EXTRACT(part FROM d)`` → INT64."""
-    c = _c(col)
     part = part.strip().upper()
     if part == "WEEK":
         # BQ WEEK is Sunday-based with week 0 before the year's first
@@ -60,27 +69,16 @@ def extract_part(col: Column | str, part: str) -> Column:
         # (EXTRACT(WEEK FROM '2023-01-01') is 1 in BQ, 52 in ISO —
         # r09 review; the old mapping shipped the ISO number under a
         # BQ contract). Same Sunday-anchor arithmetic as bq_date_diff.
-        d = F.to_date(c)
-        jan1 = F.trunc(d, "year")
-        first_sunday = F.date_add(jan1, (F.lit(8) - F.dayofweek(jan1)) % 7)
+        d = f"to_date({expr})"
+        jan1 = f"trunc({d}, 'year')"
+        first_sunday = f"date_add({jan1}, (8 - dayofweek({jan1})) % 7)"
         return (
-            F.when(d < first_sunday, F.lit(0))
-            .otherwise(F.floor(F.datediff(d, first_sunday) / 7) + 1)
-            .cast("long")
+            f"CAST(CASE WHEN {d} < {first_sunday} THEN 0"
+            f" ELSE floor(datediff({d}, {first_sunday}) / 7) + 1 END AS BIGINT)"
         )
-    fns = {
-        "YEAR": F.year,
-        "QUARTER": F.quarter,
-        "MONTH": F.month,
-        "DAY": F.dayofmonth,
-        "HOUR": F.hour,
-        "MINUTE": F.minute,
-        "SECOND": F.second,
-        "DAYOFYEAR": F.dayofyear,
-    }
-    if part not in fns:
+    if part not in _PART_FN:
         raise ValueError(f"unsupported EXTRACT part: {part}")
-    return fns[part](c).cast("long")
+    return f"CAST({_PART_FN[part]}({expr}) AS BIGINT)"
 
 
 # BigQuery FORMAT_DATETIME strftime directives → JVM DateTimeFormatter.
@@ -97,7 +95,7 @@ _FMT_MAP = {
 }
 
 
-def format_date(col: Column | str, fmt: str) -> Column:
+def format_date(expr: str, fmt: str) -> str:
     """BigQuery ``FORMAT_DATETIME(fmt, d)`` for the directives the
     reference uses ("%Y" → "2022", "%B" → "January";
     dags/mmd_transforms.py:218-222) plus the common ones.
@@ -107,8 +105,6 @@ def format_date(col: Column | str, fmt: str) -> Column:
     containing letters are single-quoted (e.g. ``%H:%M:%ST%d`` keeps
     the ``T`` literal instead of hitting an unsupported pattern).
     """
-    import re as _re
-
     parts: list[str] = []
     i = 0
     literal = ""
@@ -116,7 +112,7 @@ def format_date(col: Column | str, fmt: str) -> Column:
     def flush() -> None:
         nonlocal literal
         if literal:
-            if _re.search(r"[A-Za-z']", literal):
+            if re.search(r"[A-Za-z']", literal):
                 parts.append("'" + literal.replace("'", "''") + "'")
             else:
                 parts.append(literal)
@@ -138,14 +134,14 @@ def format_date(col: Column | str, fmt: str) -> Column:
             literal += fmt[i]
             i += 1
     flush()
-    return F.date_format(_c(col), "".join(parts))
+    return f"date_format({expr}, {sql_literal(''.join(parts))})"
 
 
-def as_of_date(value: str | _dt.date | None = None) -> Column:
+def as_of_date(value: str | _dt.date | None = None) -> str:
     """Injectable CURRENT_DATE. Pass a fixed date for deterministic
     runs/tests; ``None`` falls back to the session's current_date."""
     if value is None:
-        return F.current_date()
+        return "current_date()"
     if isinstance(value, _dt.date):
         value = value.isoformat()
-    return F.to_date(F.lit(value))
+    return f"to_date({sql_literal(value)})"

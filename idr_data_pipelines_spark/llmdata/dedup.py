@@ -6,7 +6,7 @@ Design for 100 TB: every near-dup operator is *bucket-then-compare* —
 1. signature computation is a per-row projection (shingle hashes
    JVM-side, the permutation minima in one numpy Arrow stage; zero
    shuffle);
-2. candidate generation is an equi-join on a band/chunk hash (one
+2. candidate generation is an equi-join on a band hash (one
    shuffle, AQE-handled skew);
 3. exact verification runs only inside buckets.
 
@@ -23,6 +23,8 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from idr_data_pipelines_spark.functions import sql_literal, sql_name
 
 # ------------------------------------------------- materialize handles
 #
@@ -177,43 +179,23 @@ def dedup_exact_hash_groups(
 # time; the same tree built node by node through the Column API costs
 # one py4j round-trip per node, and every consumer's build pays it
 # (minhash verify, winnowing, n-gram decontamination, the repetition
-# filters). The SQL text holds no backslash: a regex escape is built
-# as ``concat(chr(92), …)``, so the parser's legacy escaped-literals
-# setting cannot change how it parses. The optimizer folds it to the
-# plain literal, so plans show the regex ``\s+`` itself. Raw control
-# characters in a literal would be just as setting-proof but print
-# verbatim in the plan text, where a raw LF/VT/FF/CR reads as a line
-# break to anything that parses plans by line (``plans.lint``).
+# filters). The SQL text holds no backslash: ``sql_literal`` renders a
+# regex escape as ``concat(chr(92), …)``, so the parser's legacy
+# escaped-literals setting cannot change how it parses. The optimizer
+# folds it to the plain literal, so plans show the regex ``\s+``
+# itself. A regex names a control character by its escape (``\n``),
+# never raw: a raw LF/VT/FF/CR in a folded literal prints verbatim in
+# the plan text, where it reads as a line break to anything that
+# parses plans by line (``plans.lint``).
 
 
-def _regex_sql(escape: str) -> str:
-    """SQL text of the regex that is a backslash followed by
-    ``escape`` (``_regex_sql('s+')`` is ``\\s+``), with no backslash in
-    the SQL text itself."""
-    return f"concat(chr(92), '{escape}')"
-
-
-def _sql_name(name: str) -> str:
-    """SQL reference for a column name: each dot-separated part
-    backtick-quoted, so ``meta.text`` resolves to the struct field and
-    ``a b`` to the column of that name, as ``F.col`` resolves them.
-
-    A ``Column`` is refused, not rendered: its SQL rendering drops the
-    backticks of names like ``a b`` and does not parse for a Python
-    UDF."""
-    if not isinstance(name, str):
-        raise TypeError(
-            f"expected a column name (str), got {type(name).__name__}"
-        )
-    if "`" in name:
-        raise ValueError(f"column name {name!r} contains a backtick")
-    return ".".join(f"`{part}`" for part in name.split("."))
+_WHITESPACE_RUN = sql_literal(r"\s+")
 
 
 def _tokens_sql(name: str) -> str:
     """SQL text of the word tokenizer: the lowered, trimmed text split
     on whitespace runs."""
-    return f"split(lower(trim({_sql_name(name)})), {_regex_sql('s+')})"
+    return f"split(lower(trim({sql_name(name)})), {_WHITESPACE_RUN})"
 
 
 def _tokens(name: str) -> Column:
@@ -1244,78 +1226,6 @@ def simhash32_md5_signatures(
     fingerprint.
     """
     return _simhash(_SIMHASH_MD5, df, id_col, text_col)
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Pairs with SimHash Hamming distance ≤ max_hamming.
-
-    Pigeonhole banding: split 64 bits into ``max_hamming + 1`` chunks —
-    any pair within distance k must agree exactly on ≥1 chunk. Join on
-    (chunk_idx, chunk_value), then verify with bit_count(xor). The
-    sparse pair set is computed eagerly (``localCheckpoint``) and the
-    persisted chunk table released before returning.
-    """
-    n_chunks = max_hamming + 1
-    if not 1 <= n_chunks <= 64:
-        raise ValueError("max_hamming must be in [0, 63]")
-    # Distribute all 64 bits across the chunks (sizes differ by at most
-    # one) — a plain 64 // n_chunks would leave the top 64 % n_chunks
-    # bits out of every chunk, weakening the pigeonhole bucketing.
-    base, extra = divmod(64, n_chunks)
-    sizes = [base + (1 if i < extra else 0) for i in range(n_chunks)]
-    offsets = [sum(sizes[:i]) for i in range(n_chunks)]
-    sigs = simhash_signatures(df, id_col, text_col).filter(
-        F.col("simhash").isNotNull()
-    )
-    # chunks carry the full signature so the verify stage needs no
-    # second join; persisted — the chunk table feeds both sides of the
-    # self-join (see minhash_lsh_pairs for why this is load-bearing).
-    s = F.col("simhash")
-
-    def chunk_val(off: int, bits: int) -> Column:
-        shifted = F.shiftrightunsigned(s, off)
-        if bits >= 64:  # single chunk: the whole signature (a 64-bit
-            return shifted  # mask literal would not fit LongType)
-        return shifted.bitwiseAND(F.lit((1 << bits) - 1))
-
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                s.alias("simhash"),
-                F.lit(i).alias("chunk_idx"),
-                chunk_val(offsets[i], sizes[i]).alias("chunk_val"),
-            )
-            for i in range(n_chunks)
-        ]
-    )
-    chunks = sigs.select(
-        "id", F.explode(chunk_structs).alias("c")
-    ).select("id", "c.simhash", "c.chunk_idx", "c.chunk_val").persist()
-
-    l, r = chunks.alias("l"), chunks.alias("r")
-    result = (
-        l.join(
-            r,
-            (F.col("l.chunk_idx") == F.col("r.chunk_idx"))
-            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return _finish(result, [chunks])
 
 
 # ------------------------------------------------------ n-gram Jaccard

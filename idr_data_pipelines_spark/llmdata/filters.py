@@ -25,13 +25,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from idr_data_pipelines_spark.functions import sql_literal, sql_name
 from idr_data_pipelines_spark.llmdata.dedup import (
     _kgrams_sql,
     _let_sql,
-    _regex_sql,
-    _sql_name,
     _tokens_sql,
 )
+
+_LINE_BREAK = sql_literal(r"\n")
 
 
 def _repeat_frac_sql(arr: str) -> str:
@@ -61,9 +62,7 @@ def dup_word_fraction(col: str = "text") -> Column:
 def dup_line_fraction(col: str = "text") -> Column:
     """Fraction of duplicate lines (Gopher: drop if > 0.30). Lines are
     verbatim LF splits — no normalization, matching the paper."""
-    return F.expr(
-        _repeat_frac_sql(f"split({_sql_name(col)}, {_regex_sql('n')})")
-    )
+    return F.expr(_repeat_frac_sql(f"split({sql_name(col)}, {_LINE_BREAK})"))
 
 
 def top_ngram_fraction(col: str = "text", k: int = 2) -> Column:

@@ -11,12 +11,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from idr_data_pipelines_spark.functions import sql_name
+
 
 def agg_groupby_max_all(df: DataFrame, keys: list[str]) -> DataFrame:
     """``GROUP BY keys`` with MAX over every other column (mixed types —
     strings/dates/numerics all orderable), dags/mmd_transforms.py:77-88."""
-    other = [c for c in df.columns if c not in keys]
-    return df.groupBy(*keys).agg(*[F.max(c).alias(c) for c in other])
+    other = [sql_name(c) for c in df.columns if c not in keys]
+    return df.groupBy(*keys).agg(*[F.expr(f"max({c}) AS {c}") for c in other])
 
 
 def agg_max_date(
@@ -42,15 +44,15 @@ def agg_pivot_sum_case(
     dags/hts_transforms.py:214-232 — global, no GROUP BY).
 
     A global aggregate still runs distributed: partials per partition,
-    one tiny final reduce.
+    one tiny final reduce. The conditions are projected as named flags
+    and summed by SQL text: the CASE/SUM tree is parsed once instead of
+    built node by node per entry.
     """
-    aggs = [
-        F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).alias(name)
-        for name, cond in cases.items()
-    ]
+    flags = df.select(*(group_by or []), *[c.alias(n) for n, c in cases.items()])
+    sums = [f"sum(CASE WHEN {sql_name(n)} THEN 1 ELSE 0 END) AS {sql_name(n)}" for n in cases]
     if group_by:
-        return df.groupBy(*group_by).agg(*aggs)
-    return df.agg(*aggs)
+        return flags.groupBy(*group_by).agg(*[F.expr(s) for s in sums])
+    return flags.selectExpr(*sums)
 
 
 def agg_rollup(

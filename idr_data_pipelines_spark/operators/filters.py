@@ -14,16 +14,16 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from idr_data_pipelines_spark.functions import sql_name
+
 
 def filter_not_null(df: DataFrame, columns: list[str]) -> DataFrame:
     """``WHERE a IS NOT NULL AND b IS NOT NULL`` — the reference nests
     this redundantly (``denullification_VLS``,
     dags/vls_transforms.py:54-68); one conjunction is equivalent."""
-    cond = None
-    for c in columns:
-        nn = F.col(c).isNotNull()
-        cond = nn if cond is None else (cond & nn)
-    return df.filter(cond) if cond is not None else df
+    if not columns:
+        return df
+    return df.filter(" AND ".join(f"{sql_name(c)} IS NOT NULL" for c in columns))
 
 
 def filter_eq(df: DataFrame, column: str, value: object) -> DataFrame:

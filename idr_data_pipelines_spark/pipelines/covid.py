@@ -11,9 +11,8 @@ around a single shuffle (the distinct).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from idr_data_pipelines_spark.functions import case_flag, null_default
+from idr_data_pipelines_spark.functions import null_default
 from idr_data_pipelines_spark.operators import dedup_distinct, join_inner_dim_cast
 from idr_data_pipelines_spark.plans import Pipeline
 from idr_data_pipelines_spark.sources import Catalog
@@ -30,7 +29,7 @@ def _org_enrichment(catalog: Catalog):
             df, mfl, fact_key="MFL_code", dim_key="SiteCode",
             cast_fact_key_to="bigint",
         )
-        return joined.select(
+        return joined.selectExpr(
             "SiteCode",
             "officialname",
             "county_name",
@@ -39,7 +38,7 @@ def _org_enrichment(catalog: Catalog):
             "ward_name",
             "lat",
             "long",
-            F.col("Facilty_Name").alias("Facility_Name"),
+            "Facilty_Name AS Facility_Name",
             "ccc_number",
             "phone_number",
             "id_number",
@@ -65,14 +64,11 @@ def _org_enrichment(catalog: Catalog):
 def _status_cleaning(df: DataFrame) -> DataFrame:
     """vaccine_status_cleaning (covid_transforms.py:79-83): booster
     reclassification."""
-    return df.withColumn(
-        "Vaccination_Final_Status",
-        case_flag(
-            (F.col("Final_Vaccination_Status") == "Fully Vaccinated")
-            & (F.col("Ever_recieved_Booster") == "Yes"),
-            F.lit("Booster Shot"),
-            F.col("Final_Vaccination_Status"),
-        ),
+    return df.selectExpr(
+        "*",
+        "CASE WHEN Final_Vaccination_Status = 'Fully Vaccinated'"
+        " AND Ever_recieved_Booster = 'Yes' THEN 'Booster Shot'"
+        " ELSE Final_Vaccination_Status END AS Vaccination_Final_Status",
     )
 
 
@@ -80,10 +76,12 @@ def _status_cleaning_2(df: DataFrame) -> DataFrame:
     """vaccine_status_cleaning_2 (covid_transforms.py:93-118): three
     nested null→"Unknown" defaults, applied innermost-first (First,
     Second, Booster) so the derived column order matches."""
-    return (
-        df.withColumn("First_Vaccine_Type", null_default("First_Vaccine", "Unknown"))
-        .withColumn("Second_Vaccine_Type", null_default("Second_Vaccine", "Unknown"))
-        .withColumn("Booster_Vaccine_Type", null_default("Booster_Vaccine", "Unknown"))
+    return df.selectExpr(
+        "*",
+        *[
+            f"{null_default(f'{dose}_Vaccine', 'Unknown')} AS {dose}_Vaccine_Type"
+            for dose in ("First", "Second", "Booster")
+        ],
     )
 
 

@@ -12,10 +12,16 @@ the clean name and everything else (unknown non-null) to "Other".
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from idr_data_pipelines_spark.functions import bq_date_diff, case_bucket, extract_part
+from idr_data_pipelines_spark.functions import (
+    bq_cast,
+    bq_date_diff,
+    case_bucket,
+    case_map,
+    extract_part,
+)
 from idr_data_pipelines_spark.operators import (
     agg_pivot_sum_case,
     dedup_distinct,
@@ -48,54 +54,44 @@ ENTRYPOINT_RECODE: dict[str, str] = {
 }
 
 
-def _recode(col: Column, mapping: dict[str, str]) -> Column:
-    """null → null, unknown → passthrough (reference ELSE entrypoint)
-    — exactly ``case_map(default_to_input=True)``; delegate so the
-    recode-chain builder has ONE implementation (r10 review)."""
-    from idr_data_pipelines_spark.functions import case_map
-
-    return case_map(col, mapping, default_to_input=True)
-
-
 def _join_mfl(catalog: Catalog):
     """HTS_joining_MFL_Codes (hts_transforms.py:57-78): INNER JOIN on
     SiteCode = CAST(staging.SiteCode AS INT), wide rename projection."""
 
     def stage(df: DataFrame) -> DataFrame:
-        mfl = catalog.table("mfl_codes")
         joined = join_inner_dim_cast(
-            df, mfl, fact_key="SiteCode", dim_key="SiteCode",
-            cast_fact_key_to="bigint",
+            df.alias("hts"), catalog.table("mfl_codes").alias("mfl"),
+            fact_key="SiteCode", dim_key="SiteCode", cast_fact_key_to="bigint",
         )
-        return joined.select(
-            mfl["SiteCode"],
+        return joined.selectExpr(
+            "mfl.SiteCode",
             "county_name",
             "sub_county_name",
             "lat",
             "long",
-            F.col("officialname").alias("facility_name"),
-            F.col("CccNumber").alias("ccc_number"),
+            "officialname AS facility_name",
+            "CccNumber AS ccc_number",
             "PatientId",
             "DOB",
             "Gender",
             "ageInYears",
-            F.col("EntryPoint").alias("entrypoint"),
-            F.col("Consent").alias("patient_consented"),
-            F.col("ClientTestedAs").alias("client_tested_as"),
-            F.col("TestStrategy").alias("approach"),
-            F.col("TestResult1").alias("test_1_result"),
-            F.col("TestResult2").alias("test_2_result"),
-            F.col("FinalTestResult").alias("final_test_result"),
-            F.col("TestDate").alias("date_tested"),
-            F.col("PatientGivenResult").alias("patient_given_result"),
-            F.col("FacilityLinked").alias("facility_linked_to"),
+            "EntryPoint AS entrypoint",
+            "Consent AS patient_consented",
+            "ClientTestedAs AS client_tested_as",
+            "TestStrategy AS approach",
+            "TestResult1 AS test_1_result",
+            "TestResult2 AS test_2_result",
+            "FinalTestResult AS final_test_result",
+            "TestDate AS date_tested",
+            "PatientGivenResult AS patient_given_result",
+            "FacilityLinked AS facility_linked_to",
             "art_start_date",
-            F.col("EverTestedForHiv").alias("ever_tested_for_hiv"),
-            F.col("MonthsSinceLastTest").alias("months_since_last_test"),
-            F.col("TbScreening").alias("tb_screening"),
-            F.col("ClientSelfTested").alias("client_self_tested"),
-            F.col("CoupleDiscordant").alias("couple_discordant"),
-            F.col("TestType").alias("test_type"),
+            "EverTestedForHiv AS ever_tested_for_hiv",
+            "MonthsSinceLastTest AS months_since_last_test",
+            "TbScreening AS tb_screening",
+            "ClientSelfTested AS client_self_tested",
+            "CoupleDiscordant AS couple_discordant",
+            "TestType AS test_type",
         )
 
     return stage
@@ -108,83 +104,75 @@ def _dates_enrichment(df: DataFrame) -> DataFrame:
     # strict BQ CAST (r10 review: a tolerant .cast("date") silently
     # nulls a malformed date string, misclassifying the patient as
     # 'Not Linked' where the reference's BigQuery CAST fails the job)
-    from idr_data_pipelines_spark.functions import bq_cast
-
-    tested = bq_cast(F.col("date_tested"), "DATE")
-    art = bq_cast(F.col("art_start_date"), "DATE")
-    return df.withColumns(
-        {
-            "LinkageDays": bq_date_diff(art, tested, "DAY"),
-            "date_tested_Year": extract_part(tested, "YEAR"),
-            "date_tested_Quarter": extract_part(tested, "QUARTER"),
-            "date_tested_Month": extract_part(tested, "MONTH"),
-            "art_start_date_Year": extract_part(art, "YEAR"),
-            "art_start_date_Quarter": extract_part(art, "QUARTER"),
-            "art_start_date_Month": extract_part(art, "MONTH"),
-        }
+    tested = bq_cast("date_tested", "DATE")
+    art = bq_cast("art_start_date", "DATE")
+    return df.selectExpr(
+        "*",
+        f"{bq_date_diff(art, tested, 'DAY')} AS LinkageDays",
+        *[
+            f"{extract_part(d, part)} AS {name}_{part.title()}"
+            for name, d in (("date_tested", tested), ("art_start_date", art))
+            for part in ("YEAR", "QUARTER", "MONTH")
+        ],
     )
 
 
 def _entrypoint_1(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "entrypointclean", _recode(F.col("entrypoint"), ENTRYPOINT_RECODE)
-    )
+    recode = case_map("entrypoint", ENTRYPOINT_RECODE, default_to_input=True)
+    return df.selectExpr("*", f"{recode} AS entrypointclean")
 
 
 def _entrypoint_2(df: DataFrame) -> DataFrame:
     """Collapse all known raw entrypoints to the sentinel "0"."""
     sentinel = {raw: "0" for raw in ENTRYPOINT_RECODE}
-    return df.withColumn(
-        "entrypointclean2", _recode(F.col("entrypoint"), sentinel)
-    )
+    recode = case_map("entrypoint", sentinel, default_to_input=True)
+    return df.selectExpr("*", f"{recode} AS entrypointclean2")
 
 
 def _entrypoint_3(df: DataFrame) -> DataFrame:
     """known ("0") → clean name; null → null; unknown → "Other"."""
-    return df.withColumn(
-        "entrypointclean3",
-        F.when(F.col("entrypointclean2") == "0", F.col("entrypointclean"))
-        .when(F.col("entrypointclean2").isNull(), F.lit(None))
-        .otherwise(F.lit("Other")),
+    return df.selectExpr(
+        "*",
+        "CASE WHEN entrypointclean2 = '0' THEN entrypointclean"
+        " WHEN entrypointclean2 IS NULL THEN NULL"
+        " ELSE 'Other' END AS entrypointclean3",
     )
 
 
-def hts_cascade_expr() -> Column:
-    """hts_cascade CASE (hts_transforms.py:189-202): linkage-delay
-    buckets among positives; no ELSE → non-positives stay NULL."""
-    pos = F.col("final_test_result") == "Positive"
-    days = F.col("LinkageDays")
+def hts_cascade_expr() -> str:
+    """hts_cascade CASE (hts_transforms.py:189-202) as SQL text:
+    linkage-delay buckets among positives; no ELSE → non-positives
+    stay NULL."""
+    pos = "final_test_result = 'Positive'"
     return case_bucket(
-        days,
         [
-            ((days == 0) & pos, F.lit("Same Day")),
-            ((days > 0) & (days < 15) & pos, F.lit(">1 day <2 weeks")),
-            ((days > 14) & pos, F.lit(">2 weeks")),
-            ((days < 0) & pos, F.lit("Clerical Error")),
-            (days.isNull() & pos, F.lit("Not Linked")),
-        ],
+            (f"LinkageDays = 0 AND {pos}", "Same Day"),
+            (f"LinkageDays > 0 AND LinkageDays < 15 AND {pos}", ">1 day <2 weeks"),
+            (f"LinkageDays > 14 AND {pos}", ">2 weeks"),
+            (f"LinkageDays < 0 AND {pos}", "Clerical Error"),
+            (f"LinkageDays IS NULL AND {pos}", "Not Linked"),
+        ]
     )
 
 
 def _summary_1(df: DataFrame) -> DataFrame:
     """HTS_summary (hts_transforms.py:186-212): derive cascade, keep
     non-null rows."""
-    return filter_derived(df, "hts_cascade", hts_cascade_expr())
+    return filter_derived(df, "hts_cascade", F.expr(hts_cascade_expr()))
 
 
 def hts_summary(df: DataFrame) -> DataFrame:
     """HTS_warehouse_summary (hts_transforms.py:214-232): global
     conditional-count pivot over the cascade buckets."""
-    c = F.col("hts_cascade")
     return agg_pivot_sum_case(
         df,
         {
-            "totalPositive": c.isNotNull(),
-            "sameDay": c == "Same Day",
-            "oneDayToTwoWeeks": c == ">1 day <2 weeks",
-            "moreThanTwoWeeks": c == ">2 weeks",
-            "clericalError": c == "Clerical Error",
-            "notLinked": c == "Not Linked",
+            "totalPositive": F.expr("hts_cascade IS NOT NULL"),
+            "sameDay": F.expr("hts_cascade = 'Same Day'"),
+            "oneDayToTwoWeeks": F.expr("hts_cascade = '>1 day <2 weeks'"),
+            "moreThanTwoWeeks": F.expr("hts_cascade = '>2 weeks'"),
+            "clericalError": F.expr("hts_cascade = 'Clerical Error'"),
+            "notLinked": F.expr("hts_cascade = 'Not Linked'"),
         },
     )
 

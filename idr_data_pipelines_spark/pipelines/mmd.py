@@ -17,7 +17,6 @@ from __future__ import annotations
 import datetime as _dt
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from idr_data_pipelines_spark.functions import (
     as_of_date,
@@ -26,7 +25,9 @@ from idr_data_pipelines_spark.functions import (
     case_map,
     extract_part,
     format_date,
+    null_normalize,
     safe_cast,
+    sql_name,
 )
 from idr_data_pipelines_spark.operators import (
     dedup_distinct,
@@ -70,11 +71,10 @@ REGIMEN_RECODE = {
 def _assign_types(df: DataFrame) -> DataFrame:
     """Typed re-cast of the all-string staging table, column order
     preserved (mmd_transforms.py:52-72)."""
-    cols = [
-        safe_cast(c, MMD_TYPES[c]).alias(c) if c in MMD_TYPES else F.col(c)
-        for c in df.columns
-    ]
-    return df.select(*cols)
+    typed = {
+        c: f"{safe_cast(sql_name(c), t)} AS {sql_name(c)}" for c, t in MMD_TYPES.items()
+    }
+    return df.selectExpr(*[typed.get(c, sql_name(c)) for c in df.columns])
 
 
 def _dedup_art(df: DataFrame) -> DataFrame:
@@ -88,32 +88,29 @@ def _return_heirarchy(df: DataFrame) -> DataFrame:
     """ART_return_dates_heirarchy (mmd_transforms.py:101-105):
     DATE_DIFF(ExpectedReturn, LastARTDate, year/month/day) with
     BigQuery boundary-counting semantics."""
-    return df.withColumns(
-        {
-            "years": bq_date_diff("ExpectedReturn", "LastARTDate", "YEAR"),
-            "months": bq_date_diff("ExpectedReturn", "LastARTDate", "MONTH"),
-            "days": bq_date_diff("ExpectedReturn", "LastARTDate", "DAY"),
-        }
+    return df.selectExpr(
+        "*",
+        f"{bq_date_diff('ExpectedReturn', 'LastARTDate', 'YEAR')} AS years",
+        f"{bq_date_diff('ExpectedReturn', 'LastARTDate', 'MONTH')} AS months",
+        f"{bq_date_diff('ExpectedReturn', 'LastARTDate', 'DAY')} AS days",
     )
 
 
 def _clean_regimen(df: DataFrame) -> DataFrame:
     """clean_regimen_lines (mmd_transforms.py:118-129)."""
-    return df.withColumns(
-        {
-            "LastRegimenLineClean": case_map(
-                "LastRegimenLine", REGIMEN_RECODE, default="Uncategorized"
-            ),
-            "StartRegimenLineClean": case_map(
-                "StartRegimenLine", REGIMEN_RECODE, default="Uncategorized"
-            ),
-        }
+    def clean(line: str) -> str:
+        return case_map(line, REGIMEN_RECODE, default="Uncategorized")
+
+    return df.selectExpr(
+        "*",
+        f"{clean('LastRegimenLine')} AS LastRegimenLineClean",
+        f"{clean('StartRegimenLine')} AS StartRegimenLineClean",
     )
 
 
 def _date_enrichment(df: DataFrame) -> DataFrame:
     """date_enrichment (mmd_transforms.py:143-144): DateExpected alias."""
-    return df.withColumn("DateExpected", F.col("ExpectedReturn"))
+    return df.selectExpr("*", "ExpectedReturn AS DateExpected")
 
 
 def _current_days(as_of: str | _dt.date | None):
@@ -122,8 +119,9 @@ def _current_days(as_of: str | _dt.date | None):
     as-of injected."""
 
     def stage(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "CurrentDays", bq_date_diff(as_of_date(as_of), F.col("DateExpected"), "DAY")
+        return df.selectExpr(
+            "*",
+            f"{bq_date_diff(as_of_date(as_of), 'DateExpected', 'DAY')} AS CurrentDays",
         )
 
     return stage
@@ -133,15 +131,27 @@ def _tx_curr2(df: DataFrame) -> DataFrame:
     """further_current_on_treatment_enrichment (mmd_transforms.py:
     169-180): LossOfLife 0/1 then CurrentOnTreatment — preserving the
     reference's mixed-case "Yes"/"NO" output."""
-    with_lol = df.withColumn(
-        "LossOfLife", case_flag(F.col("ExitReason") == "Died", 1, 0)
+    lol = case_flag("ExitReason = 'Died'", 1, 0)
+    cot = case_flag("CurrentDays < 31 AND LossOfLife = 0", "Yes", "NO")
+    return df.selectExpr("*", f"{lol} AS LossOfLife").selectExpr(
+        "*", f"{cot} AS CurrentOnTreatment"
     )
-    return with_lol.withColumn(
-        "CurrentOnTreatment",
-        case_flag(
-            (F.col("CurrentDays") < 31) & (F.col("LossOfLife") == 0), "Yes", "NO"
-        ),
-    )
+
+
+# ART_joining_MFL_Codes projection after SiteCode and the MFL columns
+# (mmd_transforms.py:190-212); LossOfLife is dropped, as there.
+_MFL_PASSTHROUGH = [
+    "PatientPK", "weight", "height", "AgeEnrollment",
+    "AgeARTStart", "AgeLastVisit", "FacilityName", "RegistrationDate",
+    "PatientSource", "PreviousARTStartDate", "StartARTAtThisFAcility",
+    "StartARTDate", "PreviousARTUse", "PreviousARTPurpose",
+    "PreviousARTRegimen", "DateLastUsed", "StartRegimen",
+    "StartRegimenLine", "LastARTDate", "LastRegimen", "LastRegimenLine",
+    "ExpectedReturn", "LastVisit", "Duration", "ExitDate", "ExitReason",
+    "Date_Created", "Date_Last_Modified", "years", "months", "days",
+    "LastRegimenLineClean", "StartRegimenLineClean", "DateExpected",
+    "CurrentDays", "CurrentOnTreatment",
+]
 
 
 def _join_mfl(catalog: Catalog):
@@ -151,35 +161,14 @@ def _join_mfl(catalog: Catalog):
     list)."""
 
     def stage(df: DataFrame) -> DataFrame:
-        mfl = catalog.table("mfl_codes")
         joined = join_inner_dim_cast(
-            df, mfl, fact_key="SiteCode", dim_key="SiteCode",
-            cast_fact_key_to="bigint",
+            df.alias("art"), catalog.table("mfl_codes").alias("mfl"),
+            fact_key="SiteCode", dim_key="SiteCode", cast_fact_key_to="bigint",
         )
-        passthrough = [
-            "PatientPK", "weight", "height", "AgeEnrollment",
-            "AgeARTStart", "AgeLastVisit", "FacilityName", "RegistrationDate",
-            "PatientSource", "PreviousARTStartDate", "StartARTAtThisFAcility",
-            "StartARTDate", "PreviousARTUse", "PreviousARTPurpose",
-            "PreviousARTRegimen", "DateLastUsed", "StartRegimen",
-            "StartRegimenLine", "LastARTDate", "LastRegimen", "LastRegimenLine",
-            "ExpectedReturn", "LastVisit", "Duration", "ExitDate", "ExitReason",
-            "Date_Created", "Date_Last_Modified", "years", "months", "days",
-            "LastRegimenLineClean", "StartRegimenLineClean", "DateExpected",
-            "CurrentDays", "CurrentOnTreatment",
-        ]
-        return joined.select(
-            mfl["SiteCode"],
-            "county_name",
-            "constituency_name",
-            "sub_county_name",
-            "ward_name",
-            "lat",
-            "long",
-            "DOB",
-            "Gender",
-            F.col("CCC").alias("PatientID"),
-            *passthrough,
+        return joined.selectExpr(
+            "mfl.SiteCode", "county_name", "constituency_name",
+            "sub_county_name", "ward_name", "lat", "long", "DOB", "Gender",
+            "CCC AS PatientID", *_MFL_PASSTHROUGH,
         )
 
     return stage
@@ -189,16 +178,15 @@ def _dates_art(df: DataFrame) -> DataFrame:
     """ART_enriching_joined_table (mmd_transforms.py:216-226):
     FORMAT_DATETIME year/month-name + day extract for Last/Start ART
     dates."""
-    start = F.col("StartARTDate").cast("date")
-    return df.withColumns(
-        {
-            "LastARTYear": format_date("LastARTDate", "%Y"),
-            "LastARTMonth": format_date("LastARTDate", "%B"),
-            "LastARTDay": extract_part("LastARTDate", "DAY"),
-            "StartARTYear": format_date(start, "%Y"),
-            "StartARTMonth": format_date(start, "%B"),
-            "StartARTDay": extract_part(start, "DAY"),
-        }
+    start = "CAST(StartARTDate AS DATE)"
+    return df.selectExpr(
+        "*",
+        f"{format_date('LastARTDate', '%Y')} AS LastARTYear",
+        f"{format_date('LastARTDate', '%B')} AS LastARTMonth",
+        f"{extract_part('LastARTDate', 'DAY')} AS LastARTDay",
+        f"{format_date(start, '%Y')} AS StartARTYear",
+        f"{format_date(start, '%B')} AS StartARTMonth",
+        f"{extract_part(start, 'DAY')} AS StartARTDay",
     )
 
 
@@ -223,8 +211,6 @@ def build_mmd_pipeline(catalog: Catalog, as_of: str | None = None) -> Pipeline:
     # it belongs on the source read, not as an MMD DAG stage. Without
     # it every untyped string column would carry the literal "None"
     # into the warehouse where the reference has NULL.
-    from idr_data_pipelines_spark.functions import null_normalize
-
     p = Pipeline(
         "mmd",
         source=lambda spark: null_normalize(

@@ -55,34 +55,29 @@ def _single_patient_records(df: DataFrame) -> DataFrame:
     The generic window form (operators.dedup_latest_per_key) is the
     blessed API for new code; this stage keeps the legacy semantics
     for parity."""
+    received = bq_cast("date_test_result_received", "DATE")
     rd = (
         df.groupBy("Mfl_code", "ccc_number")
-        .agg(
-            F.max(bq_cast(F.col("date_test_result_received"), "DATE")).alias(
-                "results_date"
-            )
-        )
+        .agg(F.expr(f"max({received}) AS results_date"))
         .alias("rd")
     )
-    detail = df.alias("detail")
     joined = rd.join(
-        detail, F.col("rd.ccc_number") == F.col("detail.ccc_number"), "left"
+        df.alias("detail"), F.expr("rd.ccc_number = detail.ccc_number"), "left"
     ).where(
-        F.col("rd.results_date")
-        == bq_cast(F.col("detail.date_test_result_received"), "DATE")
+        f"rd.results_date = {bq_cast('detail.date_test_result_received', 'DATE')}"
     )
-    return joined.select(
-        F.col("rd.Mfl_code").alias("SiteCode"),
-        F.col("rd.ccc_number").alias("ccc_number"),
-        F.col("rd.results_date").alias("vl_results_date"),
-        F.col("detail.Gender").alias("Gender"),
-        F.col("detail.DOB").alias("DOB"),
-        F.col("detail.ageInYears").alias("vl_ageInYears"),
-        F.col("detail.date_test_requested").alias("vl_date_test_requested"),
-        F.col("detail.lab_test").alias("vl_lab_test"),
-        F.col("detail.urgency").alias("vl_urgency"),
-        F.col("detail.order_reason").alias("vl_order_reason"),
-        F.col("detail.test_result").alias("vl_test_result"),
+    return joined.selectExpr(
+        "rd.Mfl_code AS SiteCode",
+        "rd.ccc_number AS ccc_number",
+        "rd.results_date AS vl_results_date",
+        "detail.Gender AS Gender",
+        "detail.DOB AS DOB",
+        "detail.ageInYears AS vl_ageInYears",
+        "detail.date_test_requested AS vl_date_test_requested",
+        "detail.lab_test AS vl_lab_test",
+        "detail.urgency AS vl_urgency",
+        "detail.order_reason AS vl_order_reason",
+        "detail.test_result AS vl_test_result",
     )
 
 
@@ -111,11 +106,14 @@ def _merge_art_vls(catalog: Catalog):
     ]
 
     def stage(vls: DataFrame) -> DataFrame:
-        art = catalog.table("art_mmd")
         merged = join_left_fact(
-            art, vls, art["PatientID"] == vls["ccc_number"]
+            catalog.table("art_mmd").alias("art"),
+            vls.alias("vls"),
+            F.expr("art.PatientID = vls.ccc_number"),
         )
-        return merged.select(*[art[c] for c in ART_COLS], *[vls[c] for c in VLS_COLS])
+        return merged.selectExpr(
+            *[f"art.{c}" for c in ART_COLS], *[f"vls.{c}" for c in VLS_COLS]
+        )
 
     return stage
 
@@ -123,26 +121,18 @@ def _merge_art_vls(catalog: Catalog):
 def _valid_results(as_of: str | _dt.date | None):
     """valid_results (vls_transforms.py:160-176): days since test from
     the injected as-of date, then the validity CASE."""
+    days = bq_date_diff(as_of_date(as_of), "vl_results_date", "DAY")
+    valid = case_bucket(
+        [
+            ("vl_days_since_test IS NULL", "Unknown"),
+            ("vl_days_since_test < 366 AND CurrentOnTreatment = 'Yes'", "Valid"),
+        ],
+        default="Invalid",
+    )
 
     def stage(df: DataFrame) -> DataFrame:
-        with_days = df.withColumn(
-            "vl_days_since_test",
-            bq_date_diff(as_of_date(as_of), F.col("vl_results_date"), "DAY"),
-        )
-        d = F.col("vl_days_since_test")
-        return with_days.withColumn(
-            "vl_valid",
-            case_bucket(
-                d,
-                [
-                    (d.isNull(), F.lit("Unknown")),
-                    (
-                        (d < 366) & (F.col("CurrentOnTreatment") == "Yes"),
-                        F.lit("Valid"),
-                    ),
-                ],
-                default="Invalid",
-            ),
+        return df.selectExpr("*", f"{days} AS vl_days_since_test").selectExpr(
+            "*", f"{valid} AS vl_valid"
         )
 
     return stage
@@ -156,45 +146,32 @@ def _vl_suppression(df: DataFrame) -> DataFrame:
     # malformed (non-'LDL', non-null) result string
     # (dags/vls_transforms.py:189) — silently nulling a viral-load
     # reading would flip patients to 'Unknown' suppression.
-    with_load = df.withColumn(
-        "load_numbers",
-        str_sentinel_decode(
-            "vl_test_result", {"LDL": 0}, cast_to="decimal(38,9)", strict=True
-        ),
+    load = str_sentinel_decode(
+        "vl_test_result", {"LDL": 0}, cast_to="decimal(38,9)", strict=True
     )
-    load = F.col("load_numbers")
-    return with_load.withColumn(
-        "viral_load_suppressed",
-        case_bucket(
-            load,
-            [
-                ((load < 1000) & (F.col("vl_valid") == "Valid"), F.lit("Suppressed")),
-                (
-                    (load >= 1000) & (F.col("vl_valid") == "Invalid"),
-                    F.lit("Unsuppressed"),
-                ),
-                (load.isNull(), F.lit("Unknown")),
-            ],
-        ),
+    suppressed = case_bucket(
+        [
+            ("load_numbers < 1000 AND vl_valid = 'Valid'", "Suppressed"),
+            ("load_numbers >= 1000 AND vl_valid = 'Invalid'", "Unsuppressed"),
+            ("load_numbers IS NULL", "Unknown"),
+        ]
+    )
+    return df.selectExpr("*", f"{load} AS load_numbers").selectExpr(
+        "*", f"{suppressed} AS viral_load_suppressed"
     )
 
 
 def _eligible(df: DataFrame) -> DataFrame:
     """eligible_for_VL (vls_transforms.py:197-216)."""
-    v = F.col("vl_valid")
-    cot = F.col("CurrentOnTreatment")
-    return df.withColumn(
-        "vl_eligible",
-        case_bucket(
-            v,
-            [
-                (v == "Unknown", F.lit("Unknown")),
-                ((v == "Invalid") & (cot == "Yes"), F.lit("Eligible")),
-                ((v == "Valid") & (cot == "Yes"), F.lit("Test is current")),
-            ],
-            default="Ineligible",
-        ),
+    eligible = case_bucket(
+        [
+            ("vl_valid = 'Unknown'", "Unknown"),
+            ("vl_valid = 'Invalid' AND CurrentOnTreatment = 'Yes'", "Eligible"),
+            ("vl_valid = 'Valid' AND CurrentOnTreatment = 'Yes'", "Test is current"),
+        ],
+        default="Ineligible",
     )
+    return df.selectExpr("*", f"{eligible} AS vl_eligible")
 
 
 def build_vls_pipeline(catalog: Catalog, as_of: str | None = None) -> Pipeline:

@@ -666,13 +666,9 @@ def q_filter_derived(spark, sf_dir):
     rows are NULL and get filtered."""
     df = _t(spark, sf_dir, "orders")
     bucket = case_bucket(
-        "o_totalprice",
-        [
-            (F.col("o_totalprice") < 50000, F.lit("small")),
-            (F.col("o_totalprice") < 150000, F.lit("medium")),
-        ],
+        [("o_totalprice < 50000", "small"), ("o_totalprice < 150000", "medium")]
     )
-    return filter_derived(df, "price_bucket", bucket).select(
+    return filter_derived(df, "price_bucket", F.expr(bucket)).select(
         "o_orderkey", "o_totalprice", "price_bucket"
     )
 
@@ -869,16 +865,18 @@ def q_expr_case_map(spark, sf_dir):
         },
         default="OTHER",
     )
-    return df.select("o_orderkey", "o_orderpriority", recode.alias("priority_code"))
+    return df.select(
+        "o_orderkey", "o_orderpriority", F.expr(recode).alias("priority_code")
+    )
 
 
 def q_expr_case_flag(spark, sf_dir):
     """expr_case_flag: boolean flag CASE, preserving the reference's
     mixed-case "Yes"/"NO" quirk (dags/mmd_transforms.py:172-175)."""
     df = _t(spark, sf_dir, "lineitem")
-    flag = case_flag(F.col("l_returnflag") == "R", "Yes", "NO")
+    flag = case_flag("l_returnflag = 'R'", "Yes", "NO")
     return df.select(
-        "l_orderkey", "l_linenumber", "l_returnflag", flag.alias("returned_flag")
+        "l_orderkey", "l_linenumber", "l_returnflag", F.expr(flag).alias("returned_flag")
     )
 
 
@@ -887,18 +885,14 @@ def q_expr_case_bucket(spark, sf_dir):
     combos stay NULL (dags/vls_transforms.py:180-191, SURVEY §2.11)."""
     df = _t(spark, sf_dir, "orders")
     bucket = case_bucket(
-        "o_totalprice",
         [
-            (F.col("o_totalprice") < 50000, F.lit("low")),
-            (F.col("o_totalprice") < 150000, F.lit("mid")),
-            (
-                (F.col("o_totalprice") >= 150000) & (F.col("o_orderstatus") == "F"),
-                F.lit("high_final"),
-            ),
-        ],
+            ("o_totalprice < 50000", "low"),
+            ("o_totalprice < 150000", "mid"),
+            ("o_totalprice >= 150000 AND o_orderstatus = 'F'", "high_final"),
+        ]
     )
     return df.select(
-        "o_orderkey", "o_totalprice", "o_orderstatus", bucket.alias("price_band")
+        "o_orderkey", "o_totalprice", "o_orderstatus", F.expr(bucket).alias("price_band")
     )
 
 
@@ -906,11 +900,10 @@ def q_expr_null_default(spark, sf_dir):
     """expr_null_default: WHEN NULL THEN 'Unknown'
     (dags/covid_transforms.py:93-118)."""
     df = _t(spark, sf_dir, "lineitem")
-    nulled = F.nullif(F.col("l_linestatus"), F.lit("O"))
     return df.select(
         "l_orderkey",
         "l_linenumber",
-        null_default(nulled, "Unknown").alias("status_clean"),
+        F.expr(null_default("nullif(l_linestatus, 'O')", "Unknown")).alias("status_clean"),
     )
 
 
@@ -927,9 +920,9 @@ def q_expr_datediff(spark, sf_dir):
     return j.select(
         "l_orderkey",
         "l_linenumber",
-        bq_date_diff("ship", "odate", "DAY").alias("diff_day"),
-        bq_date_diff("ship", "odate", "MONTH").alias("diff_month"),
-        bq_date_diff("ship", "odate", "YEAR").alias("diff_year"),
+        F.expr(bq_date_diff("ship", "odate", "DAY")).alias("diff_day"),
+        F.expr(bq_date_diff("ship", "odate", "MONTH")).alias("diff_month"),
+        F.expr(bq_date_diff("ship", "odate", "YEAR")).alias("diff_year"),
     )
 
 
@@ -937,13 +930,13 @@ def q_expr_extract(spark, sf_dir):
     """expr_extract: EXTRACT(YEAR/QUARTER/MONTH/DAY)
     (dags/hts_transforms.py:85-90)."""
     df = _t(spark, sf_dir, "orders")
-    d = F.col("o_orderdate").cast("date")
+    d = "CAST(o_orderdate AS DATE)"
     return df.select(
         "o_orderkey",
-        extract_part(d, "YEAR").alias("y"),
-        extract_part(d, "QUARTER").alias("q"),
-        extract_part(d, "MONTH").alias("m"),
-        extract_part(d, "DAY").alias("d"),
+        F.expr(extract_part(d, "YEAR")).alias("y"),
+        F.expr(extract_part(d, "QUARTER")).alias("q"),
+        F.expr(extract_part(d, "MONTH")).alias("m"),
+        F.expr(extract_part(d, "DAY")).alias("d"),
     )
 
 
@@ -951,11 +944,11 @@ def q_expr_format_date(spark, sf_dir):
     """expr_format_date: FORMAT_DATETIME("%Y"/"%B")
     (dags/mmd_transforms.py:218-222)."""
     df = _t(spark, sf_dir, "orders")
-    d = F.col("o_orderdate").cast("date")
+    d = "CAST(o_orderdate AS DATE)"
     return df.select(
         "o_orderkey",
-        format_date(d, "%Y").alias("year_str"),
-        format_date(d, "%B").alias("month_name"),
+        F.expr(format_date(d, "%Y")).alias("year_str"),
+        F.expr(format_date(d, "%B")).alias("month_name"),
     )
 
 
@@ -963,10 +956,10 @@ def q_expr_current_date(spark, sf_dir):
     """expr_current_date: injected as-of date for deterministic
     age-of-record arithmetic (dags/mmd_transforms.py:158)."""
     df = _t(spark, sf_dir, "orders")
-    d = F.col("o_orderdate").cast("date")
+    d = "CAST(o_orderdate AS DATE)"
     return df.select(
         "o_orderkey",
-        bq_date_diff(as_of_date(AS_OF), d, "DAY").alias("age_days"),
+        F.expr(bq_date_diff(as_of_date(AS_OF), d, "DAY")).alias("age_days"),
     )
 
 
@@ -974,14 +967,15 @@ def q_expr_str_sentinel(spark, sf_dir):
     """expr_str_sentinel: 'LDL'→0 decode then numeric cast
     (dags/vls_transforms.py:187-190)."""
     df = _t(spark, sf_dir, "lineitem")
-    raw = F.when(F.col("l_returnflag") == "N", F.lit("LDL")).otherwise(
-        F.col("l_quantity").cast("int").cast("string")
+    raw = (
+        "CASE WHEN l_returnflag = 'N' THEN 'LDL'"
+        " ELSE CAST(CAST(l_quantity AS INT) AS STRING) END"
     )
     decoded = str_sentinel_decode(raw, {"LDL": 0}, cast_to="decimal(18,2)")
     return df.select(
         "l_orderkey",
         "l_linenumber",
-        decoded.cast("double").alias("result_value"),
+        F.expr(decoded).cast("double").alias("result_value"),
     )
 
 
@@ -4836,21 +4830,18 @@ def q_flagship_warehouse(spark, sf_dir):
         broadcast_dim=False,
     ).join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
 
-    d = F.col("o_orderdate").cast("date")
+    d = "CAST(o_orderdate AS DATE)"
     days = bq_date_diff(as_of_date(AS_OF), d, "DAY")
+    recency = case_bucket(
+        [(f"{days} <= 365", "active"), (f"{days} <= {3 * 365}", "lapsing")],
+        default="dormant",
+    )
     out = enriched.withColumns(
         {
-            "last_order_date": d,
-            "days_since": days,
-            "recency": case_bucket(
-                days,
-                [
-                    (days <= 365, F.lit("active")),
-                    (days <= 3 * 365, F.lit("lapsing")),
-                ],
-                default="dormant",
-            ),
-            "big_spender": case_flag(F.col("o_totalprice") >= 150000, "Yes", "NO"),
+            "last_order_date": F.expr(d),
+            "days_since": F.expr(days),
+            "recency": F.expr(recency),
+            "big_spender": F.expr(case_flag("o_totalprice >= 150000", "Yes", "NO")),
         }
     )
     return out.select(

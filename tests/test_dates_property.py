@@ -42,7 +42,7 @@ def test_bq_date_diff_matches_model(spark, pairs):
         "a",
         "b",
         *[
-            bq_date_diff("a", "b", u).alias(u)
+            F.expr(bq_date_diff("a", "b", u)).alias(u)
             for u in ["DAY", "WEEK", "MONTH", "QUARTER", "YEAR"]
         ],
     ).collect()
@@ -59,11 +59,11 @@ def test_extract_parts_consistent(spark, dates):
     )
     out = df.select(
         "d",
-        extract_part("d", "YEAR").alias("y"),
-        extract_part("d", "QUARTER").alias("q"),
-        extract_part("d", "MONTH").alias("m"),
-        extract_part("d", "DAY").alias("day"),
-        extract_part("d", "DAYOFYEAR").alias("doy"),
+        F.expr(extract_part("d", "YEAR")).alias("y"),
+        F.expr(extract_part("d", "QUARTER")).alias("q"),
+        F.expr(extract_part("d", "MONTH")).alias("m"),
+        F.expr(extract_part("d", "DAY")).alias("day"),
+        F.expr(extract_part("d", "DAYOFYEAR")).alias("doy"),
     ).collect()
     for r in out:
         d = r["d"]
@@ -89,8 +89,10 @@ def test_known_bq_boundary_cases(spark):
         got = (
             spark.range(1)
             .select(
-                bq_date_diff(
-                    F.to_date(F.lit(r["a"])), F.to_date(F.lit(r["b"])), r["unit"]
+                F.expr(
+                    bq_date_diff(
+                        f"to_date('{r['a']}')", f"to_date('{r['b']}')", r["unit"]
+                    )
                 ).alias("v")
             )
             .first()["v"]

@@ -4,6 +4,9 @@ sentinel decodes, format_date directives, null normalization."""
 
 from __future__ import annotations
 
+import datetime as dt
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
@@ -17,6 +20,7 @@ from idr_data_pipelines_spark.functions import (
     null_default,
     null_normalize,
     safe_cast,
+    sql_literal,
     str_sentinel_decode,
 )
 
@@ -24,25 +28,25 @@ from idr_data_pipelines_spark.functions import (
 def test_safe_cast_null_on_error_and_type_map(spark):
     df = spark.createDataFrame([("12", "x")], ["good", "bad"])
     row = df.select(
-        safe_cast("good", "INT").alias("g"),
-        safe_cast("bad", "INT64").alias("b"),
-        safe_cast(F.lit("3.25"), "NUMERIC").alias("n"),
+        F.expr(safe_cast("good", "INT")).alias("g"),
+        F.expr(safe_cast("bad", "INT64")).alias("b"),
+        F.expr(safe_cast("'3.25'", "NUMERIC")).alias("n"),
     ).first()
     assert row["g"] == 12 and row["b"] is None
     assert str(row["n"]) == "3.250000000"
     assert dict(
-        df.select(safe_cast("good", "INT").alias("g")).dtypes
+        df.select(F.expr(safe_cast("good", "INT")).alias("g")).dtypes
     )["g"] == "bigint"  # BQ INT is INT64
 
 
 def test_bq_cast_strict_raises_on_malformed(spark):
     df = spark.createDataFrame([("notanumber",)], ["v"])
     with pytest.raises(Exception) as exc:
-        df.select(bq_cast("v", "INT")).collect()
+        df.select(F.expr(bq_cast("v", "INT"))).collect()
     assert "bq_cast to INT failed" in str(exc.value)
     # nulls pass through without raising (BQ CAST(NULL) is NULL)
     df2 = spark.createDataFrame([(None,)], "v string")
-    assert df2.select(bq_cast("v", "INT").alias("o")).first()["o"] is None
+    assert df2.select(F.expr(bq_cast("v", "INT")).alias("o")).first()["o"] is None
 
 
 def test_case_builders_contracts(spark):
@@ -51,14 +55,13 @@ def test_case_builders_contracts(spark):
     )
     out = df.select(
         "k",
-        case_map("k", {"a": "A", "b": "B"}).alias("no_else"),
-        case_map("k", {"a": "A"}, default="other").alias("with_default"),
-        case_map("k", {"a": "A"}, default_to_input=True).alias("passthrough"),
-        case_flag(F.col("n") > 10, "Yes", "NO").alias("flag"),
-        case_bucket(
-            "n",
-            [(F.col("n") < 10, F.lit("small")), (F.col("n") < 100, F.lit("mid"))],
-        ).alias("bucket_no_else"),
+        F.expr(case_map("k", {"a": "A", "b": "B"})).alias("no_else"),
+        F.expr(case_map("k", {"a": "A"}, default="other")).alias("with_default"),
+        F.expr(case_map("k", {"a": "A"}, default_to_input=True)).alias("passthrough"),
+        F.expr(case_flag("n > 10", "Yes", "NO")).alias("flag"),
+        F.expr(case_bucket([("n < 10", "small"), ("n < 100", "mid")])).alias(
+            "bucket_no_else"
+        ),
     ).collect()
     rows = {r["k"]: r for r in out}
     assert rows["zz"]["no_else"] is None          # CASE without ELSE → NULL
@@ -73,8 +76,8 @@ def test_sentinel_decode_and_null_default(spark):
     out = [
         (r["d"], r["nd"])
         for r in df.select(
-            str_sentinel_decode("v", {"LDL": 0}, cast_to="decimal(18,2)").alias("d"),
-            null_default("v", "Unknown").alias("nd"),
+            F.expr(str_sentinel_decode("v", {"LDL": 0}, cast_to="decimal(18,2)")).alias("d"),
+            F.expr(null_default("v", "Unknown")).alias("nd"),
         ).collect()
     ]
     vals = [float(d) if d is not None else None for d, _ in out]
@@ -92,7 +95,7 @@ def test_sentinel_decode_strict_raises_like_bq_cast(spark):
     got = [
         r["d"]
         for r in ok.select(
-            str_sentinel_decode("v", {"LDL": 0}, "decimal(18,2)", strict=True).alias("d")
+            F.expr(str_sentinel_decode("v", {"LDL": 0}, "decimal(18,2)", strict=True)).alias("d")
         ).collect()
     ]
     assert [float(d) if d is not None else None for d in got] == [0.0, 850.0, None]
@@ -100,17 +103,17 @@ def test_sentinel_decode_strict_raises_like_bq_cast(spark):
     bad = spark.createDataFrame([("junk",)], "v string")
     with pytest.raises(Exception, match="str_sentinel_decode"):
         bad.select(
-            str_sentinel_decode("v", {"LDL": 0}, "decimal(18,2)", strict=True).alias("d")
+            F.expr(str_sentinel_decode("v", {"LDL": 0}, "decimal(18,2)", strict=True)).alias("d")
         ).collect()
 
 
 def test_format_date_directives(spark):
     df = spark.range(1).select(F.to_date(F.lit("2022-01-05")).alias("d"))
     row = df.select(
-        format_date("d", "%Y").alias("y"),
-        format_date("d", "%B").alias("bm"),
-        format_date("d", "%Y-%m-%d").alias("iso"),
-        format_date("d", "%A").alias("dow"),
+        F.expr(format_date("d", "%Y")).alias("y"),
+        F.expr(format_date("d", "%B")).alias("bm"),
+        F.expr(format_date("d", "%Y-%m-%d")).alias("iso"),
+        F.expr(format_date("d", "%A")).alias("dow"),
     ).first()
     assert row["y"] == "2022"
     assert row["bm"] == "January"
@@ -125,15 +128,45 @@ def test_format_date_quotes_literal_letters(spark):
         F.to_timestamp(F.lit("2022-01-05 07:09:11")).alias("d")
     )
     row = df.select(
-        format_date("d", "%Y-%m-%dT%H:%M:%S").alias("iso_t"),
-        format_date("d", "Week %d").alias("wk"),
-        format_date("d", "100%% %Y").alias("pct"),
+        F.expr(format_date("d", "%Y-%m-%dT%H:%M:%S")).alias("iso_t"),
+        F.expr(format_date("d", "Week %d")).alias("wk"),
+        F.expr(format_date("d", "100%% %Y")).alias("pct"),
+        F.expr(format_date("d", "%Y'%m")).alias("quote"),
     ).first()
     assert row["iso_t"] == "2022-01-05T07:09:11"
     assert row["wk"] == "Week 05"
     assert row["pct"] == "100% 2022"
+    assert row["quote"] == "2022'01"
     with pytest.raises(ValueError):
         format_date("d", "%Q")
+
+
+_LITERALS = [
+    "plain", "it's", "a''b", "back\\slash", "tab\tvt\x0bff\x0c", "lf\ncr\r",
+    "ünï©ødé ✓", "yyyy-MM-dd'T'HH", "",
+    0, -(2**31), 2**40, 1.5, 1e-05, float("inf"), float("nan"), True, None,
+    dt.date(2024, 2, 29), Decimal("1.50"), Decimal("1E+2"), Decimal("0.001"),
+]
+
+
+@pytest.mark.parametrize("value", _LITERALS, ids=repr)
+def test_sql_literal_matches_lit(spark, value):
+    """``sql_literal`` parses to the value and type ``F.lit`` gives,
+    under both ``escapedStringLiterals`` values: its text holds no
+    backslash, and a quote is ``chr(39)``, never doubled (``'a''b'``
+    is two adjacent literals, ``'ab'``)."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    text = sql_literal(value)
+    assert "\\" not in text
+    try:
+        for setting in ("false", "true"):
+            spark.conf.set(key, setting)
+            df = spark.range(1).select(F.expr(text).alias("t"), F.lit(value).alias("l"))
+            assert df.schema["t"].dataType == df.schema["l"].dataType, setting
+            got, want = df.first()
+            assert got == want or (got != got and want != want), (setting, got, want)
+    finally:
+        spark.conf.set(key, "false")
 
 
 def test_join_salted_rejects_outer(spark):
@@ -858,7 +891,7 @@ def test_extract_week_is_bq_sunday_based(spark):
     )
     got = {
         r["d"]: r["w"]
-        for r in df.select("d", extract_part("d", "WEEK").alias("w")).collect()
+        for r in df.select("d", F.expr(extract_part("d", "WEEK")).alias("w")).collect()
     }
     # BigQuery values: SELECT EXTRACT(WEEK FROM DATE '...')
     assert got == {

@@ -14,7 +14,6 @@ from idr_data_pipelines_spark.llmdata.dedup import (
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
     simhash_signatures,
 )
 from idr_data_pipelines_spark.llmdata.similarity import (
@@ -85,15 +84,6 @@ def test_simhash_locality(docs):
     assert ham(sigs[102], sigs[103]) == 0           # identical text
     assert ham(sigs[0], sigs[1]) <= 16              # near dups are close
     assert ham(sigs[0], sigs[100]) > 16             # unrelated are far
-
-
-def test_simhash_near_dup_pairs(docs):
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dup_pairs(docs, max_hamming=8).collect()
-    }
-    assert got[(102, 103)] == 0
-    assert all(h <= 8 for h in got.values())
 
 
 def test_dedup_exact_idempotent(docs):
@@ -377,23 +367,6 @@ def test_null_text_yields_null_signatures(spark):
     assert {(4, 6), (7, 5)} <= inc
     for got in (lsh, est, inc):
         assert not {i for p in got for i in p} & null_ids, got
-
-
-def test_simhash_near_dup_edge_hamming(spark):
-    """max_hamming=0 (exact-dup detection) must work — the 64-bit
-    single-chunk case used to overflow LongType; and chunk sizes must
-    cover all 64 bits when n_chunks doesn't divide 64."""
-    df = spark.createDataFrame(
-        [(1, "aa bb cc dd"), (2, "aa bb cc dd"), (3, "totally different words")],
-        ["doc_id", "text"],
-    )
-    got = {(r["id_a"], r["id_b"]) for r in
-           simhash_near_dup_pairs(df, max_hamming=0).collect()}
-    assert got == {(1, 2)}
-    # non-dividing chunk count (max_hamming=2 → 3 chunks over 64 bits)
-    got2 = {(r["id_a"], r["id_b"]) for r in
-            simhash_near_dup_pairs(df, max_hamming=2).collect()}
-    assert (1, 2) in got2
 
 
 def test_winnow_fingerprints(spark):
@@ -2975,7 +2948,6 @@ def test_guard_boundaries_minimum_legal_params_run(spark):
     error and satisfy the obvious degenerate-case shape."""
     from idr_data_pipelines_spark.llmdata.dedup import (
         minhash_lsh_pairs,
-        simhash_near_dup_pairs,
         word_shingles,
     )
     from idr_data_pipelines_spark.llmdata.sampling import (
@@ -3009,10 +2981,6 @@ def test_guard_boundaries_minimum_legal_params_run(spark):
     # minhash at the smallest legal banding (num_perm=2, bands=2, r=1)
     pairs = minhash_lsh_pairs(docs, num_perm=2, bands=2, shingle_k=1)
     assert pairs.filter("id_a = 0 AND id_b = 1").count() == 1
-
-    # simhash at max_hamming=0 (exact-signature collisions only)
-    sp = simhash_near_dup_pairs(docs, max_hamming=0)
-    assert sp.filter("id_a = 0 AND id_b = 1").count() == 1
 
     # count-min at depth=1, width=1: every key shares the one bucket,
     # so each estimate is the total row count (upper bound holds)
@@ -3061,7 +3029,6 @@ def test_empty_input_contracts(spark):
         dedup_exact,
         minhash_lsh_pairs,
         ngram_novelty_stats,
-        simhash_near_dup_pairs,
         winnow_candidate_pairs,
     )
     from idr_data_pipelines_spark.llmdata.sampling import (
@@ -3084,7 +3051,6 @@ def test_empty_input_contracts(spark):
 
     assert dedup_exact(empty).count() == 0
     assert minhash_lsh_pairs(empty, num_perm=4, bands=2).count() == 0
-    assert simhash_near_dup_pairs(empty).count() == 0
     assert winnow_candidate_pairs(empty).count() == 0
     assert cross_doc_ngram_stats(empty).count() == 0
     assert ngram_novelty_stats(empty).count() == 0

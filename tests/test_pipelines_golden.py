@@ -178,3 +178,71 @@ def test_vls_left_join_keeps_art_cohort(results):
     mmd_ids = {r["PatientID"] for r in results["mmd"].collect()}
     vls_ids = {r["PatientID"] for r in vls.collect()}
     assert mmd_ids == vls_ids
+
+
+# ------------------------------------------------------- build cost
+
+# py4j commands the four chains sent while building when their stages
+# were Column trees (this test's measurement on the same fixture
+# tables: 6,506-6,511 in three runs; parsed SQL text sends ~1,080).
+_PY4J_BUILD_CALLS_COLUMN_TREES = 6_508
+
+
+def test_nightly_build_cost(spark, tmp_path, monkeypatch):
+    """Building the four chains over a parquet catalog runs no Spark
+    job of its own — the only jobs are parquet schema inference, one
+    per ``catalog.table`` resolution — and sends few py4j commands:
+    each stage is parsed SQL text, not a Column tree built node by
+    node from the driver."""
+    import gc
+
+    from idr_data_pipelines_spark.sources import Catalog
+    from idr_data_pipelines_spark.sources import catalog as catalog_mod
+
+    from . import fixtures
+
+    for name in ("mfl_codes", "hub_details", "mmd_staging", "hts_staging",
+                 "vls_staging", "covid_staging"):
+        getattr(fixtures, name)(spark).write.parquet(str(tmp_path / f"{name}.parquet"))
+    resolutions = []
+    read = catalog_mod.read_parquet_dir
+
+    def counted_read(spark_, path, *a, **kw):
+        resolutions.append(path)
+        return read(spark_, path, *a, **kw)
+
+    monkeypatch.setattr(catalog_mod, "read_parquet_dir", counted_read)
+    cat = Catalog(spark, root=str(tmp_path))
+
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counted_send(*a, **kw):
+        calls[0] += 1
+        return send(*a, **kw)
+
+    group = "nightly-build-cost"
+    sc.setJobGroup(group, "building the four nightly chains")
+    gc.collect()
+    gc.disable()
+    client.send_command = counted_send
+    try:
+        mmd = build_mmd_pipeline(cat, as_of=AS_OF).build(spark)
+        cat.register("art_mmd", mmd)
+        for p in (build_vls_pipeline(cat, as_of=AS_OF),
+                  build_covid_pipeline(cat), build_hts_pipeline(cat)):
+            p.build(spark)
+    finally:
+        client.send_command = send
+        gc.enable()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    print(f"nightly build: {calls[0]} py4j calls, {len(jobs)} jobs, "
+          f"{len(resolutions)} parquet resolutions")
+    assert len(resolutions) == 8  # 4 staging, mfl_codes 3x, hub_details 1x
+    assert len(jobs) == len(resolutions)
+    assert calls[0] <= _PY4J_BUILD_CALLS_COLUMN_TREES // 5, calls[0]
