@@ -16,9 +16,12 @@ opt-in parity/debug mode: each stage then writes parquet and reads it
 back, which also reproduces the reference's safe self-overwrite
 pattern (SURVEY.md §2.11).
 
-``PipelineRunner`` executes a set of pipelines in dependency order
-(the ExternalTaskSensor analogue), with per-pipeline retries and a
-pluggable failure hook (the Mattermost-webhook analogue).
+``PipelineRunner`` executes a set of pipelines as a DAG on the caller's
+one SparkSession, concurrently wherever ``depends_on`` allows (the
+ExternalTaskSensor analogue: the reference's DAGs all fire at 04:00
+and only VLS waits for MMD, dags/vls_transforms.py:32-38), with
+per-pipeline retries and a pluggable failure hook (the
+Mattermost-webhook analogue).
 """
 
 from __future__ import annotations
@@ -26,8 +29,10 @@ from __future__ import annotations
 import logging
 import time
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 log = logging.getLogger(__name__)
@@ -166,10 +171,36 @@ class Pipeline:
 
 @dataclass
 class PipelineRunner:
-    """Execute pipelines respecting ``depends_on``, with retries and a
-    failure hook. Single-process topological order — the scheduler
-    (cron, Databricks jobs, Airflow) stays external, as in the
-    reference where cadence lives in the DAG schedule_interval."""
+    """Execute pipelines respecting ``depends_on``, concurrently where
+    the DAG allows, with retries and a failure hook.
+
+    ``run`` starts every pipeline whose upstreams are done on a thread
+    of its own and starts each dependent the moment its last
+    upstream finishes, so a pass costs its critical path (MMD→VLS in
+    the nightly set), not the sum of the chains. All threads share the
+    caller's SparkSession, whose scheduler shares the cores among their
+    jobs; each inherits the caller's job group, local properties and
+    tags, and labels its jobs with the description ``pipeline:<name>``.
+    There is no concurrency setting: the width of the DAG is the
+    concurrency.
+
+    On a pipeline's final failure (after ``retries``) ``on_failure``
+    fires once, nothing new starts — its dependents never run — and
+    in-flight siblings run to completion, so no job of this run is
+    still writing when ``run`` returns; then the first failure is
+    re-raised. ``results`` holds the finished pipelines' frames in the
+    submitted order.
+
+    Stage functions of independent pipelines run at the same time, so
+    session-wide state they write is shared: two concurrent pipelines
+    that call ``connected_components`` would race on its
+    ``spark.sql.shuffle.partitions`` write (``llmdata/dedup.py``). No
+    runner pipeline does so, and the four nightly chains set no
+    session conf.
+
+    The scheduler (cron, Databricks jobs, Airflow) stays external, as
+    in the reference where cadence lives in the DAG
+    schedule_interval."""
 
     retries: int = 2
     retry_delay_s: float = 0.0  # reference: 3 min; tests: 0
@@ -186,11 +217,9 @@ class PipelineRunner:
 
     def run(self, spark, pipelines: list[Pipeline], **kwargs) -> dict[str, DataFrame]:
         self.results = {}  # fresh per run — never return a prior run's frames
-        done: set[str] = set()
-        remaining = {p.name: p for p in pipelines}
-        known = set(remaining)
+        by_name = {p.name: p for p in pipelines}
         external = {
-            d for p in remaining.values() for d in p.depends_on if d not in known
+            d for p in pipelines for d in p.depends_on if d not in by_name
         }
         if external:
             if self.strict_deps:
@@ -203,22 +232,56 @@ class PipelineRunner:
                 "treating depends_on %s as satisfied EXTERNAL deps "
                 "(not in this run's pipeline set)", sorted(external)
             )
-        while remaining:
-            ready = [
-                p for p in remaining.values()
-                if all(d in done or d not in known for d in p.depends_on)
-            ]
-            if not ready:
-                raise RuntimeError(
-                    f"dependency cycle or unmet deps among: {sorted(remaining)}"
-                )
-            for p in ready:
-                self.results[p.name] = self._run_one(spark, p, **kwargs)
-                done.add(p.name)
-                del remaining[p.name]
+        # pipeline -> upstreams in this run not yet finished
+        waiting = {
+            name: {d for d in p.depends_on if d in by_name}
+            for name, p in by_name.items()
+        }
+        outputs: dict[str, DataFrame] = {}
+        failure: Exception | None = None
+        with ThreadPoolExecutor(
+            max_workers=max(len(by_name), 1), thread_name_prefix="pipeline"
+        ) as pool:
+            running = {}
+            while True:
+                if failure is None:
+                    for name in [n for n, deps in waiting.items() if not deps]:
+                        del waiting[name]
+                        # wrapped per submission: each thread gets its own
+                        # copy of the caller's local properties to label
+                        target = inheritable_thread_target(spark)(self._run_one)
+                        running[pool.submit(target, spark, by_name[name], **kwargs)] = name
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    name = running.pop(fut)
+                    try:
+                        outputs[name] = fut.result()
+                    except Exception as exc:  # noqa: BLE001 — re-raised after the drain
+                        failure = failure or exc
+                        continue
+                    for deps in waiting.values():
+                        deps.discard(name)
+        self.results = {n: outputs[n] for n in by_name if n in outputs}
+        if failure is not None:
+            raise failure
+        if waiting:
+            raise RuntimeError(
+                f"dependency cycle or unmet deps among: {sorted(waiting)}"
+            )
         return self.results
 
     def _run_one(self, spark, pipeline: Pipeline, **kwargs) -> DataFrame:
+        sc = spark.sparkContext
+        inherited = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"pipeline:{pipeline.name}")
+        try:
+            return self._run_with_retries(spark, pipeline, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.job.description", inherited)
+
+    def _run_with_retries(self, spark, pipeline: Pipeline, **kwargs) -> DataFrame:
         attempt = 0
         while True:
             try:

@@ -10,6 +10,7 @@ production lake) without code changes.
 from __future__ import annotations
 
 import posixpath
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -21,24 +22,41 @@ class Catalog:
 
     Precedence: explicitly registered DataFrames > parquet files under
     ``root`` > Spark catalog tables.
+
+    A Catalog is one run's snapshot of its inputs: each parquet table
+    is resolved (existence probe + schema inference) once per instance
+    and the same DataFrame is returned thereafter, so a file rewritten
+    in place is seen by the next run's new Catalog, not by this one.
+    Resolution is thread-safe — the chains of one nightly pass resolve
+    concurrently under ``PipelineRunner`` — and ``register`` still wins
+    over a resolved table.
     """
 
     def __init__(self, spark: SparkSession, root: str | None = None):
         self.spark = spark
         self.root = root
         self._frames: dict[str, DataFrame] = {}
+        self._resolved: dict[str, DataFrame] = {}
+        self._lock = threading.Lock()
+        # one lock per name: a name resolves once, distinct names at once
+        self._name_locks: dict[str, threading.Lock] = {}
 
     def register(self, name: str, df: DataFrame) -> None:
-        self._frames[name] = df
+        with self._lock:
+            self._frames[name] = df
 
     def table(self, name: str) -> DataFrame:
-        if name in self._frames:
-            return self._frames[name]
-        if self.root is not None:
-            path = posixpath.join(self.root, f"{name}.parquet")
-            if self._path_exists(path):
-                return read_parquet_dir(self.spark, path)
-        return self.spark.table(name)
+        with self._lock:
+            if name in self._frames:
+                return self._frames[name]
+            name_lock = self._name_locks.setdefault(name, threading.Lock())
+        with name_lock:
+            if name not in self._resolved and self.root is not None:
+                path = posixpath.join(self.root, f"{name}.parquet")
+                if self._path_exists(path):
+                    self._resolved[name] = read_parquet_dir(self.spark, path)
+            frame = self._resolved.get(name)
+        return self.spark.table(name) if frame is None else frame
 
     def _path_exists(self, path: str) -> bool:
         """Existence probe on WHATEVER filesystem ``root`` names. A

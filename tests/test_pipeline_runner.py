@@ -1,7 +1,11 @@
-"""Pipeline/PipelineRunner behaviors: dependency order, retries,
-failure hooks, per-stage materialization parity mode."""
+"""Pipeline/PipelineRunner behaviors: dependency order, concurrent
+independent pipelines, retries, failure hooks and drain, job labels,
+per-stage materialization parity mode."""
 
 from __future__ import annotations
+
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,17 +27,109 @@ def test_stages_compose_lazily(spark):
 
 
 def test_runner_dependency_order(spark):
-    order = []
+    """A diamond a→{b,c}→d declared out of order: each pipeline starts
+    only after its upstreams' sinks finished, and b and c — both ready
+    once a finishes — run at the same time (they meet at a barrier the
+    serial runner would break)."""
+    events = []
+    meet = threading.Barrier(2, timeout=30)
 
     def mk(name, deps=()):
-        p = Pipeline(name, source=_src(), depends_on=list(deps))
-        p.stage("mark", lambda df, n=name: (order.append(n), df)[1])
+        p = Pipeline(
+            name, source=lambda spark, n=name: (events.append(("start", n)), _src()(spark))[1],
+            depends_on=list(deps), sink=lambda df, n=name: events.append(("end", n)),
+        )
+        if name in ("b", "c"):
+            p.stage("meet", lambda df: (meet.wait(), df)[1])
         return p
 
     runner = PipelineRunner(retries=0)
-    # declare out of order on purpose
-    runner.run(spark, [mk("c", ["b"]), mk("b", ["a"]), mk("a")])
-    assert order.index("a") < order.index("b") < order.index("c")
+    runner.run(spark, [mk("d", ["b", "c"]), mk("c", ["a"]), mk("b", ["a"]), mk("a")])
+    at = {e: i for i, e in enumerate(events)}
+    assert at["end", "a"] < at["start", "b"] and at["end", "a"] < at["start", "c"]
+    assert at["start", "d"] > max(at["end", "b"], at["end", "c"])
+    assert list(runner.results) == ["d", "c", "b", "a"]  # submitted order
+
+
+def test_runner_runs_independent_pipelines_concurrently(spark):
+    """Two pipelines with no dependency between them are in flight at
+    once: their stage functions meet at a barrier, which a one-at-a-time
+    runner breaks after its timeout."""
+    meet = threading.Barrier(2, timeout=30)
+    pipes = [
+        Pipeline(n, source=_src()).stage("meet", lambda df: (meet.wait(), df)[1])
+        for n in ("left", "right")
+    ]
+    out = PipelineRunner(retries=0).run(spark, pipes)
+    assert {n: df.count() for n, df in out.items()} == {"left": 5, "right": 5}
+
+
+def test_runner_failure_drains_siblings_and_skips_dependents(spark):
+    """One of two concurrent pipelines fails: the hook fires once, the
+    in-flight sibling still reaches its sink before ``run`` returns,
+    the failed pipeline's dependent never starts, and the original
+    exception is what ``run`` raises."""
+    hooked = threading.Event()
+    failures, sunk, started = [], [], []
+    boom = RuntimeError("boom")
+
+    def fail(df):
+        raise boom
+
+    def on_failure(name, exc):
+        failures.append((name, exc))
+        hooked.set()
+
+    def slow_sink(df):
+        assert hooked.wait(timeout=30)
+        time.sleep(0.5)  # still writing when the failure is seen
+        sunk.append(df.count())
+
+    bad = Pipeline("bad", source=_src()).stage("fail", fail)
+    sibling = Pipeline("sibling", source=_src(), sink=slow_sink)
+    dependent = Pipeline(
+        "dependent", source=lambda s: (started.append(1), s.range(1))[1],
+        depends_on=["bad"],
+    )
+    runner = PipelineRunner(retries=1, on_failure=on_failure)
+    with pytest.raises(RuntimeError) as raised:
+        runner.run(spark, [bad, sibling, dependent])
+    assert raised.value is boom
+    assert failures == [("bad", boom)]
+    assert sunk == [5]
+    assert started == []
+    assert list(runner.results) == ["sibling"]
+
+
+def test_runner_labels_jobs_and_inherits_job_group(spark):
+    """Every job a pipeline runs carries the caller's job group and tag
+    and the description ``pipeline:<name>``; the caller's own
+    description is untouched."""
+    sc = spark.sparkContext
+    group = "runner-labels"
+    pipes = [
+        Pipeline(n, source=_src(), sink=lambda df: df.count())
+        for n in ("first", "second")
+    ]
+    sc.setJobGroup(group, "caller description")
+    spark.addTag(group)
+    try:
+        PipelineRunner(retries=0).run(spark, pipes)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        spark.removeTag(group)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    labels = set()
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+            labels.add(job.description().get())
+            tags = job.jobTags()
+            assert any(tags.apply(k).endswith(f"-{group}") for k in range(tags.size()))
+    assert labels == {"pipeline:first", "pipeline:second"}
 
 
 def test_runner_retries_then_succeeds(spark):

@@ -191,9 +191,9 @@ _PY4J_BUILD_CALLS_COLUMN_TREES = 6_508
 def test_nightly_build_cost(spark, tmp_path, monkeypatch):
     """Building the four chains over a parquet catalog runs no Spark
     job of its own — the only jobs are parquet schema inference, one
-    per ``catalog.table`` resolution — and sends few py4j commands:
-    each stage is parsed SQL text, not a Column tree built node by
-    node from the driver."""
+    per table the catalog resolves, however many chains read it — and
+    sends few py4j commands: each stage is parsed SQL text, not a
+    Column tree built node by node over py4j."""
     import gc
 
     from idr_data_pipelines_spark.sources import Catalog
@@ -243,6 +243,6 @@ def test_nightly_build_cost(spark, tmp_path, monkeypatch):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     print(f"nightly build: {calls[0]} py4j calls, {len(jobs)} jobs, "
           f"{len(resolutions)} parquet resolutions")
-    assert len(resolutions) == 8  # 4 staging, mfl_codes 3x, hub_details 1x
+    assert len(resolutions) == 6  # 4 staging, mfl_codes, hub_details
     assert len(jobs) == len(resolutions)
     assert calls[0] <= _PY4J_BUILD_CALLS_COLUMN_TREES // 5, calls[0]

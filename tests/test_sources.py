@@ -319,6 +319,62 @@ def test_catalog_probe_uses_hadoop_filesystem(spark, sf_dir, tmp_path):
         cat.table("no_such_table_xyz").collect()
 
 
+def test_catalog_is_one_runs_snapshot(spark, tmp_path):
+    """A Catalog resolves each parquet table once and hands back the
+    same frame; a file rewritten in place is seen by the next run's
+    new Catalog; a registered frame wins over a resolved table."""
+    from idr_data_pipelines_spark.sources import Catalog
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    cat = Catalog(spark, root=str(tmp_path))
+    assert cat.table("t") is cat.table("t")
+    assert cat.table("t").count() == 3
+
+    spark.range(7).write.mode("overwrite").parquet(path)
+    assert Catalog(spark, root=str(tmp_path)).table("t").count() == 7
+
+    override = spark.range(1)
+    cat.register("t", override)
+    assert cat.table("t") is override
+
+
+def test_catalog_resolves_each_name_once_under_threads(spark, tmp_path, monkeypatch):
+    """Concurrent ``table`` calls for one name (more threads than
+    cores, short switch interval) resolve it exactly once and all
+    receive the same frame."""
+    import sys
+    import threading
+
+    from idr_data_pipelines_spark.sources import Catalog
+    from idr_data_pipelines_spark.sources import catalog as catalog_mod
+
+    spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
+    reads = []
+    read = catalog_mod.read_parquet_dir
+    monkeypatch.setattr(
+        catalog_mod, "read_parquet_dir",
+        lambda *a, **kw: (reads.append(1), read(*a, **kw))[1],
+    )
+    cat = Catalog(spark, root=str(tmp_path))
+    got = []
+    threads = [
+        threading.Thread(target=lambda: got.append(cat.table("t"))) for _ in range(16)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(reads) == 1
+    assert len(got) == 16 and all(df is got[0] for df in got)
+
+
 def test_fsio_local_fallback_without_gateway(tmp_path):
     """Spark Connect has no JVM gateway: every fsio op must fall back
     to the local filesystem API (and ONLY then — with a live gateway,
