@@ -60,7 +60,7 @@ def _quality_gate(df: DataFrame) -> DataFrame:
     BEFORE the dedup stages so everything downstream shuffles less."""
     q = quality_score("text")
     return (
-        df.withColumns({k: q[k] for k in ("n_tokens", "stopword_ratio")})
+        df.withColumns({k: F.expr(q[k]) for k in ("n_tokens", "stopword_ratio")})
         .filter((F.col("n_tokens") >= 5) & (F.col("stopword_ratio") <= 0.5))
     )
 

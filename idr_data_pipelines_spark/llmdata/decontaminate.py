@@ -40,7 +40,7 @@ def benchmark_ngrams(
     string column, globally deduplicated (one shuffle over the — small
     — benchmark side only)."""
     return (
-        bench.select(F.explode(word_shingles(text_col, k)).alias("ngram"))
+        bench.select(F.explode(F.expr(word_shingles(text_col, k))).alias("ngram"))
         .distinct()
     )
 
@@ -52,7 +52,7 @@ def _exploded_ngrams(corpus, id_col, text_col, k):
     where the documented "final counts are IDENTICAL" contract was
     enforced by nothing structural)."""
     return corpus.select(
-        F.col(id_col), word_shingles(text_col, k).alias("__ngrams")
+        F.col(id_col), F.expr(word_shingles(text_col, k)).alias("__ngrams")
     ).select(
         id_col,
         F.size("__ngrams").alias("n_ngrams"),

@@ -98,7 +98,11 @@ def dedup_exact(df: DataFrame, text_col: str = "text") -> DataFrame:
             "input already has a column named '__fp', which this "
             "operator uses internally and drops — rename it first"
         )
-    return df.withColumn("__fp", fingerprint(text_col)).dropDuplicates(["__fp"]).drop("__fp")
+    return (
+        df.withColumn("__fp", F.expr(fingerprint(text_col)))
+        .dropDuplicates(["__fp"])
+        .drop("__fp")
+    )
 
 
 def dedup_incremental(
@@ -147,7 +151,7 @@ def dedup_incremental(
         )
     fresh = (
         new_docs.filter(F.col(id_col).isNotNull())
-        .withColumn(fp_col, fingerprint(text_col))
+        .withColumn(fp_col, F.expr(fingerprint(text_col)))
         .join(seen_fps.select(fp_col).distinct(), fp_col, "left_anti")
     )
     survivors = fresh.groupBy(fp_col).agg(F.min(id_col).alias(id_col))
@@ -163,7 +167,7 @@ def dedup_exact_hash_groups(
     from idr_data_pipelines_spark.llmdata.text import fingerprint
 
     return (
-        df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
+        df.select(F.col(id_col), F.expr(fingerprint(text_col)).alias("fp"))
         .groupBy("fp")
         .agg(
             F.count(F.lit(1)).alias("group_size"),
@@ -174,19 +178,20 @@ def dedup_exact_hash_groups(
 
 # -------------------------------------------------------------- shingles
 #
-# Every text builder below takes a column NAME and is written once, as
-# SQL text parsed by one ``F.expr``. One parse costs ~1 ms of build
-# time; the same tree built node by node through the Column API costs
-# one py4j round-trip per node, and every consumer's build pays it
-# (minhash verify, winnowing, n-gram decontamination, the repetition
-# filters). The SQL text holds no backslash: ``sql_literal`` renders a
-# regex escape as ``concat(chr(92), …)``, so the parser's legacy
-# escaped-literals setting cannot change how it parses. The optimizer
-# folds it to the plain literal, so plans show the regex ``\s+``
-# itself. A regex names a control character by its escape (``\n``),
-# never raw: a raw LF/VT/FF/CR in a folded literal prints verbatim in
-# the plan text, where it reads as a line break to anything that
-# parses plans by line (``plans.lint``).
+# Every text builder in ``llmdata`` takes a column NAME and returns SQL
+# text; the caller parses it once (``F.expr`` / ``selectExpr``). One
+# parse costs ~1 ms of build time; the same tree built node by node
+# through the Column API costs one py4j round-trip per node, and every
+# consumer's build pays it (minhash verify, winnowing, n-gram
+# decontamination, the repetition filters). The SQL text holds no
+# backslash: ``sql_literal`` renders a regex escape as
+# ``concat(chr(92), …)``, so the parser's legacy escaped-literals
+# setting cannot change how it parses. The optimizer folds it to the
+# plain literal, so plans show the regex ``\s+`` itself. A regex names
+# a control character by its escape (``\n``), never raw: a raw
+# LF/VT/FF/CR in a folded literal prints verbatim in the plan text,
+# where it reads as a line break to anything that parses plans by line
+# (``plans.lint``).
 
 
 _WHITESPACE_RUN = sql_literal(r"\s+")
@@ -198,10 +203,6 @@ def _tokens_sql(name: str) -> str:
     return f"split(lower(trim({sql_name(name)})), {_WHITESPACE_RUN})"
 
 
-def _tokens(name: str) -> Column:
-    return F.expr(_tokens_sql(name))
-
-
 def _let(expr: Column, fn) -> Column:
     """Let-binding for array expressions: evaluate ``expr`` once and
     reference it as a lambda variable inside ``fn``.
@@ -210,7 +211,8 @@ def _let(expr: Column, fn) -> Column:
     every use site, so an expensive array expression referenced 64
     times is *computed* 64 times. ``transform(array(e), x -> body)[1]``
     binds e to a lambda variable — one evaluation, many references.
-    ``_let_sql`` is the same binding for the SQL-text builders.
+    ``_let_sql`` is the same binding for the SQL-text builders; this
+    Column form serves the vector builders of ``similarity``.
     """
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
@@ -231,25 +233,10 @@ def _kgrams_sql(toks: str, k: int) -> str:
     )
 
 
-def _md5_hash32_sql(s: str) -> str:
-    """SQL text of ``md5_hash32``."""
-    return f"CAST(conv(substring(md5({s}), 1, 8), 16, 10) AS BIGINT)"
-
-
-def _word_shingles_sql(name: str, k: int) -> str:
-    """SQL text of ``word_shingles``."""
-    return _let_sql(
-        _tokens_sql(name),
-        "__t",
-        f"CASE WHEN size(__t) < {k} THEN array(array_join(__t, ' ')) "
-        f"ELSE array_distinct({_kgrams_sql('__t', k)}) END",
-    )
-
-
-def word_shingles(col: str, k: int = 3) -> Column:
-    """Distinct word k-shingles of the text column named ``col`` as an
-    array<string>. Documents shorter than k tokens yield their whole
-    text as one shingle.
+def word_shingles(col: str, k: int = 3) -> str:
+    """SQL text of the distinct word k-shingles of the text column
+    named ``col``, an array<string>. Documents shorter than k tokens
+    yield their whole text as one shingle.
 
     The tokens are let-bound: an unbound token array inside the gram
     lambda gets the split/lower/trim INLINED into every gram position
@@ -260,7 +247,12 @@ def word_shingles(col: str, k: int = 3) -> Column:
         # k=0 would emit n+1 EMPTY-string shingles per document —
         # every document suddenly "shares" the empty gram (r11 review)
         raise ValueError("k must be >= 1")
-    return F.expr(_word_shingles_sql(col, k))
+    return _let_sql(
+        _tokens_sql(col),
+        "__t",
+        f"CASE WHEN size(__t) < {k} THEN array(array_join(__t, ' ')) "
+        f"ELSE array_distinct({_kgrams_sql('__t', k)}) END",
+    )
 
 
 # -------------------------------------------------------------- MinHash
@@ -278,10 +270,11 @@ def _token_hashes_sql(name: str, token_hash: str = "xxhash64({})") -> str:
     )
 
 
-def shingle_hashes_positional(text_col: str, k: int = 3) -> Column:
-    """Ordered word-k-shingle hashes (duplicates kept) as array<long> —
-    position i is the hash of the k-gram starting at token i, the
-    "rolling hash" sequence that window algorithms (winnowing) consume.
+def shingle_hashes_positional(text_col: str, k: int = 3) -> str:
+    """SQL text of the ordered word-k-shingle hashes (duplicates kept),
+    an array<long> — position i is the hash of the k-gram starting at
+    token i, the "rolling hash" sequence that window algorithms
+    (winnowing) consume.
 
     String shingle materialization (slice + join per shingle) is the
     hot cost at scale, so shingles are never built as strings: tokens
@@ -292,17 +285,12 @@ def shingle_hashes_positional(text_col: str, k: int = 3) -> Column:
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    return F.expr(_shingle_hashes_positional_sql(text_col, k))
-
-
-def _shingle_hashes_positional_sql(name: str, k: int) -> str:
-    """SQL text of ``shingle_hashes_positional``."""
     args = ", ".join(
         f"element_at(__h, CAST(__i + {j} + 1 AS INT))" for j in range(k)
     )
     whole = "aggregate(__h, CAST(0 AS BIGINT), (__a, __x) -> xxhash64(__a, __x))"
     return _let_sql(
-        _token_hashes_sql(name),
+        _token_hashes_sql(text_col),
         "__h",
         f"CASE WHEN size(__h) < {k} THEN array({whole}) "
         f"ELSE transform(sequence(0, size(__h) - {k}), "
@@ -310,33 +298,32 @@ def _shingle_hashes_positional_sql(name: str, k: int) -> str:
     )
 
 
-def shingle_hashes(text_col: str, k: int = 3) -> Column:
-    """Distinct word-k-shingle hashes as array<long> — the set form
-    used for Jaccard/MinHash (see shingle_hashes_positional)."""
-    return F.array_distinct(shingle_hashes_positional(text_col, k))
+def shingle_hashes(text_col: str, k: int = 3) -> str:
+    """SQL text of the distinct word-k-shingle hashes, an array<long> —
+    the set form used for Jaccard/MinHash (see
+    shingle_hashes_positional)."""
+    return f"array_distinct({shingle_hashes_positional(text_col, k)})"
 
 
-def md5_hash32(s: Column) -> Column:
-    """First 32 bits of md5(s) as a non-negative long — the
-    ENGINE-PORTABLE string hash (md5 bytes are identical in every SQL
-    engine; a DuckDB oracle replays it as
-    ``('0x' || substr(md5(s),1,8))::BIGINT``). Production hashing
+def md5_hash32(s: str) -> str:
+    """SQL text of the first 32 bits of md5 of the string expression
+    ``s`` as a non-negative long — the ENGINE-PORTABLE string hash (md5
+    bytes are identical in every SQL engine; a DuckDB oracle replays it
+    as ``('0x' || substr(md5(s),1,8))::BIGINT``). Production hashing
     stays on ``xxhash64`` (~5× cheaper per string); this exists so
     hash-seeded pipelines can carry a cross-engine value-hash oracle."""
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+    return f"CAST(conv(substring(md5({s}), 1, 8), 16, 10) AS BIGINT)"
 
 
-def md5_shingle_hashes(col: str, k: int = 3) -> Column:
-    """Distinct word-k-shingle md5-32 hashes as array<long> — the
-    portable-hash counterpart of ``shingle_hashes``. Unlike the
-    xxhash64 form it materializes shingle strings (that IS the
-    portable identity md5 consumes); acceptable for the verification
-    variants, not the production hot path."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    return F.expr(
-        f"array_distinct(transform({_word_shingles_sql(col, k)}, "
-        f"__s -> {_md5_hash32_sql('__s')}))"
+def md5_shingle_hashes(col: str, k: int = 3) -> str:
+    """SQL text of the distinct word-k-shingle md5-32 hashes, an
+    array<long> — the portable-hash counterpart of ``shingle_hashes``.
+    Unlike the xxhash64 form it materializes shingle strings (that IS
+    the portable identity md5 consumes); acceptable for the
+    verification variants, not the production hot path."""
+    return (
+        f"array_distinct(transform({word_shingles(col, k)}, "
+        f"__s -> {md5_hash32('__s')}))"
     )
 
 
@@ -370,8 +357,9 @@ class _HashFamily:
     band table, pair generation and the exact-Jaccard verify — is
     written once and shared.
 
-    - ``shingles(text_col, k)``: the distinct shingle hashes,
-      array<long>, that the signature kernel and the verify consume;
+    - ``shingles(text_col, k)``: SQL text of the distinct shingle
+      hashes, array<long>, that the signature kernel and the verify
+      consume;
     - ``band_key`` / ``band_slot``: SQL templates of one band's key —
       ``band_slot`` wraps each of the band's ``r`` signature slots,
       ``band_key`` wraps their comma-joined list;
@@ -379,7 +367,7 @@ class _HashFamily:
       and its rounding (``None`` = the raw double). The threshold
       filters the column as output, i.e. AFTER rounding."""
 
-    shingles: Callable[[str, int], Column]
+    shingles: Callable[[str, int], str]
     band_key: str
     band_slot: str
     jaccard_col: str
@@ -498,7 +486,7 @@ def _signatures(
             base = df.repartition(target)
     shingled = base.select(
         F.col(id_col).alias("id"),
-        fam.shingles(text_col, shingle_k).alias("__sh"),
+        F.expr(fam.shingles(text_col, shingle_k)).alias("__sh"),
     )
     out_schema = StructType(
         [
@@ -698,11 +686,14 @@ def _band_join(b_band: DataFrame, c_band: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard(a: Column | str, b: Column | str) -> Column:
-    """Exact Jaccard similarity of two distinct-element arrays."""
-    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
-        F.array_union(a, b)
-    ).cast("double")
+def _jaccard(a: str, b: str) -> str:
+    """SQL text of the exact Jaccard similarity of two distinct-element
+    array columns named ``a`` and ``b``."""
+    a, b = sql_name(a), sql_name(b)
+    return (
+        f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+        f" / CAST(size(array_union({a}, {b})) AS DOUBLE)"
+    )
 
 
 def _shingle_table(
@@ -720,7 +711,7 @@ def _shingle_table(
     for rows the verify never reads)."""
     return _candidate_docs(docs, ids, id_col).select(
         F.col(id_col).alias("id"),
-        fam.shingles(text_col, shingle_k).alias("sh"),
+        F.expr(fam.shingles(text_col, shingle_k)).alias("sh"),
     )
 
 
@@ -765,11 +756,11 @@ def _verify(
         held = []
     jaccard = _jaccard("sh_a", "sh_b")
     if fam.jaccard_round is not None:
-        jaccard = F.round(jaccard, fam.jaccard_round)
+        jaccard = f"round({jaccard}, {fam.jaccard_round})"
     result = (
         pairs.join(sh_a.withColumnsRenamed({"id": a, "sh": "sh_a"}), a)
         .join(sh_b.withColumnsRenamed({"id": b, "sh": "sh_b"}), b)
-        .withColumn(fam.jaccard_col, jaccard)
+        .withColumn(fam.jaccard_col, F.expr(jaccard))
         .filter(F.col(fam.jaccard_col) >= threshold)
         .select(a, b, fam.jaccard_col)
     )
@@ -951,7 +942,7 @@ def minhash_md5_lsh_pairs(
 
 def minhash_md5_split_probe(
     df: DataFrame,
-    batch_pred,
+    batch_pred: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_perm: int = 16,
@@ -961,11 +952,12 @@ def minhash_md5_split_probe(
 ) -> DataFrame:
     """``minhash_md5_incremental_pairs`` for the case where batch and
     corpus are complementary SLICES of one frame (train/val splits,
-    shard audits): ``batch_pred`` is a callable mapping the id column
-    to a boolean — batch = rows where it holds, corpus = the rest.
+    shard audits): ``batch_pred`` is SQL predicate text over the
+    column ``id`` (the doc id) — batch = rows where it holds, corpus =
+    the rest (a NULL predicate puts the row in neither).
 
     Same output contract and values as calling the two-frame form on
-    ``df.filter(pred)`` / ``df.filter(~pred)`` — identical signatures
+    the rows where the predicate is true / false — identical signatures
     (per-doc projections), identical band join, identical verify —
     but HALF the corpus passes (r14, guide §2.3/§2.4):
 
@@ -984,9 +976,8 @@ def minhash_md5_split_probe(
         num_perm,
         bands,
     ).persist()
-    is_batch = batch_pred(F.col("id"))
     pairs = _band_join(
-        all_bands.filter(is_batch), all_bands.filter(~is_batch)
+        all_bands.filter(batch_pred), all_bands.filter(f"NOT ({batch_pred})")
     ).persist()
     result, held = _verify(
         _MD5, pairs, df, id_col, text_col, shingle_k, jaccard_threshold,
@@ -1039,7 +1030,7 @@ def minhash_md5_estimate_pairs(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
         )
     ).cast("double") / F.lit(float(num_perm))
-    exact = _jaccard("sh_a", "sh_b")
+    exact = F.expr(_jaccard("sh_a", "sh_b"))
     result = (
         pairs.join(
             sig_cand.withColumnsRenamed({"id": "id_a", "signature": "sig_a"}),
@@ -1096,7 +1087,7 @@ _SIMHASH_XXHASH64 = _SimHashFamily(
 # engine-portable: md5-32 token hashes (< 2^32); vote column b is the
 # b-th bit of the 8 hex characters read MSB-first (big-endian bytes)
 _SIMHASH_MD5 = _SimHashFamily(
-    token_hash=_md5_hash32_sql("{}"),
+    token_hash=md5_hash32("{}"),
     bit_dtype=">u4",
     bitorder="big",
     out_col="simhash32",
@@ -1250,12 +1241,12 @@ def ngram_jaccard_pairs(
     adjacent-id scoring) still amortize one shingle pass per doc
     across all its pairs."""
     sh = _candidate_docs(df, _candidate_ids(pairs, id_col), id_col).select(
-        F.col(id_col).alias("id"), word_shingles(text_col, k).alias("sh")
+        F.col(id_col).alias("id"), F.expr(word_shingles(text_col, k)).alias("sh")
     )
     return (
         pairs.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
+        .select("id_a", "id_b", F.expr(_jaccard("sh_a", "sh_b")).alias("jaccard"))
     )
 
 
@@ -1630,7 +1621,7 @@ def cross_doc_ngram_stats(
     shared_frac is an IEEE double ratio of two ints, so the flag
     threshold replays exactly in SQL."""
     grams = docs.filter(F.col(text_col).isNotNull()).select(
-        id_col, F.explode(word_shingles(text_col, k)).alias("gram")
+        id_col, F.explode(F.expr(word_shingles(text_col, k))).alias("gram")
     )
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("doc_freq"))
     per_doc = (
@@ -1686,7 +1677,7 @@ def winnow_candidate_pairs(
 
     fps = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
-        F.explode(winnow_md5_fingerprints(text_col, k, window)).alias("fp"),
+        F.explode(F.expr(winnow_md5_fingerprints(text_col, k, window))).alias("fp"),
     )
     # aggregate + anti-join, not COUNT OVER (PARTITION BY fp) (r10
     # review: window partitions get no AQE skew splitting, so the
@@ -1735,7 +1726,7 @@ def ngram_containment_pairs(
     ngram_jaccard_pairs), then two id-key array joins — candidate-
     driven, never all-pairs."""
     sh = _candidate_docs(df, _candidate_ids(pairs, id_col), id_col).select(
-        F.col(id_col).alias("id"), word_shingles(text_col, k).alias("sh")
+        F.col(id_col).alias("id"), F.expr(word_shingles(text_col, k)).alias("sh")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     return (
@@ -1835,7 +1826,7 @@ def ngram_novelty_stats(
     construction. The gram frame is recomputed, not cached, for the
     reason ``cross_doc_ngram_stats`` gives."""
     grams = docs.filter(F.col(text_col).isNotNull()).select(
-        id_col, F.explode(word_shingles(text_col, k)).alias("gram")
+        id_col, F.explode(F.expr(word_shingles(text_col, k))).alias("gram")
     )
     firsts = grams.groupBy("gram").agg(F.min(id_col).alias("first_doc"))
     per_doc = (
@@ -1919,22 +1910,18 @@ def remove_duplicate_spans(
                 f"input already has a column named '{col}', which this "
                 "operator uses internally and drops — rename it first"
             )
-    toks = _tokens(text_col)
-
-    # _let binds the tokenization once per row: without it Catalyst
+    toks = _tokens_sql(text_col)
+    # _let_sql binds the tokenization once per row: without it Catalyst
     # inlines the split/lower/trim into EVERY lambda invocation below
     # (one re-tokenization per gram position — O(n²·len) per document;
     # measured 27 s vs 3 s at sf0.1 for this operator alone)
-    def _grams(ts: Column) -> Column:
-        n = F.size(ts)
-        return F.when(
-            n < F.lit(k), F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), n - F.lit(k)),
-                lambda i: F.md5(F.array_join(F.slice(ts, i + 1, k), " ")),
-            )
-        )
+    grams = _let_sql(
+        toks,
+        "__t",
+        f"CASE WHEN size(__t) < {k} THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE transform(sequence(0, size(__t) - {k}), "
+        f"__i -> md5(array_join(slice(__t, __i + 1, {k}), ' '))) END",
+    )
 
     # A single-file input would run the tokenize+md5-gram projection
     # — the operator's dominant per-row cost — on ONE task (r14 stage
@@ -1946,8 +1933,8 @@ def remove_duplicate_spans(
         target = df.sparkSession.sparkContext.defaultParallelism
         if n_scan < max(2, target // 2):
             df = df.repartition(target)
-    # NULL text rides through untouched: _tokens(NULL) is a NULL
-    # array, _grams propagates it, posexplode drops the row from the
+    # NULL text rides through untouched: its token array is NULL, the
+    # gram CASE propagates it, posexplode drops the row from the
     # gram machinery, and the final projection yields NULL outputs.
     #
     # base feeds THREE consumers — the gram-df aggregate, the
@@ -1964,8 +1951,8 @@ def remove_duplicate_spans(
     # analogue is writing the gram table out once — the
     # materialize-the-intermediate shape Lee et al. 2022's suffix
     # pipeline uses. Released via unpersist_materialized(result).
-    base = df.select(
-        F.col(id_col), toks.alias("__toks"), _let(toks, _grams).alias("__gr")
+    base = df.selectExpr(
+        sql_name(id_col), f"{toks} AS __toks", f"{grams} AS __gr"
     ).persist()
     pg = base.select(
         id_col, F.posexplode("__gr").alias("__pos", "__g")
@@ -1986,42 +1973,30 @@ def remove_duplicate_spans(
     # Fold the sorted span starts into disjoint [s, e) intervals:
     # starts are ascending, so a start p merges into the open interval
     # iff p <= its end, and the merged end is always p + k (p is the
-    # largest start seen). _let-bound — an unbound fold closed over by
-    # the filter lambda would re-run the merge per TOKEN (the r13
+    # largest start seen). _let_sql-bound — an unbound fold closed over
+    # by the filter lambda would re-run the merge per TOKEN (the r13
     # single-evaluation-binding lens).
-    def _step(acc: Column, p: Column) -> Column:
-        last = F.element_at(acc, -1)
-        ivl = lambda s: F.struct(
-            s.alias("s"), (p + F.lit(k)).alias("e")
-        )
-        return F.when(
-            (F.size(acc) > 0) & (p <= last["e"]),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(ivl(last["s"]))
-            ),
-        ).otherwise(F.concat(acc, F.array(ivl(p))))
-
-    ivls = F.aggregate(
-        F.array_sort("__rpos"),
-        F.array().cast("array<struct<s:int,e:int>>"),
-        _step,
+    last = "element_at(__acc, -1)"
+    ivls = (
+        "aggregate(array_sort(__rpos), "
+        "CAST(array() AS ARRAY<STRUCT<s: INT, e: INT>>), "
+        f"(__acc, __p) -> CASE WHEN size(__acc) > 0 AND __p <= {last}.e "
+        "THEN concat(slice(__acc, 1, size(__acc) - 1), "
+        f"array(named_struct('s', {last}.s, 'e', __p + {k}))) "
+        f"ELSE concat(__acc, array(named_struct('s', __p, 'e', __p + {k}))) END)"
     )
-    kept = _let(
+    kept = _let_sql(
         ivls,
-        lambda iv: F.filter(
-            F.col("__toks"),
-            lambda tok, j: ~F.coalesce(
-                F.exists(iv, lambda t: (t["s"] <= j) & (j < t["e"])),
-                F.lit(False),
-            ),
-        ),
+        "__iv",
+        "filter(__toks, (__tok, __j) -> NOT coalesce("
+        "exists(__iv, __v -> __v.s <= __j AND __j < __v.e), FALSE))",
     )
     return _attach_materialized(
-        joined.select(
-            id_col,
-            F.array_join(kept, " ").alias("cleaned_text"),
-            F.size("__toks").cast("long").alias("n_tokens"),
-            (F.size("__toks") - F.size(kept)).cast("long").alias("n_removed"),
+        joined.selectExpr(
+            sql_name(id_col),
+            f"array_join({kept}, ' ') AS cleaned_text",
+            "CAST(size(__toks) AS BIGINT) AS n_tokens",
+            f"CAST(size(__toks) - size({kept}) AS BIGINT) AS n_removed",
         ),
         base,
     )

@@ -8,11 +8,12 @@ JVM projection — **no shuffle, no Python**: at 100 TB this stage is a
 pure map over the corpus scan, pipelined with whatever filter
 consumes the flags.
 
-Each metric takes the text column's NAME and is written once, as SQL
-text parsed by one ``F.expr`` (the form and its tokenizer are those of
-``dedup``'s shingle builders). Building the same trees through the
-Column API cost one py4j round-trip per node — ~0.33 s per
-``repetition_metrics`` call, measured r14 — on every consumer's build.
+Each metric takes the text column's NAME and returns SQL text, which
+the caller parses once (``F.expr`` / ``selectExpr``; the form and its
+tokenizer are those of ``dedup``'s shingle builders). Building the same
+trees through the Column API cost one py4j round-trip per node —
+~0.33 s per ``repetition_metrics`` call, measured r14 — on every
+consumer's build.
 
 The per-document mode computation (``top k-gram count``) is O(d·n)
 array work per doc (d = distinct k-grams); documents are bounded
@@ -22,7 +23,7 @@ alternative, which would shuffle the whole exploded corpus twice.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from idr_data_pipelines_spark.functions import sql_literal, sql_name
@@ -53,22 +54,23 @@ def _repeat_frac_sql(arr: str) -> str:
     )
 
 
-def dup_word_fraction(col: str = "text") -> Column:
-    """Fraction of word occurrences that are repeats of an earlier
-    word: ``1 - distinct_words / words``."""
-    return F.expr(_repeat_frac_sql(_tokens_sql(col)))
+def dup_word_fraction(col: str = "text") -> str:
+    """SQL text of the fraction of word occurrences that are repeats of
+    an earlier word: ``1 - distinct_words / words``."""
+    return _repeat_frac_sql(_tokens_sql(col))
 
 
-def dup_line_fraction(col: str = "text") -> Column:
-    """Fraction of duplicate lines (Gopher: drop if > 0.30). Lines are
-    verbatim LF splits — no normalization, matching the paper."""
-    return F.expr(_repeat_frac_sql(f"split({sql_name(col)}, {_LINE_BREAK})"))
+def dup_line_fraction(col: str = "text") -> str:
+    """SQL text of the fraction of duplicate lines (Gopher: drop if
+    > 0.30). Lines are verbatim LF splits — no normalization, matching
+    the paper."""
+    return _repeat_frac_sql(f"split({sql_name(col)}, {_LINE_BREAK})")
 
 
-def top_ngram_fraction(col: str = "text", k: int = 2) -> Column:
-    """Fraction of k-gram occurrences taken by the single most common
-    k-gram (Gopher: drop if top-2-gram fraction > 0.20). Documents
-    with < k tokens score 0.0.
+def top_ngram_fraction(col: str = "text", k: int = 2) -> str:
+    """SQL text of the fraction of k-gram occurrences taken by the
+    single most common k-gram (Gopher: drop if top-2-gram fraction
+    > 0.20). Documents with < k tokens score 0.0.
 
     The mode COUNT is the longest equal run of the sorted gram array,
     one O(n) fold — the naive per-distinct filter scan is O(d·n)
@@ -94,17 +96,15 @@ def top_ngram_fraction(col: str = "text", k: int = 2) -> Column:
         "__g",
         f"CAST({top} AS DOUBLE) / CAST(size(__g) AS DOUBLE)",
     )
-    return F.expr(
-        _let_sql(
-            _tokens_sql(col),
-            "__t",
-            f"CASE WHEN size(__t) < {k} THEN 0.0D ELSE {frac} END",
-        )
+    return _let_sql(
+        _tokens_sql(col),
+        "__t",
+        f"CASE WHEN size(__t) < {k} THEN 0.0D ELSE {frac} END",
     )
 
 
-def repetition_metrics(text_col: str = "text") -> dict[str, Column]:
-    """All repetition signals as named columns (compose with
+def repetition_metrics(text_col: str = "text") -> dict[str, str]:
+    """All repetition signals as SQL text by output name (compose with
     ``text.quality_score`` for the full Gopher filter set)."""
     return {
         "dup_word_frac": dup_word_fraction(text_col),
@@ -115,17 +115,19 @@ def repetition_metrics(text_col: str = "text") -> dict[str, Column]:
 
 
 def _gopher_pass_from(
-    m: dict[str, Column],
+    m: dict[str, str],
     max_dup_line_frac: float = 0.30,
     max_top_bigram_frac: float = 0.20,
     max_top_trigram_frac: float = 0.18,
-) -> Column:
-    """The Gopher repetition rule over ALREADY-BUILT metric columns
-    (thresholds from Rae et al. 2021 table A1; tune per corpus)."""
+) -> str:
+    """SQL text of the Gopher repetition rule over the metric
+    expressions ``m`` — SQL text or the names of columns that already
+    hold them (thresholds from Rae et al. 2021 table A1; tune per
+    corpus)."""
     return (
-        (m["dup_line_frac"] <= F.lit(max_dup_line_frac))
-        & (m["top_bigram_frac"] <= F.lit(max_top_bigram_frac))
-        & (m["top_trigram_frac"] <= F.lit(max_top_trigram_frac))
+        f"({m['dup_line_frac']}) <= {sql_literal(float(max_dup_line_frac))}"
+        f" AND ({m['top_bigram_frac']}) <= {sql_literal(float(max_top_bigram_frac))}"
+        f" AND ({m['top_trigram_frac']}) <= {sql_literal(float(max_top_trigram_frac))}"
     )
 
 
@@ -134,11 +136,12 @@ def gopher_repetition_pass(
     max_dup_line_frac: float = 0.30,
     max_top_bigram_frac: float = 0.20,
     max_top_trigram_frac: float = 0.18,
-) -> Column:
-    """Boolean pass flag for the Gopher repetition rules, built from
-    fresh metric expressions — standalone-use form; composers that
-    already hold the metric columns should apply ``_gopher_pass_from``
-    over those instead of paying the n-gram machinery twice."""
+) -> str:
+    """SQL text of the boolean pass flag for the Gopher repetition
+    rules, built from fresh metric expressions — standalone-use form;
+    composers that already hold the metric columns should apply
+    ``_gopher_pass_from`` over those instead of paying the n-gram
+    machinery twice."""
     return _gopher_pass_from(
         repetition_metrics(text_col),
         max_dup_line_frac,

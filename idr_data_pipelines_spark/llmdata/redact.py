@@ -20,8 +20,10 @@ could nibble at).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from idr_data_pipelines_spark.functions import sql_literal, sql_name
 
 # Ordered: applied top to bottom.
 PII_PATTERNS: dict[str, str] = {
@@ -37,36 +39,30 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def pii_counts(col: Column | str = "text") -> dict[str, Column]:
+def pii_counts(col: str = "text") -> dict[str, str]:
     """Per-class match counts on the raw text (computed independently
-    per class, before any redaction)."""
-    c = _c(col)
+    per class, before any redaction), as SQL text by output name."""
+    c = sql_name(col)
     return {
-        f"n_{name}": F.size(F.regexp_extract_all(c, F.lit(pat), 0)).cast("long")
+        f"n_{name}": (
+            f"CAST(size(regexp_extract_all({c}, {sql_literal(pat)}, 0)) AS BIGINT)"
+        )
         for name, pat in PII_PATTERNS.items()
     }
 
 
-def redact_pii(
-    col: Column | str = "text",
-    classes: list[str] | None = None,
-    token_fmt: str = "<{name}>",
-) -> Column:
-    """Replace every PII match with a typed placeholder token
-    (``<EMAIL>``, ``<IPV4>``, ...). ``classes`` restricts/reorders the
-    applied patterns."""
-    c = _c(col)
-    for name in classes or list(PII_PATTERNS):
-        c = F.regexp_replace(c, PII_PATTERNS[name], token_fmt.format(name=name.upper()))
+def redact_pii(col: str = "text") -> str:
+    """SQL text of the text with every PII match replaced by a typed
+    placeholder token (``<EMAIL>``, ``<IPV4>``, ...), the patterns
+    applied in ``PII_PATTERNS`` order."""
+    c = sql_name(col)
+    for name, pat in PII_PATTERNS.items():
+        c = f"regexp_replace({c}, {sql_literal(pat)}, '<{name.upper()}>')"
     return c
 
 
 def scrub_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Replace ``text_col`` with its redacted form and append per-class
     match counts — the audit columns a compliance review needs."""
-    counts = pii_counts(text_col)
-    return df.withColumns(counts).withColumn(text_col, redact_pii(text_col))
+    counts = {name: F.expr(e) for name, e in pii_counts(text_col).items()}
+    return df.withColumns(counts).withColumn(text_col, F.expr(redact_pii(text_col)))

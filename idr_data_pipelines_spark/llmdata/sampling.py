@@ -41,26 +41,40 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from idr_data_pipelines_spark.functions import sql_literal, sql_name
+
 # 15 hex chars = 60 bits: fits a BIGINT exactly in both Spark
 # (conv(_,16,10)) and DuckDB (CAST('0x'||_ AS BIGINT)), so the bucket
 # arithmetic is portable bit-for-bit.
 _HEX_CHARS = 15
 
 
-def _bucket_from_md5(h: Column, buckets: int) -> Column:
-    """[0, buckets) from an md5 hex column: 60-bit prefix, pmod.
-    The ONE definition of the portable-hash bucket arithmetic —
-    hash_bucket and shuffle_shards both compose it, so the oracle
-    contract (`('0x' || substring(md5(...),1,15))::BIGINT % n`) has a
-    single place to change."""
-    return F.pmod(
-        F.conv(F.substring(h, 1, _HEX_CHARS), 16, 10).cast("bigint"),
-        F.lit(buckets),
-    )
+def _salted_md5(salt: str, key_col: str) -> str:
+    """SQL text of ``md5(salt ‖ key)``, the hex digest every operator
+    here decides by (NULL for a NULL key)."""
+    return f"md5(concat({sql_literal(salt)}, CAST({sql_name(key_col)} AS STRING)))"
 
 
-def hash_bucket(key: Column | str, buckets: int = 1_000_000, salt: str = "") -> Column:
-    """Uniform deterministic bucket in [0, buckets) from md5(salt‖key).
+def _md5_prefix(h: str) -> str:
+    """SQL text of the 60-bit prefix of the md5 hex expression ``h`` as
+    a non-negative BIGINT — the ONE definition of the portable-hash
+    arithmetic: the buckets (``_bucket_from_md5``) and the weighted
+    sampler's uniform both read it, so the oracle contract
+    (``('0x' || substring(md5(...),1,15))::BIGINT``) has a single
+    place to change."""
+    return f"CAST(conv(substring({h}, 1, {_HEX_CHARS}), 16, 10) AS BIGINT)"
+
+
+def _bucket_from_md5(h: str, buckets: int) -> str:
+    """SQL text of [0, buckets) from the md5 hex expression ``h``: the
+    60-bit prefix, pmod. hash_bucket and shuffle_shards both compose
+    it."""
+    return f"pmod({_md5_prefix(h)}, {buckets})"
+
+
+def hash_bucket(key: str, buckets: int = 1_000_000, salt: str = "") -> str:
+    """SQL text of a uniform deterministic bucket in [0, buckets) from
+    md5(salt‖key), ``key`` being a column name.
 
     The SQL-portable twin (DuckDB oracle form):
     ``CAST(('0x' || substring(md5(salt || key), 1, 15)) AS BIGINT)
@@ -70,9 +84,7 @@ def hash_bucket(key: Column | str, buckets: int = 1_000_000, salt: str = "") -> 
         # pmod(x, 0) is NULL in Spark, not an error — a zero/negative
         # bucket count would silently null every assignment
         raise ValueError("buckets must be positive")
-    c = F.col(key) if isinstance(key, str) else key
-    h = F.md5(F.concat(F.lit(salt), c.cast("string")))
-    return _bucket_from_md5(h, buckets)
+    return _bucket_from_md5(_salted_md5(salt, key), buckets)
 
 
 def _guard_internal_cols(df: DataFrame, *names: str) -> None:
@@ -106,7 +118,7 @@ def sample_hash_mod(
     if not 0.0 <= fraction <= 1.0:
         raise ValueError("fraction must be in [0, 1]")
     threshold = int(fraction * buckets)
-    return df.filter(hash_bucket(key_col, buckets, salt) < threshold)
+    return df.filter(f"{hash_bucket(key_col, buckets, salt)} < {threshold}")
 
 
 def split_train_holdout(
@@ -132,7 +144,7 @@ def split_train_holdout(
         # corpus holdout — the one split error that leaks everything
         raise ValueError("holdout_fraction must be in [0, 1]")
     threshold = int(holdout_fraction * buckets)
-    bucket = hash_bucket(key_col, buckets, salt)
+    bucket = F.expr(hash_bucket(key_col, buckets, salt))
     return df.withColumn(
         split_col,
         F.when(bucket < threshold, F.lit("holdout"))
@@ -168,7 +180,7 @@ def mix_weighted(
         t = F.lit(int(w * buckets))
         thresh = F.when(src == s, t) if thresh is None else thresh.when(src == s, t)
     thresh = thresh.otherwise(F.lit(0))
-    return df.filter(hash_bucket(key_col, buckets, salt) < thresh)
+    return df.filter(F.expr(hash_bucket(key_col, buckets, salt)) < thresh)
 
 
 def pack_sequences(
@@ -236,7 +248,7 @@ def sample_stratified(
         raise ValueError("n_per_stratum must be positive")
     _guard_internal_cols(df, "__rk")
     w = Window.partitionBy(*strata_cols).orderBy(
-        hash_bucket(key_col, buckets, salt).asc(), F.col(key_col).asc()
+        F.expr(hash_bucket(key_col, buckets, salt)).asc(), F.col(key_col).asc()
     )
     # null keys excluded like the other selectors (module null-key
     # contract): Spark's NULLS-FIRST would hand them winning ranks
@@ -276,7 +288,7 @@ def sample_token_budget(
     _guard_internal_cols(df, "__cum")
     part = Window.partitionBy(group_col) if group_col else Window.partitionBy()
     w = part.orderBy(
-        hash_bucket(key_col, buckets, salt).asc(), F.col(key_col).asc()
+        F.expr(hash_bucket(key_col, buckets, salt)).asc(), F.col(key_col).asc()
     ).rowsBetween(Window.unboundedPreceding, -1)
     cum_before = F.coalesce(F.sum(F.col(token_col)).over(w), F.lit(0)).cast("bigint")
     # null keys excluded (module null-key contract): NULLS-FIRST would
@@ -320,7 +332,7 @@ def mix_weighted_repeat(
     if not weights:
         raise ValueError("empty weights")
     src = F.col(source_col)
-    h = hash_bucket(key_col, buckets, salt)
+    h = F.expr(hash_bucket(key_col, buckets, salt))
     copies: Column | None = None
     for s, w in weights.items():
         if w < 0:
@@ -499,7 +511,7 @@ def assign_kfold(
     if n_folds < 1:
         raise ValueError("n_folds must be >= 1")
     return df.withColumn(
-        fold_col, hash_bucket(key_col, n_folds, salt).cast("int")
+        fold_col, F.expr(hash_bucket(key_col, n_folds, salt)).cast("int")
     )
 
 
@@ -539,7 +551,7 @@ def sample_exact_k_per_group(
 def sample_weighted_k(
     df: DataFrame,
     key_col: str,
-    weight_col: Column | str,
+    weight_col: str,
     k: int,
     salt: str = "wsample",
 ) -> DataFrame:
@@ -559,23 +571,17 @@ def sample_weighted_k(
     if k < 0:
         raise ValueError("k must be >= 0")
     _guard_internal_cols(df, "__es")
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    kc = F.col(key_col)
+    w, kc = sql_name(weight_col), sql_name(key_col)
     # u in (0, 1): 60 md5 bits + 1 over 2^60 + 1 — never 0 or 1
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), kc.cast("string"))), 1, _HEX_CHARS),
-        16,
-        10,
-    ).cast("bigint")
-    u = (h.cast("double") + F.lit(1.0)) / F.lit(float((1 << 60) + 1))
-    es_key = F.log(u) / w.cast("double")
+    h = _md5_prefix(_salted_md5(salt, key_col))
+    u = f"(CAST({h} AS DOUBLE) + 1.0D) / {sql_literal(float((1 << 60) + 1))}"
     # null keys excluded like the other exact-k selectors (null u
     # would rank engine-dependently); null/<=0 weights have zero
     # inclusion probability in A-ES
     return (
-        df.filter(kc.isNotNull() & w.isNotNull() & (w > 0))
-        .withColumn("__es", es_key)
-        .orderBy(F.desc("__es"), kc)
+        df.filter(f"{kc} IS NOT NULL AND {w} IS NOT NULL AND {w} > 0")
+        .withColumn("__es", F.expr(f"ln({u}) / CAST({w} AS DOUBLE)"))
+        .orderBy(F.desc("__es"), F.col(key_col))
         .limit(k)
         .drop("__es")
     )
@@ -691,15 +697,13 @@ def shuffle_shards(
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
     _guard_internal_cols(df, "__h")
-    seed = f"{salt}:{epoch}:"
-    key = F.col(key_col)
     # the md5 is computed once and feeds BOTH the shard bucket and the
     # within-shard order, so compose _bucket_from_md5 on the shared h
     # rather than calling hash_bucket (which would embed a second md5)
-    h = F.md5(F.concat(F.lit(seed), key.cast("string")))
-    shard = _bucket_from_md5(h, n_shards)
-    out = df.withColumn(shard_col, shard).withColumn("__h", h)
-    w = Window.partitionBy(shard_col).orderBy(F.col("__h"), key)
+    h = _salted_md5(f"{salt}:{epoch}:", key_col)
+    out = df.withColumn(shard_col, F.expr(_bucket_from_md5(h, n_shards)))
+    out = out.withColumn("__h", F.expr(h))
+    w = Window.partitionBy(shard_col).orderBy(F.col("__h"), F.col(key_col))
     return out.withColumn(pos_col, F.row_number().over(w)).drop("__h")
 
 
@@ -850,10 +854,10 @@ def dsir_logratio_weights(
     grams = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         target.cast("boolean").alias("__tgt"),
-        F.explode(word_shingles(text_col, k)).alias("__gram"),
+        F.explode(F.expr(word_shingles(text_col, k))).alias("__gram"),
     )
     buckets = grams.select(
-        (md5_hash32(F.col("__gram")) % F.lit(n_buckets)).alias("__b"),
+        F.expr(f"{md5_hash32('__gram')} % {n_buckets}").alias("__b"),
         "__tgt",
         id_col,
     )

@@ -280,6 +280,7 @@ def hll_md5_registers(
     MAX — shuffle volume is O(partitions · groups · 2^b) regardless of
     row count; the register table (groups · 2^b rows) is the sketch.
     """
+    from idr_data_pipelines_spark.functions import sql_name
     from idr_data_pipelines_spark.llmdata.dedup import md5_hash32
 
     if not 1 <= b <= 26:
@@ -289,7 +290,7 @@ def hll_md5_registers(
         # a corpus-sized aggregation
         raise ValueError("b must be in [1, 26]")
     rem_bits = 32 - b
-    h = md5_hash32(F.col(key_col).cast("string"))
+    h = F.expr(md5_hash32(f"CAST({sql_name(key_col)} AS STRING)"))
     bucket = (h / F.lit(1 << rem_bits)).cast("long")  # top b bits
     rem = h % F.lit(1 << rem_bits)
     rho = F.when(rem == 0, F.lit(rem_bits + 1)).otherwise(

@@ -2,46 +2,53 @@
 
 All JVM-side (built-in functions, whole-stage codegen) — no Python in
 the hot path. Operates on a ``documents(doc_id, text, ...)`` table.
+
+The per-document builders take the text column's NAME and return SQL
+text (the ``dedup`` shingle-builder form): the caller parses it once
+with ``F.expr`` or ``selectExpr``, instead of the client assembling
+the tree node by node over py4j. Literals and regexes go through
+``sql_literal``, so caller strings (stopwords) cannot break the text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idr_data_pipelines_spark.functions import sql_literal, sql_name
 from idr_data_pipelines_spark.llmdata.dedup import (
+    _WHITESPACE_RUN,
     _kgrams_sql,
-    _let,
     _let_sql,
-    _md5_hash32_sql,
-    _shingle_hashes_positional_sql,
-    _tokens,
     _tokens_sql,
+    md5_hash32,
+    shingle_hashes_positional,
 )
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def token_count(col: Column | str = "text") -> Column:
-    """Whitespace token count. For BPE-ish subword estimates see
-    ``bpe_token_estimate``."""
-    c = F.trim(_c(col))
-    return F.when(F.length(c) == 0, F.lit(0)).otherwise(
-        F.size(F.split(c, r"\s+"))
-    ).cast("long")
-
-
-def bpe_token_estimate(col: Column | str = "text") -> Column:
-    """Rough BPE token estimate: split on word/number/punct boundaries
-    (a GPT-2-style pre-tokenizer regex), count pieces. Heuristic, but
-    deterministic and cheap at scale."""
-    c = _c(col)
-    pieces = F.regexp_extract_all(
-        c, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0
+def token_count(col: str = "text") -> str:
+    """SQL text of the whitespace token count, a long. For BPE-ish
+    subword estimates see ``bpe_token_estimate``."""
+    c = f"trim({sql_name(col)})"
+    return (
+        f"CAST(CASE WHEN length({c}) = 0 THEN 0 "
+        f"ELSE size(split({c}, {_WHITESPACE_RUN})) END AS BIGINT)"
     )
-    return F.size(pieces).cast("long")
+
+
+_BPE_PIECE = sql_literal(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
+
+
+def bpe_token_estimate(col: str = "text") -> str:
+    """SQL text of a rough BPE token estimate, a long: split on
+    word/number/punct boundaries (a GPT-2-style pre-tokenizer regex),
+    count pieces. Heuristic, but deterministic and cheap at scale."""
+    return (
+        f"CAST(size(regexp_extract_all({sql_name(col)}, {_BPE_PIECE}, 0))"
+        " AS BIGINT)"
+    )
 
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
@@ -54,40 +61,45 @@ _LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "les", "de", "et"],
     "de": ["der", "die", "das", "und", "ist"],
 }
+# the fewest marker hits that name a language; below it → 'und'
+_LANG_MIN_HITS = 1
 
 
-def _word_hits(c: Column, words: list[str]) -> Column:
-    """Number of marker-word occurrences (word-bounded regex count).
+def _word_hits(c: str, words: list[str]) -> str:
+    """SQL text of the number of marker-word occurrences in the string
+    expression ``c`` (word-bounded regex count).
 
     Words are ``re.escape``d before interpolation: quality_score takes
     CALLER-supplied stopwords, and an unescaped ``'c++'`` compiles as
     a possessive quantifier (silently counting runs of 'c') while
     ``'('`` fails regex compilation at execution time (r09 review).
+    Each pattern then goes through ``sql_literal``, so a quote or a
+    backslash in a word cannot end or escape the SQL string.
     The ``\\b`` anchors are CONDITIONAL on the word's edge characters:
     ``\\b`` only exists between a word char and a non-word char, so
     ``\\bc\\+\\+\\b`` can never match "c++ " — a word ending in a
     non-word char drops the trailing anchor. Plain-alpha words (every
     built-in ``_LANG_MARKERS`` entry, i.e. every oracle-replayed
     pattern) produce byte-identical regexes to before."""
-    import re
 
     def pat(w: str) -> str:
         lead = r"\b" if w[:1] and (w[0].isalnum() or w[0] == "_") else ""
         trail = r"\b" if w[-1:] and (w[-1].isalnum() or w[-1] == "_") else ""
         return lead + re.escape(w) + trail
 
-    total = F.lit(0)
-    for w in words:
-        total = total + F.size(F.regexp_extract_all(c, F.lit(pat(w)), 0))
-    return total
+    hits = "".join(
+        f" + size(regexp_extract_all({c}, {sql_literal(pat(w))}, 0))"
+        for w in words
+    )
+    return f"(0{hits})"
 
 
-def lang_id(col: Column | str = "text", min_hits: int = 1) -> Column:
-    """Heuristic language ID: highest marker-stopword hit count wins;
-    below ``min_hits`` → 'und' (undetermined).
+def lang_id(col: str = "text") -> str:
+    """SQL text of the heuristic language ID: highest marker-stopword
+    hit count wins; below one hit → 'und' (undetermined).
 
     The four 5-regex marker scores are let-bound into one array
-    (``_let``) and every comparison references the lambda variable
+    (``_let_sql``) and every comparison references the lambda variable
     (r10 review: the old form referenced each score expression and
     the greatest() of all of them once per when-branch, and Catalyst
     projection inlining re-evaluated the regexes at every use site —
@@ -95,59 +107,60 @@ def lang_id(col: Column | str = "text", min_hits: int = 1) -> Column:
     path; now each regex runs exactly once per row). Values are
     unchanged: array_max ≡ greatest over the same ints, and the
     first-max tie order is the same marker-dict order."""
-    c = F.lower(_c(col))
-    langs = list(_LANG_MARKERS)
-    score_arr = F.array(*[_word_hits(c, _LANG_MARKERS[g]) for g in langs])
+    c = f"lower({sql_name(col)})"
+    scores = ", ".join(_word_hits(c, words) for words in _LANG_MARKERS.values())
+    whens = " ".join(  # first max wins
+        f"WHEN element_at(__s, {i + 1}) = array_max(__s) "
+        f"AND array_max(__s) >= {_LANG_MIN_HITS} THEN {sql_literal(lang)}"
+        for i, lang in enumerate(_LANG_MARKERS)
+    )
+    return _let_sql(f"array({scores})", "__s", f"CASE {whens} ELSE 'und' END")
 
-    def pick(arr: Column) -> Column:
-        best = F.array_max(arr)
-        expr = None
-        for i, lang in enumerate(langs):  # first max wins
-            cond = (F.element_at(arr, i + 1) == best) & (
-                best >= F.lit(min_hits)
-            )
-            expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-        return expr.otherwise(F.lit("und"))
 
-    return _let(score_arr, pick)
+_NON_WORD_SPACE = sql_literal(r"[^\w\s]")
 
 
 def quality_score(
-    text_col: Column | str = "text",
+    text_col: str = "text",
     stopwords: list[str] | None = None,
-) -> dict[str, Column]:
-    """Quality-signal columns: length, token count, mean word length,
-    punctuation ratio, stopword ratio, alpha ratio. Combine/threshold
-    downstream (C4/Gopher-style filters)."""
-    c = _c(text_col)
-    n_chars = F.length(c).cast("double")
-    n_tokens = token_count(c).cast("double")
-    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    n_alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
+) -> dict[str, str]:
+    """Quality signals as SQL text by output name: length, token count,
+    mean word length, punctuation ratio, stopword ratio, alpha ratio.
+    Combine/threshold downstream (C4/Gopher-style filters)."""
+    c = sql_name(text_col)
+    n_chars = f"CAST(length({c}) AS DOUBLE)"
+    n_tokens = f"CAST({token_count(text_col)} AS DOUBLE)"
+    n_punct = (
+        f"length({c}) - length(regexp_replace({c}, {_NON_WORD_SPACE}, ''))"
+    )
+    n_alpha = f"length(regexp_replace({c}, '[^A-Za-z]', ''))"
     sw = stopwords or _LANG_MARKERS["en"]
-    sw_hits = _word_hits(F.lower(c), sw).cast("double")
-    safe_tokens = F.when(n_tokens == 0, F.lit(1.0)).otherwise(n_tokens)
-    safe_chars = F.when(n_chars == 0, F.lit(1.0)).otherwise(n_chars)
+    sw_hits = f"CAST({_word_hits(f'lower({c})', sw)} AS DOUBLE)"
+    safe_tokens = f"CASE WHEN {n_tokens} = 0 THEN 1.0D ELSE {n_tokens} END"
+    safe_chars = f"CASE WHEN {n_chars} = 0 THEN 1.0D ELSE {n_chars} END"
     # mean word length from the non-whitespace characters themselves —
     # robust to multi-space runs and leading/trailing padding; 0 for
     # empty/whitespace-only text
-    n_word_chars = F.length(F.regexp_replace(F.trim(c), r"\s+", "")).cast("double")
+    n_word_chars = (
+        f"CAST(length(regexp_replace(trim({c}), {_WHITESPACE_RUN}, '')) AS DOUBLE)"
+    )
     return {
-        "n_chars": n_chars.cast("long"),
-        "n_tokens": n_tokens.cast("long"),
-        "mean_word_len": n_word_chars / safe_tokens,
-        "punct_ratio": n_punct.cast("double") / safe_chars,
-        "alpha_ratio": n_alpha.cast("double") / safe_chars,
-        "stopword_ratio": sw_hits / safe_tokens,
+        "n_chars": f"CAST({n_chars} AS BIGINT)",
+        "n_tokens": f"CAST({n_tokens} AS BIGINT)",
+        "mean_word_len": f"{n_word_chars} / {safe_tokens}",
+        "punct_ratio": f"CAST({n_punct} AS DOUBLE) / {safe_chars}",
+        "alpha_ratio": f"CAST({n_alpha} AS DOUBLE) / {safe_chars}",
+        "stopword_ratio": f"{sw_hits} / {safe_tokens}",
     }
 
 
-def fingerprint(col: Column | str = "text") -> Column:
-    """Document fingerprint: md5 of whitespace-normalized, lowercased
-    text. Stable across engines (md5 is standard), used as the exact-
-    dedup key."""
-    c = F.lower(F.trim(F.regexp_replace(_c(col), r"\s+", " ")))
-    return F.md5(c)
+def fingerprint(col: str = "text") -> str:
+    """SQL text of the document fingerprint: md5 of whitespace-
+    normalized, lowercased text. Stable across engines (md5 is
+    standard), used as the exact-dedup key."""
+    return (
+        f"md5(lower(trim(regexp_replace({sql_name(col)}, {_WHITESPACE_RUN}, ' '))))"
+    )
 
 
 def _window_min_sql(hs: str, window: int) -> str:
@@ -163,10 +176,11 @@ def _window_min_sql(hs: str, window: int) -> str:
 
 def winnow_fingerprints(
     col: str = "text", k: int = 4, window: int = 4
-) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03): rolling word-k-gram hashes, then the minimum of every
-    ``window`` consecutive hashes, deduplicated — array<long>.
+) -> str:
+    """SQL text of the winnowing document fingerprints
+    (Schleimer/Wilkerson/Aiken, SIGMOD'03): rolling word-k-gram hashes,
+    then the minimum of every ``window`` consecutive hashes,
+    deduplicated — array<long>.
 
     Guarantee: two documents sharing any run of ≥ window+k-1 tokens
     share at least one fingerprint, while only ~2/(window+1) of all
@@ -179,12 +193,8 @@ def winnow_fingerprints(
         # window=0 would take array_min over EMPTY slices — every
         # fingerprint silently null — and k=0 is not a k-gram
         raise ValueError("k and window must be >= 1")
-    return F.expr(
-        _let_sql(
-            _shingle_hashes_positional_sql(col, k),
-            "__h",
-            _window_min_sql("__h", window),
-        )
+    return _let_sql(
+        shingle_hashes_positional(col, k), "__h", _window_min_sql("__h", window)
     )
 
 
@@ -198,15 +208,15 @@ def winnow_fingerprint_table(
     """(id, fingerprints array<long>) — see winnow_fingerprints."""
     return df.select(
         F.col(id_col).alias("id"),
-        winnow_fingerprints(text_col, k, window).alias("fingerprints"),
+        F.expr(winnow_fingerprints(text_col, k, window)).alias("fingerprints"),
     )
 
 
 def winnow_md5_fingerprints(
     col: str = "text", k: int = 4, window: int = 4
-) -> Column:
-    """Winnowing fingerprints with the ENGINE-PORTABLE md5-32 k-gram
-    hash — same algorithm as ``winnow_fingerprints`` (positional word
+) -> str:
+    """SQL text of the winnowing fingerprints with the ENGINE-PORTABLE
+    md5-32 k-gram hash — same algorithm as ``winnow_fingerprints`` (positional word
     k-gram hashes → min of every ``window`` consecutive hashes →
     distinct), but the k-gram identity is the first 32 bits of
     md5(k-gram string) instead of the xxhash64-over-token-hashes
@@ -227,9 +237,9 @@ def winnow_md5_fingerprints(
     hashes = _let_sql(
         _tokens_sql(col),
         "__t",
-        f"transform({kgrams}, __s -> {_md5_hash32_sql('__s')})",
+        f"transform({kgrams}, __s -> {md5_hash32('__s')})",
     )
-    return F.expr(_let_sql(hashes, "__h", _window_min_sql("__h", window)))
+    return _let_sql(hashes, "__h", _window_min_sql("__h", window))
 
 
 def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -237,7 +247,7 @@ def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     feats = quality_score(text_col)
     feats["lang_pred"] = lang_id(text_col)
     feats["fp"] = fingerprint(text_col)
-    return df.withColumns(feats)
+    return df.withColumns({name: F.expr(e) for name, e in feats.items()})
 
 
 def unigram_logprob_scores(
@@ -270,9 +280,8 @@ def unigram_logprob_scores(
     a count floor share one OOV bucket — the standard LM practice, and
     it also caps the broadcast).
     """
-    toks = df.select(
-        F.col(id_col),
-        F.explode(_tokens(text_col)).alias("tok"),
+    toks = df.selectExpr(
+        sql_name(id_col), f"explode({_tokens_sql(text_col)}) AS tok"
     ).filter(F.col("tok") != "")
     # eager=False (r10 review): the checkpoint still materializes the
     # vocab exactly once — at the FIRST action — for all consumers,
@@ -329,9 +338,8 @@ def bigram_logprob_scores(
     vocab-sized); for raw web-scale vocabularies pass ``False`` to
     hash-join the rollup instead.
     """
-    base = df.select(
-        F.col(id_col),
-        F.filter(_tokens(text_col), lambda t: t != "").alias("a"),
+    base = df.selectExpr(
+        sql_name(id_col), f"filter({_tokens_sql(text_col)}, __w -> __w != '') AS a"
     )
     pairs = (
         base.filter(F.size("a") >= 2)  # slice(len-1) errors on []
@@ -451,10 +459,8 @@ def vocab_coverage(
     """
     from pyspark.sql import Window
 
-    toks = df.select(
-        F.explode(
-            F.filter(_tokens(text_col), lambda t: t != "")
-        ).alias("tok")
+    toks = df.selectExpr(
+        f"explode(filter({_tokens_sql(text_col)}, __w -> __w != '')) AS tok"
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     w = Window.orderBy(F.desc("n"), F.asc("tok")).rowsBetween(
@@ -518,9 +524,8 @@ def zipf_lexical_stats(
 
     toks = (
         docs.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(group_col),
-            F.explode(_tokens(text_col)).alias("__tok"),
+        .selectExpr(
+            sql_name(group_col), f"explode({_tokens_sql(text_col)}) AS __tok"
         )
         .filter(F.col("__tok") != "")
     )

@@ -46,7 +46,7 @@ from idr_data_pipelines_spark.functions import (
     str_sentinel_decode,
 )
 from idr_data_pipelines_spark.llmdata.dedup import (
-    _tokens,
+    _tokens_sql,
     dedup_exact_hash_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -193,14 +193,14 @@ def _ab_parity(user_col: str = "user_id") -> F.Column:
     )
 
 
-def _toks(col: str = "text") -> F.Column:
-    """The module's canonical whitespace tokenizer, ``dedup._tokens`` —
-    split(lower(trim(text)), \\s+) with Java's ``\\s``. Every oracle
-    that tokenizes mirrors it as
+def _toks(col: str = "text") -> str:
+    """SQL text of the module's canonical whitespace tokenizer,
+    ``dedup._tokens_sql`` — split(lower(trim(text)), \\s+) with Java's
+    ``\\s``. Every oracle that tokenizes mirrors it as
     ``regexp_split_to_array(lower(trim(text)), '[\\t\\n\\v\\f\\r ]+')``:
     RE2's ``\\s`` has no VT, so the oracles spell Java's class out.
     Change BOTH or none."""
-    return _tokens(col)
+    return _tokens_sql(col)
 
 
 def _money_sum(col) -> F.Column:
@@ -1394,9 +1394,9 @@ def q_text_top_terms(spark, sf_dir):
     carries (token, partial count) thanks to map-side combine — never
     the exploded token stream."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = docs.select(
-        F.explode(_toks()).alias("token")
-    ).filter(F.col("token") != "")
+    toks = docs.selectExpr(f"explode({_toks()}) AS token").filter(
+        F.col("token") != ""
+    )
     return (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1427,9 +1427,7 @@ def q_text_collocations(spark, sf_dir):
     docs = spread_small_scan(
         _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
-    words = docs.select(
-        _toks().alias("w")
-    )
+    words = docs.selectExpr(f"{_toks()} AS w")
     terms = words.select(
         F.explode(
             F.concat(
@@ -1824,7 +1822,9 @@ def q_evt_dedup_stream_index(spark, sf_dir):
     docs = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .select("doc_id", "source", "lang", "n_chars", fingerprint("text").alias("fp"))
+        .selectExpr(
+            "doc_id", "source", "lang", "n_chars", f"{fingerprint('text')} AS fp"
+        )
     )
     base = tempfile.mkdtemp(prefix="idr_dedup_idx_")
     inbox, ckpt, state = f"{base}/in", f"{base}/ckpt", f"{base}/state"
@@ -2554,7 +2554,7 @@ def q_text_rake_keywords(spark, sf_dir):
     stop = ("the", "a")
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.posexplode(_toks()).alias("pos", "w")
+        "doc_id", F.posexplode(F.expr(_toks())).alias("pos", "w")
     ).withColumn("is_stop", F.col("w").isin(*stop).cast("int"))
     wseg = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -2831,7 +2831,7 @@ def q_text_dup_chunk_ratio(spark, sf_dir):
     int / exact int, rounded 6."""
     W = 16
     docs = _t(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _toks().alias("toks"))
+    base = docs.selectExpr("doc_id", f"{_toks()} AS toks")
     nblk = F.ceil(F.size("toks") / F.lit(W)).cast("int")
     blocks = (
         base.select(
@@ -3591,8 +3591,8 @@ def q_dedup_incremental(spark, sf_dir):
     from idr_data_pipelines_spark.llmdata.text import fingerprint
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    seen = docs.filter(F.col("doc_id") % 3 == 0).select(
-        fingerprint("text").alias("fp")
+    seen = docs.filter(F.col("doc_id") % 3 == 0).selectExpr(
+        f"{fingerprint('text')} AS fp"
     )
     new = docs.filter(F.col("doc_id") % 3 != 0)
     return dedup_incremental(new, seen).select(
@@ -3775,12 +3775,12 @@ def q_flagship_data_recipe(spark, sf_dir):
 
     m = repetition_metrics("text")
     kept = clean.filter(
-        (m["top_bigram_frac"] <= 0.05)
-        & (m["top_trigram_frac"] <= 0.04)
-        & (token_count("text") >= 30)
+        f"({m['top_bigram_frac']}) <= 0.05D"
+        f" AND ({m['top_trigram_frac']}) <= 0.04D"
+        f" AND {token_count('text')} >= 30"
     )
-    red = kept.withColumn("text", redact_pii("text"))
-    fp = red.withColumn("fp", fingerprint("text"))
+    red = kept.withColumn("text", F.expr(redact_pii("text")))
+    fp = red.withColumn("fp", F.expr(fingerprint("text")))
     # min-id survivor via row_number, NOT groupBy(min)+semi-join: the
     # self-join form duplicates the whole upstream chain (two corpus
     # scans, the repetition metrics and PII regexes evaluated twice);
@@ -3856,7 +3856,7 @@ def q_expr_json(spark, sf_dir):
 
 def q_text_token_count(spark, sf_dir):
     df = _t(spark, sf_dir, "documents")
-    return df.select("doc_id", token_count("text").alias("n_tokens"))
+    return df.selectExpr("doc_id", f"{token_count('text')} AS n_tokens")
 
 
 # ===================================================================
@@ -3913,8 +3913,8 @@ def q_pack_sequences(spark, sf_dir):
     SUM window ⇒ exactly SQL-expressible."""
     from idr_data_pipelines_spark.llmdata.sampling import pack_sequences
 
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", token_count("text").alias("n_tokens")
+    docs = _t(spark, sf_dir, "documents").selectExpr(
+        "doc_id", "lang", f"{token_count('text')} AS n_tokens"
     )
     return pack_sequences(
         docs, token_col="n_tokens", order_col="doc_id", max_tokens=512,
@@ -3926,18 +3926,18 @@ def q_text_quality(spark, sf_dir):
     """Quality signals: chars, tokens, alpha ratio, stopword ratio."""
     df = _t(spark, sf_dir, "documents")
     feats = quality_score("text")
-    return df.select(
+    return df.selectExpr(
         "doc_id",
-        feats["n_chars"].alias("n_chars"),
-        feats["n_tokens"].alias("n_tokens"),
-        feats["alpha_ratio"].alias("alpha_ratio"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
+        *(
+            f"{feats[name]} AS {name}"
+            for name in ("n_chars", "n_tokens", "alpha_ratio", "stopword_ratio")
+        ),
     )
 
 
 def q_text_fingerprint(spark, sf_dir):
     df = _t(spark, sf_dir, "documents")
-    return df.select("doc_id", fingerprint("text").alias("fp"))
+    return df.selectExpr("doc_id", f"{fingerprint('text')} AS fp")
 
 
 def q_text_winnow_fingerprint(spark, sf_dir):
@@ -3972,7 +3972,7 @@ def q_text_winnow_md5(spark, sf_dir):
     df = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     return df.select(
         "doc_id",
-        F.explode(winnow_md5_fingerprints("text", k=4, window=4)).alias("fp"),
+        F.explode(F.expr(winnow_md5_fingerprints("text", k=4, window=4))).alias("fp"),
     )  # fingerprints are array_distinct per doc → (doc_id, fp) already unique
 
 
@@ -4101,15 +4101,13 @@ def q_text_repetition(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     m = repetition_metrics("text")
-    return docs.select(
+    rep_pass = gopher_repetition_pass(
+        "text", max_top_bigram_frac=0.05, max_top_trigram_frac=0.04
+    )
+    return docs.selectExpr(
         "doc_id",
-        m["dup_word_frac"].alias("dup_word_frac"),
-        m["dup_line_frac"].alias("dup_line_frac"),
-        m["top_bigram_frac"].alias("top_bigram_frac"),
-        m["top_trigram_frac"].alias("top_trigram_frac"),
-        gopher_repetition_pass(
-            "text", max_top_bigram_frac=0.05, max_top_trigram_frac=0.04
-        ).alias("rep_pass"),
+        *(f"{e} AS {name}" for name, e in m.items()),
+        f"{rep_pass} AS rep_pass",
     )
 
 
@@ -4123,27 +4121,17 @@ def q_text_redact_pii(spark, sf_dir):
     from idr_data_pipelines_spark.llmdata.redact import pii_counts, redact_pii
 
     docs = _t(spark, sf_dir, "documents")
-    seeded = docs.select(
+    seeded = docs.selectExpr(
         "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com from "),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".0.0.1 call 555-"),
-            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            F.lit("-1234"),
-        ).alias("text"),
+        "concat(text, ' contact user', CAST(doc_id AS STRING),"
+        " '@example.com from ', CAST(doc_id % 256 AS STRING),"
+        " '.0.0.1 call 555-', lpad(CAST(doc_id % 10000 AS STRING), 4, '0'),"
+        " '-1234') AS text",
     )
-    counts = pii_counts("text")
-    return seeded.select(
+    return seeded.selectExpr(
         "doc_id",
-        redact_pii("text").alias("redacted"),
-        counts["n_email"].alias("n_email"),
-        counts["n_ipv4"].alias("n_ipv4"),
-        counts["n_ssn"].alias("n_ssn"),
-        counts["n_phone"].alias("n_phone"),
+        f"{redact_pii('text')} AS redacted",
+        *(f"{e} AS {name}" for name, e in pii_counts("text").items()),
     )
 
 
@@ -4381,10 +4369,10 @@ def q_text_lang_bpe(spark, sf_dir):
     from idr_data_pipelines_spark.llmdata.text import bpe_token_estimate, lang_id
 
     docs = _t(spark, sf_dir, "documents")
-    return docs.select(
+    return docs.selectExpr(
         "doc_id",
-        lang_id("text").alias("lang_pred"),
-        bpe_token_estimate("text").alias("bpe_tokens"),
+        f"{lang_id('text')} AS lang_pred",
+        f"{bpe_token_estimate('text')} AS bpe_tokens",
     )
 
 
@@ -4437,11 +4425,11 @@ def q_flagship_corpus_clean(spark, sf_dir):
         F.upper(F.regexp_replace("text", " ", "  ")).alias("text"),
     )
     corpus = docs.unionByName(mangled)
-    quality = corpus.withColumn("n_tokens", token_count("text")).filter(
+    quality = corpus.withColumn("n_tokens", F.expr(token_count("text"))).filter(
         F.col("n_tokens") >= 30
     )
     return (
-        quality.withColumn("fp", fingerprint("text"))
+        quality.withColumn("fp", F.expr(fingerprint("text")))
         .groupBy("fp")
         .agg(
             F.max("doc_id").alias("doc_id"),
@@ -4638,7 +4626,7 @@ def q_pack_bestfit(spark, sf_dir):
     docs = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
-        .select("doc_id", "source", token_count("text").alias("n_tok"))
+        .selectExpr("doc_id", "source", f"{token_count('text')} AS n_tok")
     )
     out = pack_sequences_bestfit(
         docs, "n_tok", "doc_id", max_tokens=1024, shard_col="source"
@@ -5043,10 +5031,7 @@ def q_text_tfidf_topterm(spark, sf_dir):
     broadcast (term cardinality ≪ corpus) and the only big shuffle is
     the (doc, term) count."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(_toks()).alias("term"),
-    )
+    toks = docs.selectExpr("doc_id", f"explode({_toks()}) AS term")
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n"))
@@ -5092,10 +5077,7 @@ def q_text_bm25_topk(spark, sf_dir):
     and the top-k is a single-column window (use the sketch top-k for
     unbounded k)."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(_toks()).alias("term"),
-    )
+    toks = docs.selectExpr("doc_id", f"explode({_toks()}) AS term")
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     n = dl.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total_len")
@@ -5158,7 +5140,7 @@ def q_text_chunk_windows(spark, sf_dir):
     W, S = _CHUNK_W, _CHUNK_S
     docs = _t(spark, sf_dir, "documents")
     toks = _toks()
-    base = docs.select("doc_id", toks.alias("toks"), F.size(toks).alias("n"))
+    base = docs.selectExpr("doc_id", f"{toks} AS toks", f"size({toks}) AS n")
     nch = F.lit(1) + F.greatest(
         F.lit(0),
         F.floor((F.col("n") - F.lit(W) + F.lit(S - 1)) / F.lit(S)).cast("int"),
@@ -5199,7 +5181,7 @@ def q_quality_logreg(spark, sf_dir):
     weights changes constants, not the plan."""
     docs = _t(spark, sf_dir, "documents")
     toks = _toks()
-    base = docs.select("doc_id", toks.alias("toks"), F.size(toks).alias("n"))
+    base = docs.selectExpr("doc_id", f"{toks} AS toks", f"size({toks}) AS n")
     stop_hits = F.size(F.filter("toks", lambda t: t.isin("the", "a")))
     char_sum = F.aggregate(
         F.transform("toks", lambda t: F.length(t)),
@@ -5720,7 +5702,7 @@ def q_text_hashed_features(spark, sf_dir):
     — that is the point of feature hashing at 100 TB."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select(
-        "doc_id", F.explode(_toks()).alias("tok")
+        "doc_id", F.explode(F.expr(_toks())).alias("tok")
     ).filter(F.col("tok") != "")
     bucket = (
         F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10)
@@ -5845,7 +5827,7 @@ def q_text_bigram_lm(spark, sf_dir):
     nested-loop). Top-k via TakeOrdered with a full
     (n desc, w1, w2) tiebreak."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = docs.select(F.filter(_toks(), lambda t: t != "").alias("a"))
+    toks = docs.selectExpr(f"filter({_toks()}, t -> t != '') AS a")
     pairs = (
         toks.filter(F.size("a") >= 2)  # slice(len-1) errors on []
         .select(
@@ -5961,8 +5943,7 @@ def q_docs_gopher_rules(spark, sf_dir):
     shuffles, map-only at any scale); each rule is its own column so
     downstream analysis can attribute rejections."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.filter(_toks(), lambda t: t != "")
-    d = docs.select("doc_id", toks.alias("a"))
+    d = docs.selectExpr("doc_id", f"filter({_toks()}, t -> t != '') AS a")
     n_words = F.size("a")
     total_len = F.aggregate(
         "a", F.lit(0), lambda acc, t: acc + F.length(t)
@@ -6010,7 +5991,7 @@ def q_docs_remove_dup_chunks(spark, sf_dir):
     (ndocs counts distinct docs, matching the ratio op)."""
     W = 16
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    base = docs.select("doc_id", _toks().alias("toks"))
+    base = docs.selectExpr("doc_id", f"{_toks()} AS toks")
     nblk = F.ceil(F.size("toks") / F.lit(W)).cast("int")
     blocks = base.select(
         "doc_id",
@@ -6780,7 +6761,7 @@ def q_dedup_cross_split_leakage(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_md5_split_probe(
         docs,
-        lambda c: hash_bucket(c, buckets=5, salt="split") == 0,
+        f"{hash_bucket('id', buckets=5, salt='split')} = 0",
         num_perm=16, bands=4, shingle_k=3, jaccard_threshold=0.5,
     )
     best = pairs.groupBy("id_new").agg(
@@ -6813,7 +6794,7 @@ def q_docs_langid_audit(spark, sf_dir):
     from idr_data_pipelines_spark.llmdata.text import lang_id
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    pred = docs.select("lang", lang_id("text").alias("predicted"))
+    pred = docs.selectExpr("lang", f"{lang_id('text')} AS predicted")
     per = pred.groupBy("lang", "predicted").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -7932,7 +7913,7 @@ def q_dedup_minhash_lsh_invariants(spark, sf_dir):
     pairs = minhash_lsh_pairs(
         corpus, num_perm=64, bands=16, shingle_k=3, jaccard_threshold=0.5
     )
-    docs = corpus.select("doc_id", fingerprint("text").alias("__fp"))
+    docs = corpus.selectExpr("doc_id", f"{fingerprint('text')} AS __fp")
     tagged = (
         pairs.join(
             docs.select(
@@ -8005,7 +7986,7 @@ def q_dedup_simhash_invariants(spark, sf_dir):
         F.col("doc_id").alias("id"),
         "text",
         F.when(
-            F.col("text").isNotNull(), fingerprint("text")
+            F.col("text").isNotNull(), F.expr(fingerprint("text"))
         ).alias("__fp"),
     )
     joined = sigs.join(docs, "id")
@@ -8048,7 +8029,7 @@ def q_text_winnow_fingerprint_invariants(spark, sf_dir):
         F.col("doc_id").alias("id"),
         F.col("text").isNotNull().alias("__has_text"),
         F.greatest(
-            F.lit(1), token_count("text") - F.lit(4) + F.lit(1)
+            F.lit(1), F.expr(token_count("text")) - F.lit(4) + F.lit(1)
         ).alias("__max_fps"),
     )
     joined = out.join(docs, "id")
@@ -13765,17 +13746,16 @@ def q_split_cluster_safe(spark, sf_dir):
         F.col("id").alias("doc_id"), "component"
     )
     keyed = docs.select("doc_id").join(comp, "doc_id", "left")
-    split_key = F.coalesce(F.col("component"), F.col("doc_id"))
-    return keyed.select(
+    holdout = f"{hash_bucket('split_key', 1_000_000, 'split')} < 200000"
+    return keyed.selectExpr(
         "doc_id",
-        split_key.alias("split_key"),
-        F.col("component").isNotNull().alias("is_clustered"),
-        F.when(
-            hash_bucket(split_key, 1_000_000, "split") < 200_000,
-            F.lit("holdout"),
-        )
-        .otherwise(F.lit("train"))
-        .alias("split"),
+        "coalesce(component, doc_id) AS split_key",
+        "component IS NOT NULL AS is_clustered",
+    ).selectExpr(
+        "doc_id",
+        "split_key",
+        "is_clustered",
+        f"CASE WHEN {holdout} THEN 'holdout' ELSE 'train' END AS split",
     )
 
 

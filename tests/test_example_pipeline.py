@@ -70,7 +70,7 @@ def test_example_audit_reports_and_lineage(spark, sf_dir):
         r["doc_id"]: r["b"]
         for r in docs.select(
             "doc_id",
-            hash_bucket("doc_id", buckets=1_000_000, salt="split").alias("b"),
+            F.expr(hash_bucket("doc_id", buckets=1_000_000, salt="split")).alias("b"),
         ).collect()
     }
     threshold = int(0.05 * 1_000_000)

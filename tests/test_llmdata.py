@@ -734,7 +734,7 @@ def test_repetition_metrics_semantics(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     m = repetition_metrics("text")
     got = {r["doc_id"]: r for r in
-           df.select("doc_id", *[v.alias(k) for k, v in m.items()]).collect()}
+           df.select("doc_id", *[F.expr(v).alias(k) for k, v in m.items()]).collect()}
     assert abs(got[1]["dup_word_frac"] - (1 - 2 / 6)) < 1e-12
     assert abs(got[1]["top_bigram_frac"] - 3 / 5) < 1e-12
     assert abs(got[2]["dup_line_frac"] - 0.25) < 1e-12
@@ -832,9 +832,9 @@ def test_repetition_metrics_match_python_reference(spark):
         m = repetition_metrics("text")
         got = df.select(
             "doc_id",
-            *[v.alias(k) for k, v in m.items()],
-            gopher_repetition_pass("text").alias("pass"),
-            _gopher_pass_from(m).alias("pass_from"),
+            *[F.expr(v).alias(k) for k, v in m.items()],
+            F.expr(gopher_repetition_pass("text")).alias("pass"),
+            F.expr(_gopher_pass_from(m)).alias("pass_from"),
         ).collect()
         assert len(got) == len(_TEXT_ROWS)
         for r in got:
@@ -894,11 +894,11 @@ def test_shingle_builders_match_python_reference(spark):
             r["doc_id"]: r
             for r in df.select(
                 "doc_id",
-                word_shingles("text", 2).alias("ws2"),
-                word_shingles("text", 3).alias("ws3"),
-                shingle_hashes_positional("text", 3).alias("shp3"),
-                shingle_hashes("text", 3).alias("sh3"),
-                md5_shingle_hashes("text", 3).alias("md5sh3"),
+                F.expr(word_shingles("text", 2)).alias("ws2"),
+                F.expr(word_shingles("text", 3)).alias("ws3"),
+                F.expr(shingle_hashes_positional("text", 3)).alias("shp3"),
+                F.expr(shingle_hashes("text", 3)).alias("sh3"),
+                F.expr(md5_shingle_hashes("text", 3)).alias("md5sh3"),
             ).collect()
         }
         lit = spark.range(1).select(
@@ -995,12 +995,27 @@ def test_text_builders_take_column_names(spark):
         dup_word_fraction,
         top_ngram_fraction,
     )
+    from idr_data_pipelines_spark.llmdata.redact import pii_counts, redact_pii
+    from idr_data_pipelines_spark.llmdata.sampling import hash_bucket
     from idr_data_pipelines_spark.llmdata.text import (
+        bpe_token_estimate,
+        fingerprint,
+        lang_id,
+        quality_score,
+        token_count,
         winnow_fingerprints,
         winnow_md5_fingerprints,
     )
 
     builders = {
+        "tc": token_count,
+        "bpe": bpe_token_estimate,
+        "lang": lang_id,
+        "fp": fingerprint,
+        "sw": lambda n: quality_score(n)["stopword_ratio"],
+        "red": redact_pii,
+        "pii": lambda n: pii_counts(n)["n_email"],
+        "hb": lambda n: hash_bucket(n, 97, "s"),
         "ws": lambda n: word_shingles(n, 2),
         "shp": lambda n: shingle_hashes_positional(n, 3),
         "sh": lambda n: shingle_hashes(n, 3),
@@ -1019,7 +1034,7 @@ def test_text_builders_take_column_names(spark):
 
     def run(name):
         return df.select(
-            "id", *[b(name).alias(k) for k, b in builders.items()]
+            "id", *[F.expr(b(name)).alias(k) for k, b in builders.items()]
         ).orderBy("id").collect()
 
     base = run("text")
@@ -1211,7 +1226,7 @@ def test_dedup_incremental_batch_vs_index(spark):
     seen_docs = spark.createDataFrame(
         [(100, "already seen text")], ["doc_id", "text"]
     )
-    seen = seen_docs.select(fingerprint("text").alias("fp"))
+    seen = seen_docs.select(F.expr(fingerprint("text")).alias("fp"))
     batch = spark.createDataFrame(
         [
             (1, "Already   SEEN text"),   # dup of index after normalize
@@ -1534,7 +1549,7 @@ def test_winnow_md5_same_guarantees_as_production(spark):
     fps = {
         r["doc_id"]: set(r["fps"])
         for r in df.select(
-            "doc_id", winnow_md5_fingerprints("text", k=4, window=4).alias("fps")
+            "doc_id", F.expr(winnow_md5_fingerprints("text", k=4, window=4)).alias("fps")
         ).collect()
     }
     assert fps[1] & fps[2]                 # shared run ⇒ shared fingerprint
@@ -2435,20 +2450,45 @@ def test_samplers_refuse_internal_column_collisions(spark):
 def test_quality_score_escapes_stopword_metachars(spark):
     """r09 review: caller-supplied stopwords are regex-escaped — 'c++'
     must count literal occurrences (not compile as a quantifier) and
-    '(' must not break pattern compilation."""
+    '(' must not break pattern compilation. Caller strings reach SQL
+    text as literals: a stopword holding a quote (``don't``) or a
+    backslash, and a ``hash_bucket`` salt holding both, parse to the
+    same values under both ``escapedStringLiterals`` values (the
+    buckets checked against md5 computed in Python)."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from idr_data_pipelines_spark.llmdata.sampling import hash_bucket
     from idr_data_pipelines_spark.llmdata.text import quality_score
 
     df = spark.createDataFrame(
-        [("we love c++ and c++ but not ccc ( really",)], ["text"]
+        [("we love c++ and c++ but not ccc ( really don't say a\\b twice a\\b",)],
+        ["text"],
     )
-    cols = quality_score("text", stopwords=["c++", "("])
-    row = df.select(
-        *[v.alias(k) for k, v in cols.items()]
-    ).collect()[0]
-    # 10 whitespace tokens; hits = 2 literal 'c++' + 1 literal '('
-    # (non-word edge chars drop the \b anchor that could never match)
-    assert row["n_tokens"] == 10
-    assert abs(row["stopword_ratio"] - 0.3) < 1e-9
+    keys = spark.range(20).withColumnRenamed("id", "doc_id")
+    salt = "it's a \\ salt"
+    want = {
+        k: int(hashlib.md5(f"{salt}{k}".encode()).hexdigest()[:15], 16) % 97
+        for k in range(20)
+    }
+    for conf in _text_conf_cases(spark):
+        cols = quality_score("text", stopwords=["c++", "(", "don't", "a\\b"])
+        row = df.select(
+            *[F.expr(v).alias(k) for k, v in cols.items()]
+        ).collect()[0]
+        # 15 whitespace tokens; hits = 2 literal 'c++' + 1 literal '('
+        # + 1 'don't' + 2 literal 'a\b' (non-word edge chars drop the
+        # \b anchor that could never match)
+        assert row["n_tokens"] == 15, conf
+        assert abs(row["stopword_ratio"] - 0.4) < 1e-9, conf
+        got = {
+            r["doc_id"]: r["b"]
+            for r in keys.select(
+                "doc_id", F.expr(hash_bucket("doc_id", 97, salt)).alias("b")
+            ).collect()
+        }
+        assert got == want, conf
 
 
 def test_pack_bestfit_null_tokens_loud_error(spark):
@@ -2971,10 +3011,10 @@ def test_guard_boundaries_minimum_legal_params_run(spark):
     )
 
     # shingles/winnow at k=1 / window=1
-    assert docs.select(word_shingles("text", k=1).alias("s")).count() == 3
+    assert docs.select(F.expr(word_shingles("text", k=1)).alias("s")).count() == 3
     assert (
         docs.select(
-            winnow_md5_fingerprints("text", k=1, window=1).alias("f")
+            F.expr(winnow_md5_fingerprints("text", k=1, window=1)).alias("f")
         ).count() == 3
     )
 
@@ -3061,7 +3101,7 @@ def test_empty_input_contracts(spark):
     assert mix_weighted(empty, "source", "doc_id", {"s": 1.0}).count() == 0
     assert count_min_build(empty, "source").count() == 0
     assert hll_md5_registers(empty, "doc_id").count() == 0
-    assert empty.withColumns(quality_score("text")).count() == 0
+    assert empty.selectExpr(*quality_score("text").values()).count() == 0
 
     emb = spark.createDataFrame([], "vec_id long, vec array<double>")
     with _pytest.raises(ValueError, match="no non-null embeddings"):

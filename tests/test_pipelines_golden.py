@@ -246,3 +246,47 @@ def test_nightly_build_cost(spark, tmp_path, monkeypatch):
     assert len(resolutions) == 6  # 4 staging, mfl_codes, hub_details
     assert len(jobs) == len(resolutions)
     assert calls[0] <= _PY4J_BUILD_CALLS_COLUMN_TREES // 5, calls[0]
+
+
+# py4j commands sent while building the four text registry entries
+# below when the llmdata text builders were Column trees (this test's
+# measurement at sf0.001, the same in three runs: 494 + 825 + 389 + 93;
+# SQL text sends ~50).
+_PY4J_TEXT_BUILD_CALLS_COLUMN_TREES = 1_801
+
+
+def test_text_builders_build_cost(spark, sf_dir):
+    """Building the text registry entries sends few py4j commands: the
+    token, quality, language, BPE and PII builders return SQL text
+    that each entry parses in one ``selectExpr``, instead of a Column
+    tree the client builds node by node over py4j."""
+    import gc
+
+    from idr_data_pipelines_spark.queries import QUERIES
+
+    names = ("text_quality", "text_lang_bpe", "text_redact_pii", "text_token_count")
+    for name in names:  # resolve and cache the documents table first
+        QUERIES[name](spark, sf_dir)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = dict.fromkeys(names, 0)
+    current = [names[0]]
+
+    def counted_send(*a, **kw):
+        calls[current[0]] += 1
+        return send(*a, **kw)
+
+    built = []
+    gc.collect()
+    gc.disable()
+    client.send_command = counted_send
+    try:
+        for name in names:
+            current[0] = name
+            built.append(QUERIES[name](spark, sf_dir))
+    finally:
+        client.send_command = send
+        gc.enable()
+    total = sum(calls.values())
+    print(f"text build: {total} py4j calls {calls}")
+    assert total <= _PY4J_TEXT_BUILD_CALLS_COLUMN_TREES // 10, calls

@@ -941,7 +941,7 @@ def test_single_evaluation_binding_in_hof_plans(spark):
         [(1, " ".join(f"w{i}" for i in range(16)))], ["doc_id", "text"]
     )
     plan = (
-        df.select(word_shingles("text").alias("s"))
+        df.select(F.expr(word_shingles("text")).alias("s"))
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     # bound: 1 (maybe 2 with alias rendering); unbound: ~one per of

@@ -120,7 +120,7 @@ def test_docs_ngram_novelty_invariants(spark, sf_dir):
     n_distinct = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("text").isNotNull())
-        .select(F.explode(word_shingles("text", 3)).alias("g"))
+        .select(F.explode(F.expr(word_shingles("text", 3))).alias("g"))
         .select("g")
         .distinct()
         .count()

@@ -118,14 +118,14 @@ def test_cross_split_leakage_pairs_straddle_the_split(spark, sf_dir):
     buckets = {
         r["doc_id"]: r["b"]
         for r in docs.select(
-            "doc_id", hash_bucket("doc_id", buckets=5, salt="split").alias("b")
+            "doc_id", F.expr(hash_bucket("doc_id", buckets=5, salt="split")).alias("b")
         ).collect()
     }
     out = QUERIES["dedup_cross_split_leakage"](spark, sf_dir).collect()
     assert len(out) > 0, "fixture corpus must contain straddling near-dups"
     bucket0 = F.col("__b") == 0
     tagged = docs.withColumn(
-        "__b", hash_bucket("doc_id", buckets=5, salt="split")
+        "__b", F.expr(hash_bucket("doc_id", buckets=5, salt="split"))
     )
     pairs = minhash_md5_incremental_pairs(
         tagged.filter(bucket0).drop("__b"),

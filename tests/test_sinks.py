@@ -158,7 +158,7 @@ def test_bucketed_fingerprint_index_probe_no_index_exchange(spark, tmp_path):
             "text"
         ),
     )
-    idx = corpus.select(fingerprint("text").alias("fp")).distinct()
+    idx = corpus.select(F.expr(fingerprint("text")).alias("fp")).distinct()
     sink_table_bucketed(idx, "fp_index", ["fp"], n_buckets=8)
     seen = spark.table("fp_index")
 

@@ -720,7 +720,7 @@ def test_dedup_stream_index_first_wins_across_batches(spark, tmp_path):
         (5, "yet another text"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"]).select(
-        "doc_id", fingerprint("text").alias("fp")
+        "doc_id", F.expr(fingerprint("text")).alias("fp")
     )
     inbox = str(tmp_path / "in")
     docs.repartition(4).write.mode("overwrite").parquet(inbox)

@@ -114,7 +114,7 @@ def main() -> None:
         ),
     )
     grams = docs.select(
-        "doc_id", F.explode(word_shingles("text", 5)).alias("gram")
+        "doc_id", F.explode(F.expr(word_shingles("text", 5))).alias("gram")
     )
 
     # static skew census: the layout the window exchange would create
