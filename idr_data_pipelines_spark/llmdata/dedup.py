@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from idr_data_pipelines_spark.functions import sql_literal, sql_name
+from idr_data_pipelines_spark.sources.parquet import spread_small_scan
 
 # ------------------------------------------------- materialize handles
 #
@@ -463,28 +464,17 @@ def _signatures(
                 )
             yield pd.DataFrame({"id": pdf["id"], "signature": out})
 
-    # A tiny/compacted input (e.g. one parquet file) would serialize
-    # the numpy stage onto one core; rebalance only when input
-    # parallelism is far below the cluster's — at real scale inputs
-    # already have many partitions and this is a no-op (no shuffle).
-    # Probe only exchange-free plans: .rdd on a frame with exchanges
-    # executes its upstream stages under AQE at construction time.
-    #
-    # Spread the RAW rows, then project (r14 s6): repartitioning the
-    # projected frame keeps the JVM shingle/tokenize projection
-    # upstream of the exchange — Catalyst does not push computed
-    # projections through a repartition — so the operator's dominant
-    # per-row cost ran on the scan's 1–2 tasks and the exchange moved
-    # already-computed shingle arrays (job trace: 1.7 s serial stage;
-    # interleaved A/B of the reorder: signature chain med 1.047 →
-    # 0.807 s). Values are per-row and partitioning-independent.
-    base = df
-    n_scan = _scan_partitions_or_none(df)
-    if n_scan is not None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if n_scan < max(2, target // 2):
-            base = df.repartition(target)
-    shingled = base.select(
+    # A narrow input (one parquet file, a small shuffle AQE coalesced)
+    # would serialize the numpy stage onto 1–2 cores: spread it to the
+    # cluster's width, a no-op at real scale. Spread the RAW rows, then
+    # project (r14 s6): repartitioning the projected frame keeps the
+    # JVM shingle/tokenize projection upstream of the exchange —
+    # Catalyst does not push computed projections through a
+    # repartition — so the operator's dominant per-row cost ran on the
+    # scan's 1–2 tasks (job trace: 1.7 s serial stage; interleaved A/B
+    # of the reorder: signature chain med 1.047 → 0.807 s). Values are
+    # per-row and partitioning-independent.
+    shingled = spread_small_scan(df).select(
         F.col(id_col).alias("id"),
         F.expr(fam.shingles(text_col, shingle_k)).alias("__sh"),
     )
@@ -559,19 +549,6 @@ def _bucket_pairs(
     )
 
 
-def _scan_partitions_or_none(df: DataFrame) -> int | None:
-    """Input-split count of an EXCHANGE-FREE frame, else None — the
-    shared AQE-safe probe (see ``sources.parquet``: the analyzed-plan
-    check runs before any ``.rdd`` access, because under AQE that
-    executes every upstream stage of an exchange-bearing frame at
-    plan-construction time)."""
-    from idr_data_pipelines_spark.sources.parquet import (
-        scan_partitions_or_none,
-    )
-
-    return scan_partitions_or_none(df)
-
-
 def _candidate_ids(
     pairs: DataFrame, id_col: str, cols: tuple[str, str] = ("id_a", "id_b")
 ) -> DataFrame:
@@ -595,26 +572,12 @@ def _candidate_docs(df: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:
     hashing shingles for EVERY corpus row, which is what verifying
     against an unrestricted shingle table does.
 
-    The rebalance decision never touches ``.rdd`` of a frame with
-    exchanges: under AQE that finalizes the adaptive plan and
-    EXECUTES every upstream query stage at DataFrame-construction
-    time (measured: 7 jobs launched while merely building the lazy
-    verify plan). Only an exchange-free input (plain scan / filter /
-    project) can be under-partitioned in the first place — anything
-    downstream of a shuffle arrives shuffle.partitions-wide — so the
-    probe runs exactly when it is plan-only."""
-    cand = df.join(ids, id_col, "semi")
-    # the caller computes expensive per-doc arrays on this frame; a
-    # single-file input would leave that on ONE task (broadcast semi
-    # joins preserve input partitioning) — rebalance as the signature
-    # paths do. No-op at real scale; for sparse candidate sets the
-    # exchange is candidate-sized.
-    n_scan = _scan_partitions_or_none(df)
-    if n_scan is not None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if n_scan < max(2, target // 2):
-            cand = cand.repartition(target)
-    return cand
+    The caller computes expensive per-doc arrays on this frame, and a
+    broadcast semi-join keeps its input's width, so a narrow input
+    would leave that work on 1–2 tasks: it is spread as the signature
+    paths are (``spread_small_scan``; no-op at real scale, and for
+    sparse candidate sets the exchange is candidate-sized)."""
+    return spread_small_scan(df.join(ids, id_col, "semi"))
 
 
 def _rows_per_band(num_perm: int, bands: int) -> int:
@@ -731,19 +694,20 @@ def _verify(
     negligible, and long-array set ops are far cheaper than string
     ones), computed for candidate docs only. Returns ``(result,
     held)``: result = (a, b, ``fam.jaccard_col``) rows at or above
-    ``threshold``; held = the persisted frames the caller releases.
+    ``threshold``; held = the lazy checkpoints the caller releases
+    (``_finish``).
 
     ``docs`` holds both pair sides unless ``docs_b`` (the ``b`` side)
-    is given. One doc frame → ONE candidate shingle table, persisted
-    because it is joined twice. Two frames → each side scoped to its
-    own pair column, nothing persisted — on the corpus side
+    is given. One doc frame → ONE candidate shingle table, a lazy
+    checkpoint because it is joined twice. Two frames → each side
+    scoped to its own pair column, nothing held — on the corpus side
     especially, the index is huge and collisions are batch-bounded."""
     a, b = cols
     if docs_b is None:
         sh_a = sh_b = _shingle_table(
             fam, docs, _candidate_ids(pairs, id_col, cols),
             id_col, text_col, shingle_k,
-        ).persist()
+        ).localCheckpoint(eager=False)
         held = [sh_a]
     else:
         sh_a, sh_b = (
@@ -769,14 +733,25 @@ def _verify(
 
 def _finish(result: DataFrame, held: list[DataFrame]) -> DataFrame:
     """Compute ``result`` once via ``localCheckpoint(eager=True)`` and
-    release the ``held`` persist marks — the eviction policy of every
+    release the ``held`` intermediates — the eviction policy of every
     eager pair operator, so the caller gets a frame that pins nothing
-    but its own checkpoint."""
+    but its own checkpoint.
+
+    Each held frame is an intermediate the result reads more than
+    once, marked ``localCheckpoint(eager=False)``: marking it runs its
+    upstream shuffle stages, and its last stage runs once, inside the
+    first job that reads it, at the width AQE coalesced it to. A
+    ``persist()`` mark instead keeps its shuffle's conf width (Spark
+    does not let AQE change a cached plan's partitioning): at 200
+    shuffle partitions the registry ``dedup_minhash_lsh`` build ran
+    ~2,000 tasks where it runs 55 at 4. A local checkpoint is not in
+    the cache manager, so ``unpersist()`` on the frame would not free
+    it: the marked RDD is released directly."""
     try:
         return result.localCheckpoint(eager=True)
     finally:
         for f in held:
-            f.unpersist()
+            f._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _lsh_pairs(
@@ -799,10 +774,10 @@ def _lsh_pairs(
         result = pairs.withColumn(fam.jaccard_col, F.lit(None).cast("double"))
         return _finish(result, [])
     # pairs feeds both the candidate-id semi-join and the verify join:
-    # persist (lazy — computed once inside the final materializing job,
-    # no extra blocking job; an eager checkpoint here measured +0.4 s
-    # of fixed latency at sf0.1) so the signature pipeline runs once.
-    pairs = pairs.persist()
+    # a lazy checkpoint (``_finish``) so the signature pipeline runs
+    # once; an eager one here measured +0.4 s of fixed latency at
+    # sf0.1.
+    pairs = pairs.localCheckpoint(eager=False)
     result, held = _verify(
         fam, pairs, df, id_col, text_col, shingle_k, jaccard_threshold
     )
@@ -893,7 +868,7 @@ def minhash_md5_incremental_pairs(
         )
         for side in (batch, corpus)
     )
-    pairs = _band_join(b_band, c_band).persist()
+    pairs = _band_join(b_band, c_band).localCheckpoint(eager=False)
     result, held = _verify(
         _MD5, pairs, batch, id_col, text_col, shingle_k, jaccard_threshold,
         cols=("id_new", "id_old"), docs_b=corpus,
@@ -963,7 +938,7 @@ def minhash_md5_split_probe(
 
     - the band table is built ONCE and sliced by the predicate. The
       two slices are different filters over it, so without the lazy
-      ``persist`` mark each join side would re-run the signature
+      checkpoint each join side would re-run the signature
       kernel (at cluster scale this is exactly the write-once band
       INDEX the incremental docstring prescribes; bands are metadata
       — id + band key — never text).
@@ -975,10 +950,10 @@ def minhash_md5_split_probe(
         _signatures(_MD5, df, id_col, text_col, num_perm, shingle_k),
         num_perm,
         bands,
-    ).persist()
+    ).localCheckpoint(eager=False)
     pairs = _band_join(
         all_bands.filter(batch_pred), all_bands.filter(f"NOT ({batch_pred})")
-    ).persist()
+    ).localCheckpoint(eager=False)
     result, held = _verify(
         _MD5, pairs, df, id_col, text_col, shingle_k, jaccard_threshold,
         cols=("id_new", "id_old"),
@@ -1009,21 +984,21 @@ def minhash_md5_estimate_pairs(
     estimator on the pairs the pipeline actually sees. Fully
     engine-portable (md5-32 family).
 
-    One signature pass: the sigs frame is persisted and feeds both
+    One signature pass: the sigs frame is a lazy checkpoint feeding both
     the banding and the two est-side joins (r07 ADVICE); shingle sets
     are computed for candidate docs only."""
-    _rows_per_band(num_perm, bands)  # validate before persisting
+    _rows_per_band(num_perm, bands)  # validate before checkpointing
     sigs = _signatures(
         _MD5, df, id_col, text_col, num_perm, shingle_k
-    ).persist()
+    ).localCheckpoint(eager=False)
     pairs = _bucket_pairs(
         _bands(_MD5, sigs, num_perm, bands), ["band_idx", "band_key"]
-    ).persist()
+    ).localCheckpoint(eager=False)
     cand_ids = _candidate_ids(pairs, "id")
     sh = _shingle_table(
         _MD5, df, cand_ids.withColumnRenamed("id", id_col),
         id_col, text_col, shingle_k,
-    ).persist()
+    ).localCheckpoint(eager=False)
     sig_cand = sigs.join(cand_ids, "id", "semi")
     est = F.size(
         F.filter(
@@ -1149,23 +1124,11 @@ def _simhash(
                 {"id": pdf["id"], fam.out_col: pd.array(full, dtype="Int64")}
             )
 
-    # AQE-safe probe (r09 review: this site still used the raw
-    # `.rdd.getNumPartitions()`, which finalizes the adaptive plan and
-    # EXECUTES upstream stages at plan-construction time — the exact
-    # pathology _candidate_docs documents — and has no Spark Connect
-    # surface). The shared probe only answers for exchange-free scans;
-    # an exchange-bearing input is already parallel enough.
-    #
-    # Spread the RAW rows, then project (r14 s6, as in
-    # minhash_signatures): repartitioning the projected frame left the
-    # tokenize+hash projection upstream of the exchange, on the scan's
-    # 1–2 tasks. Values are per-row and partitioning-independent.
-    n_scan = _scan_partitions_or_none(df)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    base = df
-    if n_scan is not None and n_scan < max(2, target // 2):
-        base = df.repartition(target)
-    prepped = base.select(
+    # Spread the RAW rows, then project (r14 s6, as in _signatures):
+    # repartitioning the projected frame left the tokenize+hash
+    # projection upstream of the exchange, on the scan's 1–2 tasks.
+    # Values are per-row and partitioning-independent.
+    prepped = spread_small_scan(df).select(
         F.col(id_col).alias("id"),
         F.expr(_token_hashes_sql(text_col, fam.token_hash)).alias("__th"),
     )
@@ -1926,13 +1889,9 @@ def remove_duplicate_spans(
     # A single-file input would run the tokenize+md5-gram projection
     # — the operator's dominant per-row cost — on ONE task (r14 stage
     # profile: 1.3 s serial at sf0.1, plus a second task blocked on
-    # the same persisted block); rebalance exactly as the signature
-    # paths do. No-op at real scale, value-neutral.
-    n_scan = _scan_partitions_or_none(df)
-    if n_scan is not None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if n_scan < max(2, target // 2):
-            df = df.repartition(target)
+    # the same persisted block); spread it as the signature paths do.
+    # No-op at real scale, value-neutral.
+    df = spread_small_scan(df)
     # NULL text rides through untouched: its token array is NULL, the
     # gram CASE propagates it, posexplode drops the row from the
     # gram machinery, and the final projection yields NULL outputs.

@@ -9,7 +9,6 @@ from idr_data_pipelines_spark.plans.lint import (
     estimate_size_bytes,
     key_count_profile,
     lint_plan,
-    recommend_shuffle_partitions,
     skewed_keys,
 )
 
@@ -25,6 +24,5 @@ __all__ = [
     "estimate_size_bytes",
     "key_count_profile",
     "lint_plan",
-    "recommend_shuffle_partitions",
     "skewed_keys",
 ]

@@ -437,28 +437,6 @@ def estimate_size_bytes(df: DataFrame) -> int:
     return int(float(m.group(1)) * _SIZE_UNITS[m.group(2)])
 
 
-def recommend_shuffle_partitions(
-    df: DataFrame,
-    target_partition_mb: int = 200,
-    min_partitions: int = 1,
-    max_partitions: int = 100_000,
-) -> int:
-    """Recommend ``spark.sql.shuffle.partitions`` for plans over
-    ``df``: estimated plan size / target partition size, clamped.
-
-    The 100 TB knob that decides between two failure modes: too few
-    partitions → executors spill (or OOM) on oversized shuffle blocks;
-    too many → scheduler overhead and small-file outputs. ~100-200 MB
-    per partition is the standard target; with AQE coalescing enabled
-    it is safe to err high (AQE merges small post-shuffle partitions,
-    it cannot split oversized ones without the skew path).
-    """
-    est = estimate_size_bytes(df)
-    target = target_partition_mb * 1024 * 1024
-    want = -(-est // target)  # ceiling division
-    return max(min_partitions, min(int(want), max_partitions))
-
-
 def key_count_profile(df: DataFrame, key_col: str) -> DataFrame:
     """Per-key group sizes joined with the 1-row corpus totals — the
     shared base frame of every "should I salt this key?" probe

@@ -85,6 +85,7 @@ from idr_data_pipelines_spark.sources import (
     read_json_dir,
     read_parquet_all_string,
     read_parquet_dir,
+    spread_small_scan,
 )
 from idr_data_pipelines_spark.streaming.events import (
     sessionize,
@@ -3924,7 +3925,7 @@ def q_pack_sequences(spark, sf_dir):
 
 def q_text_quality(spark, sf_dir):
     """Quality signals: chars, tokens, alpha ratio, stopword ratio."""
-    df = _t(spark, sf_dir, "documents")
+    df = spread_small_scan(_t(spark, sf_dir, "documents"))
     feats = quality_score("text")
     return df.selectExpr(
         "doc_id",
@@ -4195,10 +4196,8 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     q_dedup_minhash_lsh_invariants (r11), and bench's frozen headline
     times THIS full-row form. The same pipeline with the portable
     md5-32 hash IS value-hash oracled — see dedup_minhash_md5."""
-    # NOTE: deliberately NOT spread_small_scan'd — the signature stage
-    # is one numpy matmul per Arrow batch, so at bench scale one big
-    # batch beats 32 tiny ones (measured 1.4s vs 2.8s); spreading is
-    # for interpreted JVM expression chains, not vectorized Python
+    # not spread here: the operator spreads a narrow input itself
+    # (``spread_small_scan`` in its signature and verify stages)
     df = _t(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         df, num_perm=64, bands=16, shingle_k=3, jaccard_threshold=0.5

@@ -11,10 +11,11 @@ runs on ``local[N]`` for tests and on a large cluster unchanged:
 - Arrow enabled for the few Pandas-UDF paths (llmdata.multimodal).
 - ``spark.sql.shuffle.partitions`` defaults to a small number locally;
   on a real cluster pass e.g. ``shuffle_partitions=2 * total_cores``.
-  Do not rely on AQE coalescing from a higher initial value: it does
-  not reach ``persist()``ed frames, which keep the conf-wide width
-  (Spark ships ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-  as ``false``), and the dedup operators persist their intermediates.
+  AQE coalescing does not reach ``persist()``ed frames, which keep the
+  conf-wide width (Spark ships
+  ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` as
+  ``false``); the MinHash pair operators hold their reused
+  intermediates as lazy local checkpoints, which it does reach.
 """
 
 from __future__ import annotations

@@ -20,8 +20,12 @@ dedup is a hash aggregate. Nothing touches the driver.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from idr_data_pipelines_spark.plans.lint import estimate_size_bytes
 
 
 def read_parquet_dir(
@@ -90,12 +94,13 @@ def read_parquet_evolved(spark, path: str):
 
 
 # Logical nodes that plan a shuffle exchange (or force a singleton
-# stage). A frame containing any of these is already
-# shuffle.partitions-wide — AND probing its `.rdd` under AQE finalizes
-# the adaptive plan, EXECUTING every upstream stage at what callers
-# believe is plan-construction time. Map-only nodes (Project, Filter,
-# Generate/explode, MapInPandas) are deliberately absent: they create
-# no query stages, so probing them is plan-only.
+# stage). Probing the `.rdd` of a frame containing any of these under
+# AQE finalizes the adaptive plan, EXECUTING every upstream stage at
+# what callers believe is plan-construction time, so such a frame's
+# width is read from plan statistics instead (``planned_partitions``).
+# Map-only nodes (Project, Filter, Generate/explode, MapInPandas) are
+# deliberately absent: they create no query stages, so probing them is
+# plan-only.
 _EXCHANGE_NODES = frozenset(
     {
         # "Repartition" is handled specially below: the node prints
@@ -128,7 +133,7 @@ _EXCHANGE_NODES = frozenset(
     }
 )
 
-_NODE_RE = None
+_NODE_RE = re.compile(r"^[\s:+*-]*'?([A-Za-z]+)")
 
 
 def _plan_text(df: DataFrame) -> str | None:
@@ -158,14 +163,11 @@ def _plan_text(df: DataFrame) -> str | None:
 
 
 def _plan_text_has_exchange(plan: str) -> bool:
-    """Exchange detection over plan TEXT (see ``_plan_has_exchange``
-    for the matching rules) — split out so Connect-shaped callers can
-    feed the captured-explain fallback from ``_plan_text``."""
-    global _NODE_RE
-    import re
-
-    if _NODE_RE is None:
-        _NODE_RE = re.compile(r"^[\s:+*-]*'?([A-Za-z]+)")
+    """True iff the plan TEXT (``_plan_text`` — never executed)
+    contains an exchange-inducing node. Node names are matched as the
+    leading identifier token of each tree line (after the ``+-``/``:-``
+    scaffolding), NOT by raw substring: a column aliased ``SortKey``
+    prints inside a Project line and must not match."""
     for line in plan.splitlines():
         m = _NODE_RE.match(line)
         if not m:
@@ -182,36 +184,64 @@ def _plan_text_has_exchange(plan: str) -> bool:
     return False
 
 
-def _plan_has_exchange(df: DataFrame) -> bool:
-    """True iff the logical plan (a string — never executed) contains
-    an exchange-inducing node. Node names are matched as the leading
-    identifier token of each tree line (after the ``+-``/``:-``
-    scaffolding), NOT by raw substring: a column aliased ``SortKey``
-    prints inside a Project line and must not match. Raises when no
-    plan text is obtainable (callers catch and go conservative)."""
+# the root line of an explicit repartition(n) / repartition(n, cols):
+# a width the user set, which AQE keeps
+_REPARTITION_ROOT = re.compile(
+    r"(?:Repartition (\d+), true|RepartitionByExpression \[.*\], (\d+))$"
+)
+
+
+def _byte_string(text: str) -> int:
+    """Bytes of a Spark byte-size conf value (``67108864b``, ``64MB``,
+    ``64m``): binary multiples, as Spark reads them."""
+    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)i?b?", text.strip().lower())
+    if not m:
+        raise ValueError(f"not a byte size: {text!r}")
+    return int(m.group(1)) * 1024 ** " kmgtp".index(m.group(2) or " ")
+
+
+def planned_partitions(df: DataFrame) -> int | None:
+    """Tasks a stage over ``df`` is expected to run, read from the plan
+    without running a job; None when there is no plan or RDD surface to
+    read it from.
+
+    - An exchange-free plan (scan, filter, project, coalesce): its
+      input-split count, ``.rdd.getNumPartitions()``, plan-only there.
+    - An explicit ``repartition(n)`` at the root: n.
+    - Any other exchange-bearing plan: its planning-time size estimate
+      (``plans.lint.estimate_size_bytes``) over AQE's advisory partition
+      size, capped at ``spark.sql.shuffle.partitions``. AQE coalesces a
+      small shuffle to about that many partitions, so a union or a
+      broadcast join over a small corpus arrives 1–2 partitions wide,
+      not conf-wide. Without AQE coalescing, or without an estimate, it
+      is the conf width. The frame's ``.rdd`` is never touched."""
     text = _plan_text(df)
     if text is None:
-        raise RuntimeError("no plan text surface")
-    return _plan_text_has_exchange(text)
-
-
-def scan_partitions_or_none(df: DataFrame) -> int | None:
-    """Input-split count of an EXCHANGE-FREE frame, else None.
-
-    The single shared probe behind every rebalance heuristic in the
-    repo (``spread_small_scan``, the llmdata signature/candidate
-    paths): inspect the analyzed plan first (string-only), and call
-    ``.rdd.getNumPartitions()`` — plan-only for scan/filter/project
-    chains — exactly when no exchange-inducing node is present.
-    Returns None for exchange-bearing frames (already
-    shuffle.partitions-wide; no rebalance needed) and on Spark
-    Connect (no RDD surface)."""
-    try:
-        if _plan_has_exchange(df):
-            return None
-        return df.rdd.getNumPartitions()
-    except Exception:
         return None
+    if not _plan_text_has_exchange(text):
+        try:
+            return df.rdd.getNumPartitions()
+        except Exception:  # Spark Connect: no RDD surface
+            return None
+    root = next(
+        line for line in text.splitlines() if line and not line.startswith("==")
+    )
+    m = _REPARTITION_ROOT.match(root)
+    if m:
+        return int(m.group(1) or m.group(2))
+    conf = df.sparkSession.conf
+    width = int(conf.get("spark.sql.shuffle.partitions"))
+    aqe = ("spark.sql.adaptive.enabled", "spark.sql.adaptive.coalescePartitions.enabled")
+    if any(conf.get(k).lower() != "true" for k in aqe):
+        return width
+    try:
+        size = estimate_size_bytes(df)
+    except Exception:
+        return width
+    advisory = _byte_string(
+        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return max(1, min(width, -(-size // advisory)))
 
 
 def spread_small_scan(
@@ -219,16 +249,20 @@ def spread_small_scan(
     min_partitions: int | None = None,
     pin: bool = False,
 ) -> DataFrame:
-    """Layout guard for compute-heavy map stages: when the scan has
-    fewer splits than executor slots (a single test file; a few giant
-    single-row-group files in production), every per-document regex /
-    HOF projection downstream serializes onto those few tasks. This
-    round-robins the input across ``min_partitions`` (default: the
-    cluster's ``defaultParallelism``) — and is a NO-OP whenever the
-    scan already has that many splits, so on a real multi-file corpus
-    it never fires and never costs a shuffle. The repartition moves
-    the raw rows BEFORE the expensive projections run, so the shuffle
-    is of input bytes, not of computed features.
+    """Layout guard for compute-heavy map stages: when ``df`` is planned
+    narrower than the executor slots (``planned_partitions``: a single
+    test file, a few giant single-row-group files in production, a
+    small shuffle AQE coalesced to 1–2 partitions), every per-document
+    regex / HOF / Arrow stage downstream serializes onto those few
+    tasks. This round-robins the rows across ``min_partitions``
+    (default: the cluster's ``defaultParallelism``; on Spark Connect,
+    which has no ``sparkContext``, ``spark.sql.shuffle.partitions``),
+    and is a NO-OP whenever the frame is already planned that wide, so
+    on a real multi-file corpus it never fires and never costs a
+    shuffle. Apply it to the raw rows BEFORE the expensive projections,
+    so the shuffle moves input bytes, not computed features. Where no
+    width can be read (Spark Connect: no RDD surface) it repartitions:
+    an always-no-op guard would silently lose the protection.
 
     ``pin=True`` additionally ``persist()``-marks the spread frame
     (lazy — materialized inside the first consuming action), for
@@ -244,51 +278,13 @@ def spread_small_scan(
     in the regime where the guard fires at all (never on a real
     multi-file corpus); release it with
     ``llmdata.dedup.unpersist_materialized`` when the caller attaches
-    the handle, or session cache cleanup otherwise.
-
-    On classic PySpark the current split count comes from
-    ``df.rdd.getNumPartitions()`` — plan-only for the scan/filter/
-    project inputs this guard exists for. The probe is SKIPPED (frame
-    returned unchanged) when the plan already contains an
-    exchange-inducing node: under AQE, ``.rdd`` on such a frame
-    finalizes the adaptive plan and EXECUTES every upstream stage at
-    what the caller believes is construction time — and a
-    post-shuffle frame is already shuffle.partitions-wide, so the
-    guard has nothing to fix there anyway. Spark Connect has no RDD
-    surface, so there we conservatively repartition — an always-no-op
-    guard would silently lose the protection."""
+    the handle, or session cache cleanup otherwise."""
     try:
         target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     except Exception:  # Spark Connect: no sparkContext
-        n = min_partitions or int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        # r11 (VERDICT r10 item 7): the guard now WORKS on Connect
-        # instead of blanket-firing — the captured-explain plan text
-        # (server-side, plan-only) distinguishes an exchange-bearing
-        # frame (already shuffle.partitions-wide: repartitioning it
-        # again would ADD a shuffle) from the exchange-free scans the
-        # guard exists for. Only the split-count refinement is lost
-        # (no RDD surface), so an already-wide scan pays one
-        # redundant-but-harmless round-robin.
-        text = _plan_text(df)
-        if text is not None and _plan_text_has_exchange(text):
-            return df
-        return _spread(df, n, pin)
-    try:
-        if _plan_has_exchange(df):
-            return df
-        current = df.rdd.getNumPartitions()
-    except Exception:
-        # no plan/RDD surface despite a sparkContext: conservatively
-        # repartition — an always-no-op guard would silently lose the
-        # protection
-        return _spread(df, target, pin)
-    if current >= target:
+        target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    current = planned_partitions(df)
+    if current is not None and current >= target:
         return df
-    return _spread(df, target, pin)
-
-
-def _spread(df: DataFrame, n: int, pin: bool) -> DataFrame:
-    out = df.repartition(n)
+    out = df.repartition(target)
     return out.persist() if pin else out

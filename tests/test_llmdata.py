@@ -2588,16 +2588,17 @@ def test_spread_small_scan_rescues_coalesced_frame(spark, sf_dir):
     exchange made the guard skip exactly the coalesced-to-1 frames
     it exists to rescue."""
     from idr_data_pipelines_spark.sources.parquet import (
-        scan_partitions_or_none,
+        planned_partitions,
         spread_small_scan,
     )
 
     one = spark.read.parquet(f"{sf_dir}/documents.parquet").coalesce(1)
-    assert scan_partitions_or_none(one) == 1
+    assert planned_partitions(one) == 1
     assert spread_small_scan(one).rdd.getNumPartitions() > 1
-    # a genuinely shuffled frame still skips the probe
+    # an explicit repartition(n) reports n and is not spread again
     wide = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(4)
-    assert scan_partitions_or_none(wide) is None
+    assert planned_partitions(wide) == 4
+    assert spread_small_scan(wide, min_partitions=4) is wide
 
 
 def test_spread_small_scan_works_without_rdd_surface(spark, sf_dir):
@@ -2664,6 +2665,170 @@ def test_spread_small_scan_works_without_rdd_surface(spark, sf_dir):
         "post-shuffle frame must NOT be re-shuffled on Connect"
     )
     assert res is shuffled
+
+
+def _invariants_corpus(docs):
+    """The corpus shape of the registry ``dedup_minhash_lsh`` entry: the
+    non-null docs plus re-keyed copies of every 10th one, offset by a
+    broadcast one-row aggregate — a union over a broadcast cross join,
+    which AQE coalesces to 1–2 partitions on a small input."""
+    base = docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    off = docs.agg((F.max("doc_id") + F.lit(1)).alias("__off"))
+    planted = (
+        base.filter(F.col("doc_id") % 10 == 0)
+        .crossJoin(F.broadcast(off))
+        .withColumn("doc_id", F.col("doc_id") + F.col("__off"))
+        .drop("__off")
+    )
+    return base.unionByName(planted)
+
+
+def test_narrow_corpus_stages_run_full_width(spark, sf_dir, tmp_path):
+    """On a one-row-group documents.parquet of a few thousand docs, the
+    MinHash signature stage over the registry's union + broadcast
+    cross-join corpus and ``text_quality``'s projection run at least
+    ``defaultParallelism`` tasks: the width rule reads an
+    AQE-coalesced exchange-bearing frame as narrow instead of assuming
+    it is ``shuffle.partitions`` wide."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from idr_data_pipelines_spark.queries import QUERIES
+
+    t = pq.read_table(f"{sf_dir}/documents.parquet")
+    step = pc.max(t["doc_id"]).as_py() + 1
+    big = pa.concat_tables(
+        t.set_column(
+            t.schema.get_field_index("doc_id"),
+            "doc_id",
+            pc.add(t["doc_id"], pa.scalar(r * step, t.schema.field("doc_id").type)),
+        )
+        for r in range(6)
+    )
+    pq.write_table(big, tmp_path / "documents.parquet", row_group_size=big.num_rows)
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    assert docs.rdd.getNumPartitions() == 1
+    cores = spark.sparkContext.defaultParallelism
+
+    signatures = minhash_signatures(_invariants_corpus(docs), num_perm=64)
+    assert signatures.rdd.getNumPartitions() >= cores
+    quality = QUERIES["text_quality"](spark, str(tmp_path))
+    assert quality.rdd.getNumPartitions() >= cores
+
+
+def _build_tasks(spark, build):
+    """Completed tasks of the jobs that ``build()`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return sum(
+        st.getStageInfo(s).numCompletedTasks
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    )
+
+
+def _at_width(spark, width, fn):
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        return fn()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_minhash_build_tasks_follow_data_not_conf(spark, sf_dir):
+    """Building the registry ``dedup_minhash_lsh`` at Spark's default of
+    200 shuffle partitions runs at most twice the tasks it runs at 4:
+    its reused intermediates are lazy local checkpoints, which AQE
+    coalesces, not persisted frames, which keep the conf width."""
+    from idr_data_pipelines_spark.queries import QUERIES
+
+    def build():
+        return QUERIES["dedup_minhash_lsh"](spark, sf_dir)
+
+    build()  # resolve the table and warm the plan caches
+    narrow = _at_width(spark, 4, lambda: _build_tasks(spark, build))
+    wide = _at_width(spark, 200, lambda: _build_tasks(spark, build))
+    print(f"dedup_minhash_lsh build tasks: {narrow} at width 4, {wide} at 200")
+    assert 0 < wide <= 2 * narrow, (narrow, wide)
+
+
+_BANDING_CONSUMERS = (
+    "dedup_minhash_lsh",
+    "dedup_minhash_md5",
+    "dedup_minhash_incremental",
+    "dedup_cross_split_leakage",
+    "dedup_minhash_estimate",
+    "dedup_minhash_clusters",
+    "docs_source_overlap",
+    "split_cluster_safe",
+)
+
+
+@pytest.mark.parametrize("name", _BANDING_CONSUMERS)
+def test_banding_consumers_same_rows_at_any_width(name, spark, sf_dir):
+    """The MinHash banding consumers return the same rows at 4, 8 and
+    200 shuffle partitions."""
+    from idr_data_pipelines_spark.queries import QUERIES
+
+    def rows():
+        df = QUERIES[name](spark, sf_dir)
+        cols = sorted(df.columns)
+        return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
+
+    base = _at_width(spark, 4, rows)
+    for width in (8, 200):
+        assert _at_width(spark, width, rows) == base, (name, width)
+
+
+@pytest.mark.parametrize(
+    "op",
+    (
+        "minhash_lsh_pairs",
+        "minhash_md5_lsh_pairs",
+        "minhash_md5_incremental_pairs",
+        "minhash_md5_split_probe",
+        "minhash_md5_estimate_pairs",
+    ),
+)
+def test_pair_operators_release_their_intermediates(op, spark, sf_dir):
+    """After an eager pair operator returns, the session pins nothing
+    new but the result's own checkpoint: every intermediate it read
+    twice was released inside ``_finish``."""
+    import idr_data_pipelines_spark.llmdata.dedup as D
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    calls = {
+        "minhash_lsh_pairs": lambda: D.minhash_lsh_pairs(docs),
+        "minhash_md5_lsh_pairs": lambda: D.minhash_md5_lsh_pairs(docs),
+        "minhash_md5_incremental_pairs": lambda: D.minhash_md5_incremental_pairs(
+            docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+        ),
+        "minhash_md5_split_probe": lambda: D.minhash_md5_split_probe(
+            docs, "id % 2 = 0"
+        ),
+        "minhash_md5_estimate_pairs": lambda: D.minhash_md5_estimate_pairs(docs),
+    }
+
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = pinned()
+    result = calls[op]()
+    own = result._jdf.queryExecution().analyzed().rdd().id()
+    assert pinned() - before == {own}
 
 
 def test_pack_invariant_summary_catches_violations(spark):

@@ -370,13 +370,10 @@ def test_aqe_splits_skewed_join_partitions(spark):
 
 
 def test_size_estimate_and_partition_recommendation(spark, sf_dir):
-    """Catalyst's planning-time size estimate must be positive, shrink
-    under column pruning, and drive a sane clamped shuffle-partition
-    recommendation."""
-    from idr_data_pipelines_spark.plans import (
-        estimate_size_bytes,
-        recommend_shuffle_partitions,
-    )
+    """Catalyst's planning-time size estimate, which the width rule
+    (``sources.parquet.planned_partitions``) reads, must be positive
+    and shrink under column pruning."""
+    from idr_data_pipelines_spark.plans import estimate_size_bytes
     from idr_data_pipelines_spark.queries import _t
 
     li = _t(spark, sf_dir, "lineitem")
@@ -384,26 +381,6 @@ def test_size_estimate_and_partition_recommendation(spark, sf_dir):
     pruned = estimate_size_bytes(li.select("l_orderkey"))
     assert full > 0
     assert pruned < full  # column pruning shrinks the estimate
-
-    n = recommend_shuffle_partitions(li, target_partition_mb=1)
-    assert 1 <= n <= 100_000
-    assert recommend_shuffle_partitions(li, target_partition_mb=10**9) == 1
-    # min clamp exercised for real: huge target still floors at 5
-    assert (
-        recommend_shuffle_partitions(
-            li, target_partition_mb=10**9, min_partitions=5
-        )
-        == 5
-    )
-    # max clamp exercised for real: an 8-byte/row range of 1e9 rows
-    # (~7.5 GiB estimate) wants thousands of 1 MB partitions
-    big = spark.range(10**9)
-    raw = recommend_shuffle_partitions(big, target_partition_mb=1)
-    assert raw > 16
-    assert (
-        recommend_shuffle_partitions(big, target_partition_mb=1, max_partitions=16)
-        == 16
-    )
 
 
 def test_skewed_keys_report(spark):

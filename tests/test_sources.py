@@ -268,7 +268,13 @@ def test_plan_exchange_probe_sees_sql_distinct(spark):
     Aggregate later), so the exchange probe must classify such frames
     as exchange-bearing — probing their .rdd under AQE executes the
     full distinct shuffle at plan-construction time."""
-    from idr_data_pipelines_spark.sources.parquet import _plan_has_exchange
+    from idr_data_pipelines_spark.sources.parquet import (
+        _plan_text,
+        _plan_text_has_exchange,
+    )
+
+    def _plan_has_exchange(df):
+        return _plan_text_has_exchange(_plan_text(df))
 
     spark.range(10).createOrReplaceTempView("__probe_t")
     assert _plan_has_exchange(spark.sql("SELECT DISTINCT id FROM __probe_t"))

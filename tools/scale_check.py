@@ -15,7 +15,9 @@ so per-cluster size — and therefore the pair-scan cost per row — stays
 constant: that is the operator's documented scale knob (the published
 recipe uses ~|corpus|/avg_cluster_size clusters).
 
-Usage: python tools/scale_check.py [/tmp/scale10]
+Usage: python tools/scale_check.py [/tmp/scale10] [shape,shape,...]
+Runs on local[$SPARK_GRAFT_CPUS] (default 32) with as many shuffle
+partitions, as bench.py does.
 """
 
 from __future__ import annotations
@@ -152,9 +154,10 @@ def main() -> None:
     from idr_data_pipelines_spark.llmdata.similarity import semdedup_prune
     from idr_data_pipelines_spark.sources.parquet import spread_small_scan
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
